@@ -29,6 +29,7 @@ from ..functions.text import (
     tokens_expr,
     word_shingles,
 )
+from .dedup import _spread
 
 
 def _hash_bucket(col, buckets: int = 100):
@@ -503,7 +504,7 @@ def doc_rarity(documents: DataFrame) -> DataFrame:
     """
     # two consumers (the df aggregate and the per-doc join) — pin the
     # exploded frame or the tokenize+explode re-runs per consumer
-    occ = _spread_docs(documents).select(
+    occ = _spread(documents).select(
         "doc_id", F.explode(tokens_expr("text")).alias("term")
     ).filter(F.col("term") != "").localCheckpoint(eager=False)
     df_ = (
@@ -556,7 +557,7 @@ def vocab_drift(
     not the corpus.
     """
     toks = (
-        _spread_docs(documents)
+        _spread(documents)
         .filter(F.col("source").isin([source_a, source_b]))
         .select("source", F.explode(tokens_expr("text")).alias("term"))
         .filter(F.col("term") != "")
@@ -599,12 +600,6 @@ def vocab_drift(
     return top.withColumn("drift_rank", F.row_number().over(w))
 
 
-def _spread_docs(documents: DataFrame) -> DataFrame:
-    from .dedup import _spread
-
-    return _spread(documents)
-
-
 def _term_freq(documents: DataFrame) -> DataFrame:
     """ONE (doc_id, term, tf) term-frequency frame — the shared
     corpus-scan input of ``bm25_search`` and (via ``hash_embed``'s
@@ -612,7 +607,7 @@ def _term_freq(documents: DataFrame) -> DataFrame:
     tokens are dropped here so every consumer sees the same term
     universe."""
     occ = (
-        _spread_docs(documents)
+        _spread(documents)
         .select("doc_id", F.explode(tokens_expr("text")).alias("term"))
         .filter(F.col("term") != "")
     )
@@ -672,7 +667,7 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     high-cardinality shuffles carry integer partial aggregates.
     """
     occ = (
-        _spread_docs(documents)
+        _spread(documents)
         .select("doc_id", F.explode(tokens_expr("text")).alias("term"))
         .filter(F.col("term") != "")
     )
@@ -740,7 +735,7 @@ def bigram_logprob(documents: DataFrame) -> DataFrame:
     # the whole normalize+split pipeline re-ran once per bigram
     # position, turning each doc O(T²·regex) (measured 31 s vs 1.5 s
     # at sf0.1).
-    staged = _spread_docs(documents).select(
+    staged = _spread(documents).select(
         "doc_id", tokens_expr("text").alias("_toks")
     )
     occ = (
@@ -1104,7 +1099,7 @@ def _dsir_scored(
     bucket stats in one conditional pass, KB ratio table broadcast
     back. No windows here — selection strategy is the caller's."""
     occ = (
-        _spread_docs(documents)
+        _spread(documents)
         .select(
             "doc_id",
             "source",
@@ -1179,7 +1174,7 @@ def dsir_model(
     still get the smoothed prior, so scoring never misses a lookup.
     """
     occ = (
-        _spread_docs(documents)
+        _spread(documents)
         .select("source", F.explode(tokens_expr("text")).alias("term"))
         .filter(F.col("term") != "")
         .withColumn(
@@ -1674,7 +1669,7 @@ def corpus_report(documents: DataFrame) -> DataFrame:
     # four-scan shape got one task PER operator, concurrently), so
     # spread first. No-op at real scale (thousands of splits).
     d = doc_fingerprint(
-        _spread_docs(documents).select("doc_id", "source", "lang", "text"),
+        _spread(documents).select("doc_id", "source", "lang", "text"),
         _carry=("source", "lang", "text"),
     )
     d = quality_score(d, _carry=("source", "lang", "text", "fingerprint"))
@@ -2115,15 +2110,16 @@ def hybrid_search(
     Lexical = ``bm25_search`` top-``stage_k``; semantic = sparse
     relational cosine over ``hash_embed`` vectors for the SAME query
     docs (the ``doc_similarity_topk`` construction) top-``stage_k``.
-    Fusion is one full-outer join of two (query, ≤stage_k)-row
-    frames — trivially small next to either retrieval — and every
-    contribution is ``1.0/(int + int)`` then rounded, so the fused
-    ranking is engine-exact.
+    Fusion is a union of the two (query, ≤stage_k)-row frames plus
+    one (query, doc) aggregate summing their RRF addends — trivially
+    small next to either retrieval — and every addend is
+    ``1.0/(int + int)`` with the sum rounded, so the fused ranking is
+    engine-exact.
 
     Scale: both stages are verified linear-ish plans; at serving
     scale swap the semantic stage for ``ann_rerank_topk`` over real
-    embeddings — the fusion join is unchanged (rank columns are the
-    whole interface). ``query_ids`` pins a FIXED query batch (the
+    embeddings — the fusion is unchanged (rank columns are the whole
+    interface). ``query_ids`` pins a FIXED query batch (the
     serving shape: constant query load over a growing corpus); the
     default ``every``-sampling grows the query set with the corpus —
     right for self-retrieval smoke, quadratic-by-construction as a
@@ -2487,7 +2483,7 @@ def ngram_novelty(
     # sf0.1). _spread keeps a single-split corpus parallel through
     # the explode.
     grams = (
-        _spread_docs(documents)
+        _spread(documents)
         .select("doc_id", tokens_expr("text").alias("_toks"))
         .select(
             "doc_id",
@@ -2497,7 +2493,7 @@ def ngram_novelty(
         )
     )
     ref_grams = (
-        _spread_docs(reference)
+        _spread(reference)
         .select(tokens_expr("text").alias("_toks"))
         .select(
             F.explode(
@@ -2702,7 +2698,7 @@ def skipgram_pairs(
 
     Output: (center, context, n_pairs, pair_rank).
     """
-    staged = _spread_docs(documents).select(
+    staged = _spread(documents).select(
         tokens_expr("text").alias("_toks")
     )
     n = F.size("_toks")

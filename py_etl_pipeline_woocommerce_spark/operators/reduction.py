@@ -119,23 +119,24 @@ def pca_fit(embeddings: DataFrame, k: int = 8) -> dict:
         for batch in batches:
             arr = batch.column(batch.schema.get_field_index("_e"))
             fl = arr.flatten()
+            # every batch must be a dense rows×dim layout: the reshape
+            # and the flat-index // dim row attribution below rely on
+            # it, and flatten() DROPS a NULL list, so a whole-NULL row
+            # would otherwise vanish from n and the sums without a
+            # word. The driver-side dims probe guarantees the layout
+            # (no NULL/ragged arrays); asserting it here makes a
+            # relaxed upstream guard an honest error instead.
+            if arr.null_count or len(fl) != len(arr) * dim:
+                raise ValueError(
+                    "pca_fit: embedding batch is not a dense "
+                    f"rows×{dim} layout (NULL or ragged arrays "
+                    "slipped past the dims probe) — fix upstream"
+                )
             if fl.null_count:
                 # a NULL ELEMENT would silently bias the fit (the sum
                 # skips the null product but n still counts the row) —
                 # raise loudly naming the offending vec_id, the same
-                # contract the old fused raise_error column enforced.
-                # The flat-index // dim row attribution is only valid
-                # for a dense rows×dim layout; the driver-side dims
-                # probe guarantees it (no NULL/ragged arrays), but
-                # assert the layout here so a relaxed upstream guard
-                # degrades to an honest error instead of naming the
-                # wrong vec_id (r12 advice)
-                if arr.null_count or len(fl) != len(arr) * dim:
-                    raise ValueError(
-                        "pca_fit: embedding batch is not a dense "
-                        f"rows×{dim} layout (NULL or ragged arrays "
-                        "slipped past the dims probe) — fix upstream"
-                    )
+                # contract the old fused raise_error column enforced
                 valid = np.asarray(fl.is_valid())
                 row = int(np.flatnonzero(~valid)[0]) // dim
                 vid = batch.column(

@@ -16,7 +16,7 @@ import shutil
 import time
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.logging import get_logger
@@ -174,7 +174,6 @@ def _upsert_table(
     batch: DataFrame,
     path: str,
     keys: list[str],
-    assume_immutable_partition: bool = False,
     delete_keys: DataFrame | None = None,
 ) -> None:
     """Partition-local delete+insert upsert into a month-partitioned
@@ -187,76 +186,107 @@ def _upsert_table(
     removed still deletes its stale item rows (the items batch itself
     has no row for that order, and its months alone would not even
     touch the right partition). ``batch`` must carry
-    ``PARTITION_COL``. Cost is O(touched
-    partitions + one key-column probe), never O(full-width table):
-    the touched months are a driver-side handful of strings (a drop
-    spans days, not decades), so the existing-side scan is statically
-    partition-PRUNED before the batch anti-join; dynamic partition
-    overwrite then rewrites only those month directories.
+    ``PARTITION_COL``. Cost is O(touched partitions + one key-column
+    probe), never O(full-width table): only the batch's months plus
+    the months already holding its keys are rewritten.
 
     MOVED KEYS: the reference deletes by order_id unconditionally
     (duckdb_client.py:55), so a key whose order_date — and therefore
-    month partition — changed between drops loses its old row. Pruning
-    the existing side to the batch's months alone would leave that
-    stale row alive in the old partition. Before merging, untouched
-    partitions are probed for the batch's keys (a scan of ONLY the key
-    + partition columns, semi-joined against the broadcast batch key
-    set); any month holding a moved key joins the rewrite set, where
-    the upsert's anti-join deletes the stale row. Callers whose
-    partition value derives from an immutable-per-key field can pass
-    ``assume_immutable_partition=True`` to skip the probe entirely.
+    month — changed between drops loses its old row: the key probe
+    adds that month to the rewrite, where the anti-join deletes it.
+
+    EMPTIED MONTHS: a rewritten month left with no rows (a moved key
+    that was its only row, an order whose lines were all removed) is
+    deleted, exactly as the reference's DELETE leaves no row behind.
     """
     from ..functions.fsutil import fs_exists
 
+    key_src = batch if delete_keys is None else delete_keys
+    batch_keys = key_src.select(*keys).distinct()
     # Hadoop-FS probe, never os.path: a driver-local probe reads
-    # "absent" for hdfs://s3a:// warehouses and the no-merge branch
-    # would dynamic-overwrite each touched month with ONLY the batch
-    # rows — silently deleting prior history (the r8 store-probe
-    # lesson, which this call site had missed)
+    # "absent" for hdfs://s3a:// warehouses and the merge would start
+    # from an empty table — silently deleting prior history
     if fs_exists(spark, path):
-        key_src = batch if delete_keys is None else delete_keys
-        months = [
-            r[0] for r in key_src.select(PARTITION_COL).distinct().collect()
-        ]
         table = spark.read.parquet(path)
-        batch_keys = key_src.select(*keys).distinct()
-        if not assume_immutable_partition:
-            moved = (
-                table.filter(~_month_in(months))
-                .select(*keys, PARTITION_COL)
-                .join(F.broadcast(batch_keys), keys, "left_semi")
-                .select(PARTITION_COL)
-                .distinct()
-                .collect()
-            )
-            months += [r[0] for r in moved]
-        existing = table.filter(_month_in(months))
-        # localCheckpoint breaks the file lineage so the dynamic
-        # overwrite below can rewrite the same partitions the merged
-        # plan read; only touched-partition rows materialize.
-        merged = upsert_df(
-            existing, batch, keys, delete_keys=batch_keys
-        ).localCheckpoint(eager=True)
+        months = {
+            r[0] for r in key_src.select(PARTITION_COL).distinct().collect()
+        }
+        months |= set(_months_holding(table, batch_keys, keys, months))
     else:
-        # first creation: an all-empty batch would materialize a
-        # directory with no data files, and the NEXT run's
-        # spark.read.parquet dies on it ("unable to infer schema") —
-        # an AnalysisException incremental_run deliberately never
-        # retries. Nothing to write, nothing to create.
-        if batch.isEmpty():
-            return
-        merged = batch
-    upsert_partitioned_parquet(merged, path, PARTITION_COL)
+        # first creation merges into an empty table, so an all-empty
+        # batch writes nothing (a dataless directory would make the
+        # NEXT run's read fail to infer a schema)
+        table, months = batch.limit(0), set()
+    _rewrite_months(
+        table, path, months,
+        lambda existing: upsert_df(existing, batch, keys, batch_keys),
+    )
 
 
-def _month_in(months: list) -> F.Column:
+def _months_holding(
+    table: DataFrame, key_set: DataFrame, keys: list[str], skip=()
+) -> dict:
+    """month → number of ``table`` rows whose ``keys`` are in
+    ``key_set``, outside the months in ``skip``: a scan of ONLY the
+    key + partition columns, semi-joined against the broadcast (drop-
+    or request-sized) key set, so finding the months to rewrite never
+    reads full-width."""
+    return {
+        r[0]: r[1]
+        for r in table.filter(~_month_in(skip))
+        .select(*keys, PARTITION_COL)
+        .join(F.broadcast(key_set), keys, "left_semi")
+        .groupBy(PARTITION_COL)
+        .count()
+        .collect()
+    }
+
+
+def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
+    """The ONE way a warehouse month is rewritten: ``transform`` maps
+    the table's rows in ``months`` (statically partition-pruned) to
+    their new contents, which are ``localCheckpoint``-ed (breaking the
+    file lineage, so the overwrite can replace the files the plan
+    read) and dynamic-partition-overwritten. Dynamic overwrite only
+    replaces the months present in its output, so a month left with
+    no rows is deleted explicitly; a table left with no month is
+    removed whole, so the next upsert creates it afresh instead of
+    failing to infer a schema from an empty directory."""
+    from ..functions.fsutil import fs_delete, fs_list_names
+
+    spark = table.sparkSession
+    seen = Observation()
+    out = (
+        transform(table.filter(_month_in(months)))
+        # the months present ride on the checkpoint job; one-element
+        # arrays keep the NULL month, which collect_set would drop
+        .observe(seen, F.collect_set(F.array(PARTITION_COL)).alias("m"))
+        .localCheckpoint(eager=True)
+    )
+    present = {m for (m,) in seen.get["m"]}
+    if present:
+        upsert_partitioned_parquet(out, path, PARTITION_COL)
+    for m in set(months) - present:
+        # Hadoop-FS delete on the WAREHOUSE filesystem (a local rmtree
+        # silently no-ops on hdfs/s3a), with the NULL month mapped to
+        # its actual Hive directory name
+        dirname = "__HIVE_DEFAULT_PARTITION__" if m is None else m
+        fs_delete(spark, os.path.join(path, f"{PARTITION_COL}={dirname}"))
+    if not present and not any(
+        n.startswith(f"{PARTITION_COL}=") for n in fs_list_names(spark, path)
+    ):
+        fs_delete(spark, path)
+
+
+def _month_in(months) -> F.Column:
     """NULL-SAFE partition membership: ``isin`` is never true for a
     NULL month (a malformed order date lands in
-    ``__HIVE_DEFAULT_PARTITION__``), so a plain filter would EXCLUDE
-    the existing NULL-month rows from the merge while the dynamic
-    overwrite still replaces that directory — previously loaded
-    NULL-month orders would be silently deleted. Same rule on the
-    moved-keys probe (its negation must still see NULL rows)."""
+    ``__HIVE_DEFAULT_PARTITION__``). A plain filter would EXCLUDE the
+    NULL-month rows from the rewrite while the dynamic overwrite still
+    replaces (or the emptied-month rule deletes) that directory —
+    previously loaded rows silently deleted, missing snapshots never
+    re-enriched, purge-requested rows silently retained. The coalesce
+    keeps the negation (the probe's ``skip``) NULL-safe as well."""
     non_null = [m for m in months if m is not None]
     cond = (
         F.coalesce(F.col(PARTITION_COL).isin(non_null), F.lit(False))
@@ -464,27 +494,20 @@ def re_enrich_run(
     fresh = rest.fetch_products_by_ids(
         spark, transport, id_scope.select("product_id")
     ).select("product_id", F.col("category_snapshot").alias("_fresh"))
-    # NULL-SAFE month scope: plain isin() is never true for the NULL
-    # month, so missing snapshots living in __HIVE_DEFAULT_PARTITION__
-    # would be silently skipped forever while the audit count claimed
-    # the month was rewritten
-    scope = items.filter(_month_in(months))
     take_fresh = (
         F.col("product_id").isNotNull() if force_all else missing
     )
-    updated = (
-        scope.join(F.broadcast(fresh), "product_id", "left")
+    _rewrite_months(
+        items, path, months,
+        lambda scope: scope.join(F.broadcast(fresh), "product_id", "left")
         .withColumn(
             "category_snapshot",
             F.when(take_fresh, F.col("_fresh")).otherwise(
                 F.col("category_snapshot")
             ),
         )
-        .drop("_fresh")
-        .select(*items.columns)
-        .localCheckpoint(eager=True)  # break file lineage pre-overwrite
+        .select(*items.columns),
     )
-    upsert_partitioned_parquet(updated, path, PARTITION_COL)
     log.info(
         "re-enrich: rewrote %d month partition(s), force_all=%s",
         len(months),
@@ -521,59 +544,25 @@ def purge_keys(
     of a GDPR/CCPA deletion request — the reference's delete-by-id
     (duckdb_client.py:55) done partition-prunedly at lake scale.
 
-    Two passes, both bounded: (1) a key+partition-column-only probe
-    scan semi-joined against the broadcast purge set finds the
-    touched months (column pruning keeps the probe narrow; the purge
-    batch is request-sized, always broadcastable); (2) only those
-    month directories are re-read full-width, anti-joined, and
-    dynamic-partition-overwritten. Untouched months are never read
-    full-width and never rewritten (byte-identical — the
-    ``_upsert_table`` guarantee, pytest-asserted).
+    Two passes, both bounded: the key probe finds the touched months
+    and counts the rows to purge; only those months are re-read
+    full-width, anti-joined and rewritten (a fully-purged month is
+    removed). Untouched months are never read full-width and never
+    rewritten (byte-identical, pytest-asserted).
 
     Returns an audit dict: rows purged, partitions rewritten —
     the deletion-log evidence a compliance pipeline must retain.
     """
     table = spark.read.parquet(path)
     purge_set = purge.select(*keys).distinct()
-    touched = [
-        r[0]
-        for r in (
-            table.select(*keys, PARTITION_COL)
-            .join(F.broadcast(purge_set), keys, "left_semi")
-            .select(PARTITION_COL)
-            .distinct()
-            .collect()
-        )
-    ]
+    touched = _months_holding(table, purge_set, keys)
     if not touched:
         return {"rows_purged": 0, "partitions_rewritten": 0}
-    # NULL-SAFE month filter: a purge-requested row whose month is
-    # NULL (the __HIVE_DEFAULT_PARTITION__ directory) must be
-    # rewritten too — plain isin() would silently RETAIN it while the
-    # audit dict reported the partition as handled (a compliance
-    # failure, not just a correctness bug)
-    existing = table.filter(_month_in(touched))
-    kept = existing.join(F.broadcast(purge_set), keys, "left_anti")
-    n_before = existing.count()
-    kept = kept.localCheckpoint(eager=True)
-    n_after = kept.count()
-    # Dynamic overwrite only replaces partitions PRESENT in the
-    # output: a month whose rows are all purged would otherwise
-    # survive untouched. Those directories are removed explicitly.
-    kept_months = {r[0] for r in kept.select(PARTITION_COL).distinct().collect()}
-    emptied = [m for m in touched if m not in kept_months]
-    if kept_months:
-        upsert_partitioned_parquet(kept, path, PARTITION_COL)
-    from ..functions.fsutil import fs_delete
-
-    for m in emptied:
-        # Hadoop-FS delete on the WAREHOUSE filesystem (a local rmtree
-        # silently no-ops on hdfs/s3a and the fully-purged month would
-        # survive), with the NULL month mapped to its actual Hive
-        # directory name
-        dirname = "__HIVE_DEFAULT_PARTITION__" if m is None else m
-        fs_delete(spark, os.path.join(path, f"{PARTITION_COL}={dirname}"))
+    _rewrite_months(
+        table, path, touched,
+        lambda kept: kept.join(F.broadcast(purge_set), keys, "left_anti"),
+    )
     return {
-        "rows_purged": n_before - n_after,
+        "rows_purged": sum(touched.values()),
         "partitions_rewritten": len(touched),
     }

@@ -7,6 +7,7 @@ the reference's incremental_flow semantics end-to-end.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -671,23 +672,50 @@ def test_order_with_all_items_removed_deletes_stale_rows(spark, tmp_path):
     batch carries no row for it (explode of an empty list), so the
     delete set must come from the ORDERS batch — otherwise the old
     item rows survive forever and the item grain silently overstates
-    revenue while the order grain shows the edit."""
-    wh = str(tmp_path / "wh_allgone")
-    state = WatermarkStore(str(tmp_path / "wm_allgone.json"))
-    state.set_since("2023-01-01T00:00:00")
-    run1 = [
-        _order(1, "2024-01-01T10:00:00", 30.0, 3.0, [(11, 2, 10.0), (12, 1, 10.0)]),
-        _order(2, "2024-01-01T11:00:00", 10.0, 1.0, [(13, 1, 10.0)]),
+    revenue while the order grain shows the edit.
+
+    When order 1 is the only order of its month, the rewrite leaves
+    that month empty and its directory must go (dynamic overwrite
+    never touches a month absent from its output); when it is the
+    only order of the warehouse, the emptied table must still accept
+    the next drop."""
+    order2 = _order(2, "2024-01-01T11:00:00", 10.0, 1.0, [(13, 1, 10.0)])
+    cases = [
+        # (order 1's month, the other orders)
+        ("2024-01", [order2]),
+        ("2024-02", [order2]),
+        ("2024-01", []),
     ]
-    incremental_run(spark, make_fake_transport(run1, PRODUCTS, {}), state, wh)
-    assert spark.read.parquet(f"{wh}/fct_order_items").count() == 3
-    # order 1 re-lands with ZERO line items (all removed)
-    run2 = [_order(1, "2024-01-05T10:00:00", 0.0, 0.0, [])]
-    incremental_run(spark, make_fake_transport(run2, PRODUCTS, {}), state, wh)
-    rows = spark.read.parquet(f"{wh}/fct_order_items").collect()
-    assert [(r["order_id"], r["product_id"]) for r in rows] == [(2, 13)]
-    # the order header itself survives with the edit applied
-    hdr = {
-        r["order_id"] for r in spark.read.parquet(f"{wh}/fct_orders").collect()
-    }
-    assert hdr == {1, 2}
+    for n, (month, others) in enumerate(cases):
+        wh = str(tmp_path / f"wh_allgone{n}")
+        items_dir = f"{wh}/fct_order_items"
+        state = WatermarkStore(str(tmp_path / f"wm_allgone{n}.json"))
+        state.set_since("2023-01-01T00:00:00")
+        lines = [(11, 2, 10.0), (12, 1, 10.0)]
+        run1 = [_order(1, f"{month}-01T10:00:00", 30.0, 3.0, lines), *others]
+        incremental_run(spark, make_fake_transport(run1, PRODUCTS, {}), state, wh)
+        assert spark.read.parquet(items_dir).count() == 2 + len(others)
+        # order 1 re-lands with ZERO line items (all removed)
+        run2 = [_order(1, f"{month}-05T10:00:00", 0.0, 0.0, [])]
+        incremental_run(spark, make_fake_transport(run2, PRODUCTS, {}), state, wh)
+        if others:
+            rows = spark.read.parquet(items_dir).collect()
+            assert [(r["order_id"], r["product_id"]) for r in rows] == [(2, 13)]
+        if month == "2024-02":  # order 1 was February's only order
+            assert not os.path.exists(f"{items_dir}/order_month=2024-02")
+        # the order header itself survives with the edit applied
+        hdr = {
+            r["order_id"]
+            for r in spark.read.parquet(f"{wh}/fct_orders").collect()
+        }
+        assert hdr == {1} | {o["id"] for o in others}
+        if not others:
+            # the emptied table is removed whole; the next drop
+            # recreates it instead of failing to infer a schema
+            assert not os.path.exists(items_dir)
+            run3 = [_order(1, f"{month}-06T10:00:00", 10.0, 1.0, lines[1:])]
+            incremental_run(
+                spark, make_fake_transport(run3, PRODUCTS, {}), state, wh
+            )
+            rows = spark.read.parquet(items_dir).collect()
+            assert [(r["order_id"], r["product_id"]) for r in rows] == [(1, 12)]

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 from hypothesis import given, settings
@@ -145,50 +146,37 @@ def test_upsert_deletes_stale_row_when_key_changes_month(spark, tmp_path):
     """A key whose order_date moves to a different month partition
     between drops must lose its old-month row (the reference deletes
     by order_id unconditionally, duckdb_client.py:55) — the moved-key
-    probe widens the rewrite set to the stale month."""
+    probe widens the rewrite set to the stale month. When the moved
+    key was its old month's only row, the emptied month directory
+    goes too (dynamic overwrite never touches a month absent from its
+    output)."""
     from py_etl_pipeline_woocommerce_spark.plans.woo_flow import _upsert_table
 
-    path = str(tmp_path / "fct")
+    # order 2 shares order 1's old month, then lives in a month of its own
+    for n, order2_date in enumerate(["2024-01-06", "2024-03-06"]):
+        path = str(tmp_path / f"fct{n}")
 
-    def drop(rows):
-        df = spark.createDataFrame(
-            rows, "order_id long, order_date string, status string"
-        ).withColumn("order_month", F.substring("order_date", 1, 7))
-        _upsert_table(spark, df, path, ["order_id"])
+        def drop(rows):
+            df = spark.createDataFrame(
+                rows, "order_id long, order_date string, status string"
+            ).withColumn("order_month", F.substring("order_date", 1, 7))
+            _upsert_table(spark, df, path, ["order_id"])
 
-    drop(
-        [
-            (1, "2024-01-05", "pending"),
-            (2, "2024-01-06", "completed"),
-            (3, "2024-02-01", "completed"),
-        ]
-    )
-    # order 1's date is corrected into February
-    drop([(1, "2024-02-10", "completed")])
+        drop(
+            [
+                (1, "2024-01-05", "pending"),
+                (2, order2_date, "completed"),
+                (3, "2024-02-01", "completed"),
+            ]
+        )
+        # order 1's date is corrected into February
+        drop([(1, "2024-02-10", "completed")])
 
-    out = spark.read.parquet(path)
-    assert out.count() == 3  # no duplicate for key 1
-    r1 = [r for r in out.collect() if r["order_id"] == 1]
-    assert len(r1) == 1
-    assert r1[0]["order_date"] == "2024-02-10"
-    assert str(r1[0]["order_month"]) == "2024-02"
-
-
-def test_upsert_immutable_partition_skips_probe_and_keeps_dup(spark, tmp_path):
-    """assume_immutable_partition=True documents the contract: the
-    probe is skipped, so a moved key WOULD leave its stale row —
-    callers only opt in when the partition field cannot change."""
-    from py_etl_pipeline_woocommerce_spark.plans.woo_flow import _upsert_table
-
-    path = str(tmp_path / "fct")
-
-    def drop(rows, **kw):
-        df = spark.createDataFrame(
-            rows, "order_id long, order_date string, status string"
-        ).withColumn("order_month", F.substring("order_date", 1, 7))
-        _upsert_table(spark, df, path, ["order_id"], **kw)
-
-    drop([(1, "2024-01-05", "pending")])
-    drop([(1, "2024-02-10", "completed")], assume_immutable_partition=True)
-    out = spark.read.parquet(path)
-    assert out.count() == 2  # stale Jan row intentionally untouched
+        out = spark.read.parquet(path)
+        assert out.count() == 3  # no duplicate for key 1
+        r1 = [r for r in out.collect() if r["order_id"] == 1]
+        assert len(r1) == 1
+        assert r1[0]["order_date"] == "2024-02-10"
+        assert str(r1[0]["order_month"]) == "2024-02"
+        jan = os.path.join(path, "order_month=2024-01")
+        assert os.path.exists(jan) == order2_date.startswith("2024-01")
