@@ -4,9 +4,18 @@ flow.py`` incremental_flow + backfill windows).
 
 One run: watermark → paged extract → from_json normalize → category
 enrich (broadcast) → refund apply → delete+insert upsert into a
-parquet warehouse → watermark advance. Everything between extract and
-load is lazy DataFrame lineage — a single job materializes the
-warehouse write.
+month-partitioned parquet warehouse → watermark advance.
+
+Each drop is materialized once, at a size that fits it. Extract and
+transform stay lazy lineage until one job per fact batch rebalances
+it (a drop-sized batch becomes one partition), observes what the rest
+of the run needs on that same job (row count, latest order date, the
+months it touches) and local-checkpoints it. The upserts and the
+watermark then read the checkpoint and the observed values, never
+re-planning the extract. Every month rewrite is materialized the same
+way, rebalanced by month, so a drop-sized month is written as one
+file. A run releases every checkpoint it made, on success and on
+failure alike.
 """
 
 from __future__ import annotations
@@ -175,6 +184,7 @@ def _upsert_table(
     path: str,
     keys: list[str],
     delete_keys: DataFrame | None = None,
+    months: set | None = None,
 ) -> None:
     """Partition-local delete+insert upsert into a month-partitioned
     parquet table (the local-mode stand-in for MERGE INTO an
@@ -198,6 +208,10 @@ def _upsert_table(
     EMPTIED MONTHS: a rewritten month left with no rows (a moved key
     that was its only row, an order whose lines were all removed) is
     deleted, exactly as the reference's DELETE leaves no row behind.
+
+    ``months`` are the months of ``delete_keys`` (else of ``batch``)
+    when the caller already observed them on the batch's checkpoint;
+    left out, they are collected here.
     """
     from ..functions.fsutil import fs_exists
 
@@ -208,10 +222,14 @@ def _upsert_table(
     # from an empty table — silently deleting prior history
     if fs_exists(spark, path):
         table = spark.read.parquet(path)
-        months = {
-            r[0] for r in key_src.select(PARTITION_COL).distinct().collect()
-        }
-        months |= set(_months_holding(table, batch_keys, keys, months))
+        if months is None:
+            months = {
+                r[0]
+                for r in key_src.select(PARTITION_COL).distinct().collect()
+            }
+        months = set(months) | set(
+            _months_holding(table, batch_keys, keys, months)
+        )
     else:
         # first creation merges into an empty table, so an all-empty
         # batch writes nothing (a dataless directory would make the
@@ -245,9 +263,11 @@ def _months_holding(
 def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
     """The ONE way a warehouse month is rewritten: ``transform`` maps
     the table's rows in ``months`` (statically partition-pruned) to
-    their new contents, which are ``localCheckpoint``-ed (breaking the
-    file lineage, so the overwrite can replace the files the plan
-    read) and dynamic-partition-overwritten. Dynamic overwrite only
+    their new contents, which are checkpointed (breaking the file
+    lineage, so the overwrite can replace the files the plan read;
+    rebalanced by month, so a drop-sized month is written as one file
+    while AQE still splits an oversized one at the advisory size),
+    dynamic-partition-overwritten and released. Dynamic overwrite only
     replaces the months present in its output, so a month left with
     no rows is deleted explicitly; a table left with no month is
     removed whole, so the next upsert creates it afresh instead of
@@ -255,17 +275,18 @@ def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
     from ..functions.fsutil import fs_delete, fs_list_names
 
     spark = table.sparkSession
-    seen = Observation()
-    out = (
-        transform(table.filter(_month_in(months)))
-        # the months present ride on the checkpoint job; one-element
-        # arrays keep the NULL month, which collect_set would drop
-        .observe(seen, F.collect_set(F.array(PARTITION_COL)).alias("m"))
-        .localCheckpoint(eager=True)
+    # the months present ride on the checkpoint job
+    out, seen = _checkpoint(
+        transform(table.filter(_month_in(months))),
+        _months_metric(),
+        by=PARTITION_COL,
     )
-    present = {m for (m,) in seen.get["m"]}
-    if present:
-        upsert_partitioned_parquet(out, path, PARTITION_COL)
+    try:
+        present = {m for (m,) in seen["months"]}
+        if present:
+            upsert_partitioned_parquet(out, path, PARTITION_COL)
+    finally:
+        _release(out)
     for m in set(months) - present:
         # Hadoop-FS delete on the WAREHOUSE filesystem (a local rmtree
         # silently no-ops on hdfs/s3a), with the NULL month mapped to
@@ -276,6 +297,34 @@ def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
         n.startswith(f"{PARTITION_COL}=") for n in fs_list_names(spark, path)
     ):
         fs_delete(spark, path)
+
+
+def _checkpoint(
+    df: DataFrame, *metrics: F.Column, by: str | None = None
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` once, right-sized: a REBALANCE (on ``by``
+    when given), which AQE coalesces to one partition for a
+    drop-sized frame and splits at the advisory size for a large one;
+    ``metrics`` observed on that same job; an eager
+    ``localCheckpoint``. Returns the checkpointed frame, which the
+    caller hands to ``_release``, and the observed values."""
+    seen = Observation()
+    hint = ("rebalance", by) if by else ("rebalance",)
+    out = df.hint(*hint).observe(seen, *metrics).localCheckpoint(eager=True)
+    return out, seen.get
+
+
+def _release(df: DataFrame) -> None:
+    """Free a ``_checkpoint``-ed frame's blocks. A local checkpoint is
+    not in the cache manager, so ``unpersist()`` and ``clearCache()``
+    both miss it; the LogicalRDD leaf it returns holds the RDD."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _months_metric() -> F.Column:
+    """The months a frame holds, as one-element arrays: a bare
+    collect_set would drop the NULL month."""
+    return F.collect_set(F.array(PARTITION_COL)).alias("months")
 
 
 def _month_in(months) -> F.Column:
@@ -392,7 +441,7 @@ def _incremental_run_once(
     since = state.get_since()
     log.info("incremental run since=%s", since)
     cleanup: list = []
-    orders = items = None
+    checkpoints: list = []
     try:
         orders, items = build_facts(
             spark,
@@ -402,18 +451,29 @@ def _incremental_run_once(
             persisted_frames=cleanup,
             before_iso=before_iso,
         )
-        orders = _with_month(orders).persist()
+        # one job materializes the orders batch and observes all the
+        # run needs of it: its size, the watermark candidate, its months
+        orders, seen = _checkpoint(
+            _with_month(orders),
+            F.count(F.lit(1)).alias("n"),
+            F.max("order_date").alias("max_date"),
+            _months_metric(),
+        )
+        checkpoints.append(orders)
         # items carry no date — stamp the order's month so both facts
         # share the partition layout (batch-sized broadcast join).
-        items = (
+        items, seen_items = _checkpoint(
             items.join(
                 F.broadcast(orders.select("order_id", PARTITION_COL)),
                 "order_id",
-            )
-            .persist()
+            ),
+            F.count(F.lit(1)).alias("n"),
         )
-        n_orders = orders.count()
-        n_items = items.count()
+        checkpoints.append(items)
+        # both batches now hold everything raw and refunds fed them
+        _unpersist(cleanup)
+        n_orders, n_items = seen["n"], seen_items["n"]
+        months = {m for (m,) in seen["months"]}
         log.info("extracted %d orders / %d items", n_orders, n_items)
         if n_orders:
             _upsert_table(
@@ -421,6 +481,7 @@ def _incremental_run_once(
                 orders,
                 os.path.join(warehouse_dir, "fct_orders"),
                 ["order_id"],
+                months=months,
             )
             # items upsert at ORDER grain (reference parity:
             # duckdb_client.py:55 deletes by order_id unconditionally)
@@ -433,22 +494,27 @@ def _incremental_run_once(
                 os.path.join(warehouse_dir, "fct_order_items"),
                 ["order_id"],
                 delete_keys=orders.select("order_id", PARTITION_COL),
+                months=months,
             )
-            max_date = orders.agg(F.max("order_date")).first()[0]
-            nxt = WatermarkStore.advance_from(max_date, overlap_minutes)
+            nxt = WatermarkStore.advance_from(seen["max_date"], overlap_minutes)
             if nxt:
                 state.set_since(nxt)
                 log.info("watermark advanced to %s", nxt)
         return {"since": since, "orders": n_orders, "items": n_items}
     finally:
-        # unpersist on BOTH exits so a failed attempt doesn't leak
+        # release on BOTH exits so a failed attempt doesn't leak
         # cached partitions into its retry
-        for f in (orders, items, *cleanup):
-            if f is not None:
-                try:
-                    f.unpersist()
-                except Exception:  # pragma: no cover - best effort
-                    pass
+        _unpersist(cleanup)
+        for f in checkpoints:
+            _release(f)
+
+
+def _unpersist(frames: list) -> None:
+    for f in frames:
+        try:
+            f.unpersist()
+        except Exception:  # pragma: no cover - best effort
+            pass
 
 
 def re_enrich_run(

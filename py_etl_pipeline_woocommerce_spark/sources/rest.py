@@ -167,8 +167,11 @@ def fetch_paged(
             f"X-WP-TotalPages reported {total_pages} pages — refusing "
             "to silently drop the remaining pages"
         )
+    # page 1 is at most one page of rows: one partition, not a slice
+    # per core (each slice would be a task, and a file in every write)
+    first_df = spark.createDataFrame(first_rows, RAW_SCHEMA).coalesce(1)
     if total_pages <= 1 or not first:
-        return spark.createDataFrame(first_rows or [], RAW_SCHEMA)
+        return first_df
     last_probe_page = total_pages
 
     def fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -220,7 +223,7 @@ def fetch_paged(
         .repartition(n_tasks)
         .mapInPandas(fetch_batch, schema=RAW_SCHEMA)
     )
-    return spark.createDataFrame(first_rows, RAW_SCHEMA).unionByName(rest)
+    return first_df.unionByName(rest)
 
 
 def fetch_orders_since(

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,6 +120,16 @@ def test_fetch_paged_fans_out_all_pages(spark, transport):
     assert len(rows) == 3  # per_page_cap=2 -> 2 pages
     assert {json.loads(r["raw"])["id"] for r in rows} == {1, 2, 3}
     assert {r["page"] for r in rows} == {1, 2}
+    # page 1 lands as ONE partition beside the fan-out's tasks, not a
+    # slice per core: six orders, two a page -> pages 2..3 over two tasks
+    six = list(ORDERS) + [
+        _order(i, f"2024-01-0{i}T09:00:00", 10.0, 1.0, [(11, 1, 10.0)])
+        for i in (4, 5, 6)
+    ]
+    paged = make_fake_transport(six, PRODUCTS, REFUNDS)
+    raw = rest.fetch_orders_since(spark, paged, "2023-01-01T00:00:00")
+    assert raw.rdd.getNumPartitions() == 1 + 2
+    assert sorted(r["page"] for r in raw.collect()) == [1, 1, 2, 2, 3, 3]
 
 
 def test_orders_and_items_frames(spark, transport):
@@ -284,6 +295,8 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     state = WatermarkStore(str(tmp_path / "state.json"))
     state.set_since("2023-12-31T00:00:00")
     wh = str(tmp_path / "wh")
+    sc = spark.sparkContext
+    pins = sc._jsc.getPersistentRDDs().size()
     incremental_run(spark, transport, state, wh)
 
     fct = f"{wh}/fct_orders"
@@ -291,11 +304,18 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     jan_before = _file_states(f"{fct}/order_month=2024-01")
     feb_before = _file_states(f"{fct}/order_month=2024-02")
 
-    # second drop: one NEW February order only
+    # second drop: one NEW February order only, into a month that
+    # already holds rows; its Spark jobs counted under a job group
     transport.orders.append(
         _order(3, "2024-02-20T09:00:00", 20.0, 2.0, [(12, 1, 20.0)])
     )
-    incremental_run(spark, transport, state, wh)
+    group = f"drop-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second drop")
+    try:
+        incremental_run(spark, transport, state, wh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
 
     # January partition untouched byte-for-byte; February rewritten
     assert _file_states(f"{fct}/order_month=2024-01") == jan_before
@@ -305,6 +325,16 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     assert rows == {1, 2, 3}
     items = spark.read.parquet(f"{wh}/fct_order_items")
     assert {r["order_month"] for r in items.collect()} == {"2024-01", "2024-02"}
+
+    # drop budget: each fact's rewritten month is ONE right-sized file,
+    # both runs released every frame they pinned (a collected
+    # leftover of an earlier test can only lower the count), and the
+    # drop runs at most the jobs the materialize-once flow needs (30
+    # measured)
+    for fact in ("fct_orders", "fct_order_items"):
+        assert len(_file_states(f"{wh}/{fact}/order_month=2024-02")) == 1
+    assert sc._jsc.getPersistentRDDs().size() <= pins
+    assert jobs <= 30, jobs
 
 
 def test_raw_landing_zone_supports_replay_without_refetch(spark, tmp_path):

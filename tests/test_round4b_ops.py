@@ -305,8 +305,11 @@ def test_purge_keys_prunes_partitions_and_drops_emptied(spark, tmp_path):
     }
 
     purge = spark.createDataFrame([(1,), (3,)], "order_id long")
+    pins = spark.sparkContext._jsc.getPersistentRDDs().size()
     audit = purge_keys(spark, path, purge, ["order_id"])
     assert audit == {"rows_purged": 2, "partitions_rewritten": 2}
+    # the rewrite's checkpoint is released, not left pinned
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= pins
 
     left = spark.read.parquet(path)
     assert sorted(r["order_id"] for r in left.collect()) == [2, 4]
