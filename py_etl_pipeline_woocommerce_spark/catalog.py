@@ -5,13 +5,33 @@ file per table under ``/root/testdata/sf{SF}/``. At 100 TB each
 "file" would be a partitioned parquet/iceberg dataset; everything here
 goes through ``spark.read.parquet`` so the path can be a directory of
 thousands of files without code changes.
+
+Schema reuse: a bare ``spark.read.parquet`` runs one Spark job per call
+just to re-read footers, and a dashboard page loads the same six
+tables 17 times. ``load_table`` therefore infers a table's schema once
+per file snapshot and hands it back to the reader
+(``spark.read.schema(cached).parquet(path)``), which skips inference
+and launches no job. The snapshot key is the file signature --
+``(size, mtime_ns, inode)`` of a single file, or the sorted
+``(relpath, size, mtime_ns, inode)`` of every file under a directory
+(partitioned layouts) -- plus the session confs that shape inference
+(``_INFERENCE_CONFS``). Listing and partition discovery still run on
+every call, and every call still gets fresh attribute ids. One entry
+is kept per path; a new key replaces the old one. A path the driver
+cannot ``os.stat`` (a non-``file:`` URI, or a session whose
+``fs.defaultFS`` is not local) is inferred on every call, as before.
+Blind spot: an in-place rewrite that leaves size, nanosecond mtime
+and inode all unchanged reuses the old schema.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -44,6 +64,66 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: path -> (snapshot key, inferred schema); one entry per path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _snapshot_key(spark: SparkSession, path: str) -> tuple | None:
+    """The file snapshot of ``path`` plus the inference confs, or None
+    when the driver cannot stat the path the way Spark reads it."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    if not url.scheme:
+        default_fs = spark.conf.get("fs.defaultFS", None) or (
+            spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        )
+        if default_fs and not default_fs.startswith("file:"):
+            return None
+    local = url.path
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            files = [("", st.st_size, st.st_mtime_ns, st.st_ino)]
+        else:
+            files = []
+            for root, _, names in os.walk(local, followlinks=True):
+                for n in names:
+                    f = os.path.join(root, n)
+                    fs = os.stat(f)
+                    files.append(
+                        (os.path.relpath(f, local), fs.st_size, fs.st_mtime_ns, fs.st_ino)
+                    )
+            files.sort()
+    except OSError:
+        return None
+    confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+    return tuple(files), confs
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the inferred schema while
+    the path's snapshot key is unchanged (module docstring)."""
+    key = _snapshot_key(spark, path)
+    hit = _SCHEMAS.get(path)
+    if key is not None and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table, normalized to the engine's contracts.
 
@@ -72,7 +152,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Session-level runtime conf so externally-built sessions (the
         # driver's) work too.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         ts_type = df.schema["ts"].dataType.typeName()
         if ts_type.startswith("timestamp"):
             from pyspark.sql import functions as F
@@ -82,7 +162,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000),
             )
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -112,10 +192,12 @@ def register_model_views(
 
     Cost note: registration ITSELF performs ~20 base-table loads
     (each mart builder calls load_table, and a parquet load eagerly
-    lists files + reads footers) — a one-time per-session cost that
-    is trivial here but visible on a lake with thousands of files per
-    table; if that ever matters, thread ``load_all``'s dict through
-    the mart builders instead of the (spark, sf_dir) pair.
+    lists files). Footers are read only once per table snapshot (the
+    module docstring's schema reuse), so the repeat loads cost a
+    listing each and no Spark job — trivial here but visible on a lake
+    with thousands of files per table; if that ever matters, thread
+    ``load_all``'s dict through the mart builders instead of the
+    (spark, sf_dir) pair.
     """
     from .plans import analytics, woo_model
 

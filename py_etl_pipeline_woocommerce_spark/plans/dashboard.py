@@ -16,7 +16,10 @@ sidebar initialization.
 Scale note: each frame stays an independent Catalyst plan, so a
 server can materialize them concurrently; the shared (d1, d2)
 bounds push down (and partition-prune on month-partitioned layouts)
-identically in every frame via ``_bound_orders``.
+identically in every frame via ``_bound_orders``. A page makes 17
+``load_table`` calls; once a table has been read, each resolves its
+schema from the catalog's snapshot-keyed cache without a Spark job,
+so building a page with an explicit window launches none.
 """
 
 from __future__ import annotations

@@ -4,6 +4,7 @@ defaults to the reference sidebar's LAST-30-DAYS-of-data window
 
 from __future__ import annotations
 
+import uuid
 from datetime import date, timedelta
 
 from py_etl_pipeline_woocommerce_spark.plans.dashboard import dashboard_payload
@@ -31,9 +32,17 @@ def test_dashboard_payload_respects_window(spark, sf_dir):
     # a narrower window strictly reduces the KPI order count vs the
     # explicit full data range
     bounds = frames["date_bounds"].first()
-    all_k = dashboard_payload(spark, sf_dir, bounds["min_d"], bounds["max_d"])[
-        "kpis"
-    ].first()["orders_cnt"]
+    # after the first page, building a page with an explicit window is
+    # lazy: its 17 table loads reuse the inferred schemas, so no job
+    sc = spark.sparkContext
+    group = f"warm-page-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm dashboard_payload")
+    try:
+        full = dashboard_payload(spark, sf_dir, bounds["min_d"], bounds["max_d"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    all_k = full["kpis"].first()["orders_cnt"]
     win_k = frames["kpis"].first()["orders_cnt"]
     assert 0 < win_k < all_k
 
