@@ -2,20 +2,23 @@
 reference orchestration (``/root/reference/src/etl/orchestration/
 flow.py`` incremental_flow + backfill windows).
 
-One run: watermark → paged extract → from_json normalize → category
-enrich (broadcast) → refund apply → delete+insert upsert into a
+One run: watermark → paged extract (each order with its refunds) →
+from_json normalize with the refunds applied inside the order row →
+category enrich (broadcast) → delete+insert upsert into a
 month-partitioned parquet warehouse → watermark advance.
 
-Each drop is materialized once, at a size that fits it. Extract and
-transform stay lazy lineage until one job per fact batch rebalances
-it (a drop-sized batch becomes one partition), observes what the rest
-of the run needs on that same job (row count, latest order date, the
-months it touches) and local-checkpoints it. The upserts and the
-watermark then read the checkpoint and the observed values, never
-re-planning the extract. Every month rewrite is materialized the same
-way, rebalanced by month, so a drop-sized month is written as one
-file. A run releases every checkpoint it made, on success and on
-failure alike.
+The raw extract is the only cached frame: it lands in bronze and
+feeds both facts, and the refund path needs no shuffle, join, window
+or cache of its own. Each drop is materialized once, at a size that
+fits it. Extract and transform stay lazy lineage until one job per
+fact batch rebalances it (a drop-sized batch becomes one partition),
+observes what the rest of the run needs on that same job (row count,
+latest order date, the months it touches) and local-checkpoints it.
+The upserts and the watermark then read the checkpoint and the
+observed values, never re-planning the extract. Every month rewrite
+is materialized the same way, rebalanced by month, so a drop-sized
+month is written as one file. A run releases every checkpoint it
+made, on success and on failure alike.
 """
 
 from __future__ import annotations
@@ -83,12 +86,16 @@ def build_facts(
     before_iso: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Extract + transform since the watermark → (orders, items) with
-    categories and refunds applied (flow.py t_process_batch).
+    categories and refunds applied (flow.py t_process_batch), both
+    stamped with their order's ``PARTITION_COL``.
 
+    Refunds arrive on each order row from the extract and are applied
+    inside that row (``rest.orders_frame``/``rest.items_frame``).
     When ``warehouse_dir`` is given, the raw order JSON lands in
-    ``stg_orders_raw`` first (cached so the paged API extract runs
-    exactly once for landing + parsing; the cached frame is appended
-    to ``persisted_frames`` for the caller to unpersist)."""
+    ``stg_orders_raw`` first; the raw frame is then the one cached
+    frame (so the paged API extract runs exactly once for landing +
+    parsing) and is appended to ``persisted_frames`` for the caller
+    to unpersist."""
     raw = rest.fetch_orders_since(
         spark, transport, since_iso, before_iso=before_iso
     )
@@ -98,82 +105,31 @@ def build_facts(
             persisted_frames.append(raw)
         stage_raw_orders(raw, warehouse_dir)
     parsed = rest.parse_orders(raw)
-    orders = rest.orders_frame(parsed)
+    orders = _with_month(rest.orders_frame(parsed))
     items = rest.items_frame(parsed)
 
     cats = rest.fetch_products_by_ids(
         spark, transport, items.select("product_id")
     )
-    items = items.join(F.broadcast(cats), "product_id", "left")
-
-    # persist the refunds fan-out: order_ref AND item_ref descend
-    # from it and materialize as separate jobs, so without the
-    # persist every orders/{id}/refunds endpoint is hit TWICE per run
-    # (double API pressure, and a refund landing between the two
-    # fetches would make order- and item-grain totals disagree)
-    refunds = rest.fetch_refunds_for_orders(
-        spark, transport, orders.select("order_id")
-    ).persist()
-    if persisted_frames is not None:
-        persisted_frames.append(refunds)
-    order_ref = rest.order_refund_totals(refunds)
-    item_ref = rest.item_refund_totals(refunds)
-
-    orders = (
-        orders.join(F.broadcast(order_ref), "order_id", "left")
-        .withColumn("refund_total", F.coalesce("refund_total", F.lit(0.0)))
-        .withColumn(
-            "net_after_refunds", F.col("net_total") - F.col("refund_total")
-        )
-    )
-    # refund totals aggregate at (order, product, variation) grain,
-    # but an order can carry the SAME grain on two separate lines —
-    # a plain left join would copy the full refunded amount onto BOTH
-    # rows (double-counted in any item-grain sum, the reference's
-    # pandas merge included). Apply each grain's refund to exactly ONE
-    # deterministic line (lowest line_id), zero on the others.
-    # REFERENCE-PARITY WAIVED (deliberately): for orders carrying the
-    # same (product, variation) grain on two lines, fct_order_items
-    # rows diverge from the reference's output — the reference copies
-    # the full refund onto BOTH lines and over-counts; order-grain
-    # totals agree either way. Any row-for-row parity check or oracle
-    # over fct_order_items must encode THIS single-line policy
-    # (test-pinned in tests/test_woo_flow.py).
-    line_rank = F.row_number().over(
-        Window.partitionBy("order_id", "product_id", "variation_id")
-        .orderBy("line_id")
-    )
-    items = (
-        items.withColumn(
-            "variation_id", F.coalesce("variation_id", F.lit(0))
-        )
-        # product_id too: the refund side coalesces NULL product ids
-        # to 0 (rest.py item_refund_totals), so a custom/fee line with
-        # product_id=NULL would never equi-join its refund and the
-        # item grain would silently show zero refunds while the order
-        # grain shows them
-        .withColumn("product_id", F.coalesce("product_id", F.lit(0)))
-        .join(
-            F.broadcast(item_ref),
-            ["order_id", "product_id", "variation_id"],
-            "left",
-        )
-        .withColumn("_line_rank", line_rank)
-        .withColumn(
-            "refunded_quantity",
-            F.when(F.col("_line_rank") == 1, F.col("refunded_quantity")),
-        )
-        .withColumn(
-            "refunded_total",
-            F.when(F.col("_line_rank") == 1, F.col("refunded_total")),
-        )
-        .withColumn(
-            "refunded_quantity", F.coalesce("refunded_quantity", F.lit(0))
-        )
-        .withColumn(
-            "refunded_total", F.coalesce("refunded_total", F.lit(0.0))
-        )
-        .drop("_line_rank", "line_id")
+    # the category join keys on the raw product id; the fact row then
+    # carries the refund grain's ids, NULL product/variation as 0
+    items = _with_month(
+        items.join(F.broadcast(cats), "product_id", "left")
+    ).select(
+        "order_id",
+        F.coalesce("product_id", F.lit(0)).alias("product_id"),
+        F.coalesce("variation_id", F.lit(0)).alias("variation_id"),
+        "sku",
+        "name",
+        "quantity",
+        "price",
+        "total",
+        "subtotal",
+        "tax_class",
+        "category_snapshot",
+        "refunded_quantity",
+        "refunded_total",
+        PARTITION_COL,
     )
     return orders, items
 
@@ -454,23 +410,15 @@ def _incremental_run_once(
         # one job materializes the orders batch and observes all the
         # run needs of it: its size, the watermark candidate, its months
         orders, seen = _checkpoint(
-            _with_month(orders),
+            orders,
             F.count(F.lit(1)).alias("n"),
             F.max("order_date").alias("max_date"),
             _months_metric(),
         )
         checkpoints.append(orders)
-        # items carry no date — stamp the order's month so both facts
-        # share the partition layout (batch-sized broadcast join).
-        items, seen_items = _checkpoint(
-            items.join(
-                F.broadcast(orders.select("order_id", PARTITION_COL)),
-                "order_id",
-            ),
-            F.count(F.lit(1)).alias("n"),
-        )
+        items, seen_items = _checkpoint(items, F.count(F.lit(1)).alias("n"))
         checkpoints.append(items)
-        # both batches now hold everything raw and refunds fed them
+        # both batches now hold everything the raw extract fed them
         _unpersist(cleanup)
         n_orders, n_items = seen["n"], seen_items["n"]
         months = {m for (m,) in seen["months"]}

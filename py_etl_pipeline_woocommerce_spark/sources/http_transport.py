@@ -8,7 +8,8 @@ lives in ``rest.fetch_paged`` (distributed); this class only does one
 robust HTTP GET per call, plus what a production extract needs that
 the reference omits: bounded exponential backoff with ``Retry-After``
 honoring on 429/5xx, and total-page discovery from the
-``X-WP-TotalPages`` header so page 2..N can fan out to executors.
+``X-WP-TotalPages`` header, which sizes ``fetch_paged``'s one-stage
+fan-out over every page (page 1's probe rides in the task closure).
 
 Pickling: instances ship to executors inside ``mapInPandas`` closures,
 so the ``requests.Session`` (unpicklable, holds sockets) is built

@@ -3,15 +3,23 @@
 Re-expresses the reference extract stack Spark-first:
 
 - ``wc_client.py:36-49`` fetches pages serially on one machine; here
-  page 1 is probed on the driver to learn the page count, then the
-  remaining pages fan out to executors as a ``mapInPandas`` over a
-  page-number DataFrame — N workers ingest N pages concurrently, which
-  is the only way a REST backfill finishes at warehouse scale.
-- ``orders.py:4-18`` (orders since watermark), ``products.py:31-73``
-  (batch by ids + per-id fallback) and ``refunds.py:6-61`` (per-order
-  refunds) become thin wrappers producing DataFrames of raw JSON
-  strings, parsed with ``from_json`` + explicit schemas (never
-  inferSchema — schema drift must fail loudly, not silently retype).
+  page 1 is probed on the driver to learn the page count, then every
+  page fans out to executors in ONE stage: a ``mapInPandas`` over
+  ``spark.range`` in which task ``k`` takes pages ``k+1, k+1+n, …``
+  and page 1's records ride in the closure instead of being fetched
+  twice. N workers ingest N pages concurrently, which is the only way
+  a REST backfill finishes at warehouse scale.
+- ``orders.py:4-18`` (orders since watermark) and
+  ``products.py:31-73`` (batch by ids + per-id fallback) become thin
+  wrappers producing DataFrames of raw JSON strings, parsed with
+  ``from_json`` + explicit schemas (never inferSchema — schema drift
+  must fail loudly, not silently retype).
+- ``refunds.py:6-61`` (per-order refunds, fetched right after the
+  order) stays next to its order: the task that fetched an order page
+  drains each order's refunds and carries them on the order's row as
+  a JSON array, which ``orders_frame``/``items_frame`` apply inside
+  the row — no shuffle, join or window between an order and its
+  refunds.
 
 The HTTP transport is injectable (any picklable
 ``(path, params) -> (json_text, total_pages)`` callable) so the layer
@@ -33,8 +41,8 @@ from .http_transport import WooHttpError
 #: transport(path, params) -> (response_json_text, total_pages).
 #: total_pages mirrors WooCommerce's X-WP-TotalPages header; a
 #: transport that can't know it may return -1 for "unknown" (the
-#: fetch then probes pages until an empty one, still in parallel
-#: waves).
+#: fetch then probes pages until an empty one, each task along its
+#: own stride of pages).
 Transport = Callable[[str, dict], tuple[str, int]]
 
 RAW_SCHEMA = T.StructType(
@@ -105,7 +113,8 @@ PRODUCT_JSON_SCHEMA = T.StructType(
     ]
 )
 
-#: Refund payload — amount + line_items (refunds.py:35-53).
+#: Refund payload — amount + line_items (refunds.py:35-53); an
+#: order's ``refunds`` column is a JSON array of these.
 REFUND_JSON_SCHEMA = T.StructType(
     [
         T.StructField("amount", T.StringType()),
@@ -126,12 +135,51 @@ REFUND_JSON_SCHEMA = T.StructType(
 )
 
 
+def _load(body: str) -> list:
+    """Response body -> the list of records it holds."""
+    data = json.loads(body) if body else []
+    return data if isinstance(data, list) else [data]
+
+
 def _records(body: str) -> list[str]:
     """Response body -> one JSON string per record."""
-    data = json.loads(body) if body else []
-    if not isinstance(data, list):
-        data = [data]
-    return [json.dumps(r) for r in data]
+    return [json.dumps(r) for r in _load(body)]
+
+
+def _order_refunds(transport: Transport, order: dict) -> str:
+    """One order's refunds as a JSON array (refunds.py:24-28).
+
+    Pages EXHAUSTIVELY: a subscription/marketplace order can exceed
+    one page of refunds, and stopping at page 1 silently understates
+    refund_total (the truncation ``fetch_paged`` never allows itself).
+    A missing order (404) has no refunds; any other failure
+    propagates.
+    """
+    oid = order.get("id")
+    if oid is None:
+        return "[]"
+    page, recs = 1, []
+    try:
+        while True:
+            body, total_pages = transport(
+                f"orders/{int(oid)}/refunds", {"per_page": 100, "page": page}
+            )
+            batch = _load(body)
+            recs.extend(batch)
+            done = (
+                page >= total_pages if total_pages >= 0 else len(batch) < 100
+            )
+            if done:
+                break
+            page += 1
+    except WooHttpError as exc:
+        # refunds.py:26-28: a MISSING order -> no refunds. Only 404
+        # qualifies — swallowing auth failures or exhausted retries
+        # here would silently persist refund_total=0 for the batch.
+        if exc.status != 404:
+            raise
+        recs = []
+    return json.dumps(recs)
 
 
 def fetch_paged(
@@ -144,15 +192,33 @@ def fetch_paged(
 ) -> DataFrame:
     """All pages of a paged endpoint as a DataFrame of raw JSON rows.
 
-    Page 1 runs on the driver (one RTT) and yields the page count;
-    pages 2..N fan out to executors. When the transport reports an
-    unknown page count (-1), executors probe optimistic page ranges
-    and stop at the first empty page — the serial loop of
-    ``wc_client.paged`` turned into parallel waves.
+    Page 1 runs on the driver (one RTT) and yields the page count.
+    The fetch is then ONE stage: ``n = min(pages, 2 × cores)`` tasks
+    over ``spark.range``, task ``k`` taking pages ``k+1, k+1+n, …``;
+    page 1's records ride in the closure, so task 0 starts from them
+    instead of fetching the page again. When the transport reports an
+    unknown page count (-1), each task walks its stride until its
+    first empty page — the serial loop of ``wc_client.paged`` turned
+    into ``n`` concurrent ones.
     """
+    return _fetch_pages(
+        spark, transport, path, params, per_page, max_unknown_pages
+    )
+
+
+def _fetch_pages(
+    spark: SparkSession,
+    transport: Transport,
+    path: str,
+    params: dict,
+    per_page: int = 100,
+    max_unknown_pages: int = 10_000,
+    with_refunds: bool = False,
+) -> DataFrame:
+    """``fetch_paged``; ``with_refunds`` adds each record's refunds
+    (``_order_refunds``), fetched by the task that fetched the record."""
     first_body, total_pages = transport(path, {**params, "page": 1, "per_page": per_page})
-    first = _records(first_body)
-    first_rows = [(1, r) for r in first]
+    first = _load(first_body)
     known_total = total_pages >= 0
     if not known_total:
         # Unknown total (no X-WP-TotalPages): a short first page means
@@ -167,63 +233,72 @@ def fetch_paged(
             f"X-WP-TotalPages reported {total_pages} pages — refusing "
             "to silently drop the remaining pages"
         )
-    # page 1 is at most one page of rows: one partition, not a slice
-    # per core (each slice would be a task, and a file in every write)
-    first_df = spark.createDataFrame(first_rows, RAW_SCHEMA).coalesce(1)
-    if total_pages <= 1 or not first:
-        return first_df
-    last_probe_page = total_pages
+    last_page = max(total_pages, 1) if first else 1
+    n_tasks = min(last_page, spark.sparkContext.defaultParallelism * 2)
 
-    def fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pages_out, raw_out = [], []
-            for page in sorted(int(p) for p in pdf["page"]):
-                body, _ = transport(
-                    path, {**params, "page": page, "per_page": per_page}
-                )
-                recs = _records(body)
-                pages_out.extend([page] * len(recs))
-                raw_out.extend(recs)
-                if not recs:
-                    if known_total:
-                        # the server SAID this page exists; an empty
-                        # body is an upstream inconsistency (replica
-                        # lag, WAF) — breaking here would silently
-                        # drop every later page in this partition and
-                        # advance the watermark past the gap. Fail the
-                        # task loudly; retries re-fetch the window.
-                        raise RuntimeError(
-                            f"fetch_paged: page {page} of {path} came "
-                            f"back empty but X-WP-TotalPages reported "
-                            f"{total_pages} pages — refusing to "
-                            "silently drop the remaining pages"
-                        )
-                    break  # past the end (unknown-total probing)
-                if not known_total and page == last_probe_page:
-                    # probe range exhausted with data still flowing:
-                    # pages beyond max_unknown_pages may exist
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        "fetch_paged: unknown-total probe of %s hit the "
-                        "max_unknown_pages=%d ceiling with a non-empty "
-                        "page — data past page %d is NOT extracted",
-                        path,
-                        last_probe_page,
-                        last_probe_page,
+    def stride(k: int) -> Iterator[tuple[int, list]]:
+        """Task ``k``'s pages and their records."""
+        for page in range(k + 1, last_page + 1, n_tasks):
+            if page == 1:
+                yield page, first  # the driver's probe, not refetched
+                continue
+            body, _ = transport(
+                path, {**params, "page": page, "per_page": per_page}
+            )
+            recs = _load(body)
+            if not recs:
+                if known_total:
+                    # the server SAID this page exists; an empty body
+                    # is an upstream inconsistency (replica lag, WAF)
+                    # — skipping it would silently drop its rows and
+                    # advance the watermark past the gap. Fail the
+                    # task loudly; retries re-fetch the window.
+                    raise RuntimeError(
+                        f"fetch_paged: page {page} of {path} came "
+                        f"back empty but X-WP-TotalPages reported "
+                        f"{total_pages} pages — refusing to "
+                        "silently drop the remaining pages"
                     )
-            yield pd.DataFrame({"page": pages_out, "raw": raw_out})
+                return  # past the end (unknown-total probing)
+            if not known_total and page == last_page:
+                # probe range exhausted with data still flowing:
+                # pages beyond max_unknown_pages may exist
+                import logging
 
-    n_tasks = min(
-        total_pages - 1, spark.sparkContext.defaultParallelism * 2
-    ) or 1
-    rest = (
-        spark.range(2, total_pages + 1)
-        .select(F.col("id").cast("int").alias("page"))
-        .repartition(n_tasks)
-        .mapInPandas(fetch_batch, schema=RAW_SCHEMA)
+                logging.getLogger(__name__).warning(
+                    "fetch_paged: unknown-total probe of %s hit the "
+                    "max_unknown_pages=%d ceiling with a non-empty "
+                    "page — data past page %d is NOT extracted",
+                    path,
+                    last_page,
+                    last_page,
+                )
+            yield page, recs
+
+    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (page, r)
+                for k in pdf["id"]
+                for page, recs in stride(int(k))
+                for r in recs
+            ]
+            out = {
+                "page": [page for page, _ in rows],
+                "raw": [json.dumps(r) for _, r in rows],
+            }
+            if with_refunds:
+                out["refunds"] = [_order_refunds(transport, r) for _, r in rows]
+            yield pd.DataFrame(out)
+
+    schema = RAW_SCHEMA
+    if with_refunds:
+        schema = T.StructType(
+            RAW_SCHEMA.fields + [T.StructField("refunds", T.StringType())]
+        )
+    return spark.range(0, n_tasks, numPartitions=n_tasks).mapInPandas(
+        fetch, schema=schema
     )
-    return first_df.unionByName(rest)
 
 
 def fetch_orders_since(
@@ -233,7 +308,10 @@ def fetch_orders_since(
     status: str | None = None,
     before_iso: str | None = None,
 ) -> DataFrame:
-    """Raw orders created after ``since_iso`` (orders.py:4-18);
+    """Raw orders created after ``since_iso`` (orders.py:4-18), each
+    with its refunds: ``(page, raw, refunds)``, where ``refunds`` is
+    the JSON array of the order's refund records, drained by the same
+    ``fetch_paged`` task that fetched the order (refunds.py:24-28).
     ``before_iso`` adds Woo's upper ``before`` bound — what makes a
     windowed backfill actually extract ONE window instead of
     everything after the cursor."""
@@ -242,11 +320,12 @@ def fetch_orders_since(
         params["status"] = status
     if before_iso:
         params["before"] = before_iso
-    return fetch_paged(spark, transport, "orders", params)
+    return _fetch_pages(spark, transport, "orders", params, with_refunds=True)
 
 
 def parse_orders(raw: DataFrame) -> DataFrame:
-    """raw JSON rows -> typed order structs (one row per order).
+    """raw JSON rows -> typed order structs (one row per order), with
+    the ``refunds`` array alongside when ``raw`` carries it.
 
     Malformed JSON FAILS LOUDLY (the module doctrine): the default
     PERMISSIVE mode would turn a corrupt record into an all-NULL
@@ -255,11 +334,13 @@ def parse_orders(raw: DataFrame) -> DataFrame:
     idempotence one corrupt record at a time. FAILFAST raises on the
     record instead.
     """
+    refunds = [c for c in ("refunds",) if c in raw.columns]
     return raw.select(
         F.from_json("raw", ORDER_JSON_SCHEMA, {"mode": "FAILFAST"}).alias(
             "o"
-        )
-    ).select("o.*")
+        ),
+        *[F.from_json(c, T.ArrayType(REFUND_JSON_SCHEMA)).alias(c) for c in refunds],
+    ).select("o.*", *refunds)
 
 
 def _money(col) -> F.Column:
@@ -272,19 +353,38 @@ def _money(col) -> F.Column:
 
 
 def _try_double(col) -> F.Column:
-    return F.expr(f"try_cast({col} AS DOUBLE)")
+    return (F.col(col) if isinstance(col, str) else col).try_cast("double")
+
+
+def _order_date() -> F.Column:
+    created = F.coalesce("date_created_gmt", "date_created")
+    return F.date_format(F.to_timestamp(created), "yyyy-MM-dd HH:mm:ss")
 
 
 def orders_frame(parsed: DataFrame) -> DataFrame:
     """Order-grain frame matching the reference's df_orders columns
-    (normalize_orders.py:25-49)."""
-    created = F.coalesce("date_created_gmt", "date_created")
+    (normalize_orders.py:25-49).
+
+    When ``parsed`` carries the order's ``refunds``, they are applied
+    in the row (refunds.py:30-37): ``refund_total`` sums the refund
+    amounts (NULL or garbage counts 0.0) and ``net_after_refunds`` is
+    ``net_total - refund_total``."""
     total, total_tax = _money("total"), _money("total_tax")
+    refunds = []
+    if "refunds" in parsed.columns:
+        refund_total = F.coalesce(
+            F.aggregate(
+                "refunds", F.lit(0.0), lambda acc, r: acc + _money(r["amount"])
+            ),
+            F.lit(0.0),
+        )
+        refunds = [
+            refund_total.alias("refund_total"),
+            (total - total_tax - refund_total).alias("net_after_refunds"),
+        ]
     return parsed.select(
         F.col("id").alias("order_id"),
-        F.date_format(F.to_timestamp(created), "yyyy-MM-dd HH:mm:ss").alias(
-            "order_date"
-        ),
+        _order_date().alias("order_date"),
         "status",
         "currency",
         "customer_id",
@@ -298,24 +398,47 @@ def orders_frame(parsed: DataFrame) -> DataFrame:
         (total - total_tax).alias("net_total"),
         F.col("billing.country").alias("billing_country"),
         F.col("billing.city").alias("billing_city"),
+        *refunds,
     )
 
 
 def items_frame(parsed: DataFrame) -> DataFrame:
     """Line-item grain frame (normalize_orders.py:51-69): explode the
-    nested array — one shuffle-free narrow op per order row.
+    nested array — one shuffle-free narrow op per order row. Each line
+    carries its order's ``order_date``, so it is laid out like its
+    order without a join.
 
-    ``line_id`` (Woo's ``li.id``) rides along as the line's identity:
-    an order can carry the SAME (product_id, variation_id) on two
-    separate lines, and without the id there is no deterministic way
-    to apply a refund to exactly one of them (``build_facts`` drops
-    it from the warehouse row after the refund join)."""
+    When ``parsed`` carries the order's ``refunds``, each line gets
+    ``refunded_quantity``/``refunded_total`` summed from the refund
+    lines of its (product_id, variation_id) grain (refunds.py:39-53;
+    Woo refund line totals are negative, summed as-is). An order can
+    carry one grain on two lines (``line_id``, Woo's ``li.id``, tells
+    them apart), and copying the refund onto both would double-count
+    it, as the reference's pandas merge does — so exactly ONE line per
+    grain takes it: the lowest ``line_id``, NULL first, ties by array
+    position; the others get 0. REFERENCE-PARITY WAIVED
+    (deliberately): order-grain totals agree either way, but a
+    row-for-row check over fct_order_items must encode this policy
+    (test-pinned in tests/test_ingest_flow.py)."""
+    refunded = "refunds" in parsed.columns
+    if refunded:
+        parsed = _with_line_refunds(parsed)
     li = parsed.select(
         F.col("id").alias("order_id"),
-        F.explode("line_items").alias("li"),
+        _order_date().alias("order_date"),
+        F.posexplode("line_items").alias("pos", "li"),
+        *(["_line_refunds"] if refunded else []),
     )
+    refund_cols = []
+    if refunded:
+        mine = F.col("_line_refunds")[F.col("pos")]
+        refund_cols = [
+            mine["refunded_quantity"].alias("refunded_quantity"),
+            mine["refunded_total"].alias("refunded_total"),
+        ]
     return li.select(
         "order_id",
+        "order_date",
         F.col("li.id").alias("line_id"),
         F.col("li.product_id").alias("product_id"),
         F.col("li.variation_id").alias("variation_id"),
@@ -328,7 +451,73 @@ def items_frame(parsed: DataFrame) -> DataFrame:
             "subtotal"
         ),
         F.col("li.tax_class").alias("tax_class"),
+        *refund_cols,
     )
+
+
+def _with_line_refunds(parsed: DataFrame) -> DataFrame:
+    """``parsed`` plus ``_line_refunds``: per entry of ``line_items``,
+    its (refunded_quantity, refunded_total).
+
+    A grain is ``(coalesce(product_id, 0), coalesce(variation_id,
+    0))`` on both sides, so a custom/fee line with a NULL product id
+    still meets its refund. Lines and refund lines are materialized as
+    columns first: inside a higher-order function a complex child
+    re-evaluates per element (no CSE)."""
+
+    def grain(x) -> list[F.Column]:
+        return [
+            F.coalesce(x["product_id"], F.lit(0)).alias("p"),
+            F.coalesce(x["variation_id"], F.lit(0)).alias("v"),
+        ]
+
+    def same_grain(a, b) -> F.Column:
+        return (a["p"] == b["p"]) & (a["v"] == b["v"])
+
+    # a line's struct orders by (has id, id, position): its grain's
+    # minimum is the lowest line_id, NULL first, ties by position
+    staged = parsed.select(
+        "*",
+        F.transform(
+            "line_items",
+            lambda li, i: F.struct(
+                li["id"].isNotNull().alias("has_id"),
+                li["id"].alias("id"),
+                i.alias("pos"),
+                *grain(li),
+            ),
+        ).alias("_lines"),
+        F.transform(
+            F.flatten(F.filter("refunds.line_items", lambda a: a.isNotNull())),
+            lambda r: F.struct(
+                *grain(r),
+                F.coalesce(r["quantity"], F.lit(0)).alias("q"),
+                _money(r["total"]).alias("t"),
+            ),
+        ).alias("_refund_lines"),
+    )
+    zero = F.struct(
+        F.lit(0).cast("long").alias("refunded_quantity"),
+        F.lit(0.0).alias("refunded_total"),
+    )
+
+    def refund(line) -> F.Column:
+        first = F.array_min(
+            F.filter("_lines", lambda x: same_grain(x, line))
+        )["pos"] == line["pos"]
+        sums = F.aggregate(
+            F.filter("_refund_lines", lambda r: same_grain(r, line)),
+            zero,
+            lambda acc, r: F.struct(
+                (acc["refunded_quantity"] + r["q"]).alias("refunded_quantity"),
+                (acc["refunded_total"] + r["t"]).alias("refunded_total"),
+            ),
+        )
+        return F.when(first, F.coalesce(sums, zero)).otherwise(zero)
+
+    return staged.withColumn(
+        "_line_refunds", F.transform("_lines", refund)
+    ).drop("_lines", "_refund_lines")
 
 
 def fetch_products_by_ids(
@@ -354,7 +543,7 @@ def fetch_products_by_ids(
                 # rows plus total_pages > 1, and ignoring that header
                 # silently NULLs the category snapshot for 90% of the
                 # chunk — the truncation fetch_paged never allows
-                # (same exhaustive loop as fetch_refunds_for_orders)
+                # (same exhaustive loop as _order_refunds)
                 page = 1
                 while True:
                     body, total_pages = transport(
@@ -389,100 +578,4 @@ def fetch_products_by_ids(
     ).otherwise(F.lit(None))
     return parsed.select(
         F.col("id").alias("product_id"), snapshot.alias("category_snapshot")
-    )
-
-
-def fetch_refunds_for_orders(
-    spark: SparkSession, transport: Transport, order_ids: DataFrame
-) -> DataFrame:
-    """Per-order refund rows: (order_id, amount, line_items).
-
-    The reference loops orders one by one on the driver
-    (refunds.py:24-28); here order ids are a DataFrame and each
-    executor task drains its partition's per-order endpoints —
-    embarrassingly parallel fan-out.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("order_id", T.LongType()),
-            T.StructField("raw", T.StringType()),
-        ]
-    )
-
-    def fetch_orders(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            oids, raws = [], []
-            for oid in pdf["order_id"].dropna():
-                oid = int(oid)
-                try:
-                    # page EXHAUSTIVELY: a subscription/marketplace
-                    # order can exceed one page of refunds, and
-                    # stopping at page 1 silently understates
-                    # refund_total (the truncation fetch_paged never
-                    # allows itself)
-                    page, recs = 1, []
-                    while True:
-                        body, total_pages = transport(
-                            f"orders/{oid}/refunds",
-                            {"per_page": 100, "page": page},
-                        )
-                        batch = _records(body)
-                        recs.extend(batch)
-                        done = (
-                            page >= total_pages
-                            if total_pages >= 0
-                            else len(batch) < 100
-                        )
-                        if done:
-                            break
-                        page += 1
-                except WooHttpError as exc:
-                    # refunds.py:26-28: a MISSING order -> no refunds.
-                    # Only 404 qualifies — swallowing auth failures or
-                    # exhausted retries here would silently persist
-                    # refund_total=0 for the whole batch.
-                    if exc.status != 404:
-                        raise
-                    recs = []
-                oids.extend([oid] * len(recs))
-                raws.extend(recs)
-            yield pd.DataFrame({"order_id": oids, "raw": raws})
-
-    raw = (
-        order_ids.select(F.col(order_ids.columns[0]).alias("order_id"))
-        .distinct()
-        .mapInPandas(fetch_orders, schema=schema)
-    )
-    return raw.select(
-        "order_id", F.from_json("raw", REFUND_JSON_SCHEMA).alias("r")
-    ).select("order_id", "r.amount", "r.line_items")
-
-
-def order_refund_totals(refunds: DataFrame) -> DataFrame:
-    """order_id -> refund_total (refunds.py:30-37 aggregation)."""
-    return refunds.groupBy("order_id").agg(
-        F.sum(F.coalesce(_try_double("amount"), F.lit(0.0))).alias(
-            "refund_total"
-        )
-    )
-
-
-def item_refund_totals(refunds: DataFrame) -> DataFrame:
-    """(order_id, product_id, variation_id) -> refunded qty/total
-    (refunds.py:39-53; refund line totals are negative in Woo, summed
-    as-is like the reference)."""
-    li = refunds.select(
-        "order_id", F.explode("line_items").alias("li")
-    )
-    return li.groupBy(
-        "order_id",
-        F.coalesce(F.col("li.product_id"), F.lit(0)).alias("product_id"),
-        F.coalesce(F.col("li.variation_id"), F.lit(0)).alias("variation_id"),
-    ).agg(
-        F.sum(F.coalesce(F.col("li.quantity"), F.lit(0))).alias(
-            "refunded_quantity"
-        ),
-        F.sum(F.coalesce(_try_double("li.total"), F.lit(0.0))).alias(
-            "refunded_total"
-        ),
     )

@@ -114,22 +114,87 @@ def transport():
     return make_fake_transport(list(ORDERS), PRODUCTS, REFUNDS)
 
 
-def test_fetch_paged_fans_out_all_pages(spark, transport):
+def _logged(inner, log_path):
+    """``inner`` that also appends each orders call's page to
+    ``log_path`` — a file, because executor workers run their own
+    copy of the closure."""
+
+    def transport(path, params):
+        if path == "orders":
+            with open(log_path, "a") as f:
+                f.write(f"{params.get('page', 1)}\n")
+        return inner(path, params)
+
+    return transport
+
+
+def _pages_fetched(log_path):
+    with open(log_path) as f:
+        return sorted(int(line) for line in f)
+
+
+def test_fetch_paged_fans_out_all_pages(spark, transport, tmp_path):
     raw = rest.fetch_orders_since(spark, transport, "2023-01-01T00:00:00")
     rows = raw.collect()
     assert len(rows) == 3  # per_page_cap=2 -> 2 pages
     assert {json.loads(r["raw"])["id"] for r in rows} == {1, 2, 3}
     assert {r["page"] for r in rows} == {1, 2}
-    # page 1 lands as ONE partition beside the fan-out's tasks, not a
-    # slice per core: six orders, two a page -> pages 2..3 over two tasks
+    # every page, page 1 included, is one task of ONE stage: six
+    # orders, two a page -> three tasks, collected in a single job
+    # (no exchange), each page fetched once (page 1 only by the probe)
     six = list(ORDERS) + [
         _order(i, f"2024-01-0{i}T09:00:00", 10.0, 1.0, [(11, 1, 10.0)])
         for i in (4, 5, 6)
     ]
-    paged = make_fake_transport(six, PRODUCTS, REFUNDS)
+    log_path = str(tmp_path / "pages.log")
+    paged = _logged(make_fake_transport(six, PRODUCTS, REFUNDS), log_path)
     raw = rest.fetch_orders_since(spark, paged, "2023-01-01T00:00:00")
-    assert raw.rdd.getNumPartitions() == 1 + 2
-    assert sorted(r["page"] for r in raw.collect()) == [1, 1, 2, 2, 3, 3]
+    assert raw.rdd.getNumPartitions() == 3
+    sc = spark.sparkContext
+    group = f"fan-out-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "three-page fetch")
+    try:
+        pages = sorted(r["page"] for r in raw.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert pages == [1, 1, 2, 2, 3, 3]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _pages_fetched(log_path) == [1, 2, 3]
+
+
+def test_fetch_paged_unknown_total_walks_strides(spark, tmp_path):
+    """A transport that cannot report X-WP-TotalPages (-1): a short
+    first page is the whole result, and otherwise each task walks its
+    stride of pages until its first empty one."""
+
+    def unknown_total(n_records):
+        def transport(path, params):
+            per, page = int(params["per_page"]), int(params["page"])
+            ids = range((page - 1) * per + 1, min(page * per, n_records) + 1)
+            return json.dumps([{"id": i} for i in ids]), -1
+
+        return transport
+
+    # a short first page: one partition, and only the probe is fetched
+    log_path = str(tmp_path / "short.log")
+    t = _logged(unknown_total(1), log_path)
+    df = rest.fetch_paged(spark, t, "orders", {}, per_page=2)
+    assert df.rdd.getNumPartitions() == 1
+    assert [json.loads(r["raw"])["id"] for r in df.collect()] == [1]
+    assert _pages_fetched(log_path) == [1]
+
+    # five full pages, then an empty one: every row exactly once,
+    # page 1 fetched once, one empty probe per stride at most
+    log_path = str(tmp_path / "five.log")
+    t = _logged(unknown_total(10), log_path)
+    df = rest.fetch_paged(spark, t, "orders", {}, per_page=2)
+    n = df.rdd.getNumPartitions()
+    rows = df.collect()
+    assert sorted(json.loads(r["raw"])["id"] for r in rows) == list(range(1, 11))
+    assert sorted({r["page"] for r in rows}) == [1, 2, 3, 4, 5]
+    fetched = _pages_fetched(log_path)
+    assert fetched.count(1) == 1
+    assert len(fetched) <= 5 + n
 
 
 def test_orders_and_items_frames(spark, transport):
@@ -206,18 +271,31 @@ def test_category_snapshot_join(spark, transport):
     assert 99 not in cats
 
 
+def _refunded(spark, transport):
+    """(orders, items) frames of every order ``transport`` serves,
+    with the refunds the extract carried applied in the row."""
+    parsed = rest.parse_orders(
+        rest.fetch_orders_since(spark, transport, "2023-01-01T00:00:00")
+    )
+    return rest.orders_frame(parsed), rest.items_frame(parsed)
+
+
 def test_refund_aggregation(spark, transport):
-    ids = spark.createDataFrame([(1,), (2,), (3,)], "order_id long")
-    refunds = rest.fetch_refunds_for_orders(spark, transport, ids)
-    order_tot = {
-        r["order_id"]: r["refund_total"]
-        for r in rest.order_refund_totals(refunds).collect()
+    orders, items = _refunded(spark, transport)
+    order_tot = {r["order_id"]: r for r in orders.collect()}
+    assert {k: r["refund_total"] for k, r in order_tot.items()} == {
+        1: 0.0,
+        2: pytest.approx(10.0),
+        3: 0.0,
     }
-    assert order_tot == {2: pytest.approx(10.0)}
-    item_tot = rest.item_refund_totals(refunds).collect()
+    assert order_tot[2]["net_after_refunds"] == pytest.approx(45.0 - 10.0)
+    lines = items.collect()
+    item_tot = [r for r in lines if r["refunded_quantity"]]
     assert len(item_tot) == 1
+    assert (item_tot[0]["order_id"], item_tot[0]["product_id"]) == (2, 11)
     assert item_tot[0]["refunded_quantity"] == 1
     assert item_tot[0]["refunded_total"] == pytest.approx(-10.0)
+    assert {r["refunded_total"] for r in lines} == {0.0, -10.0}
 
 
 def test_incremental_run_upserts_and_advances_watermark(spark, transport, tmp_path):
@@ -329,12 +407,12 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     # drop budget: each fact's rewritten month is ONE right-sized file,
     # both runs released every frame they pinned (a collected
     # leftover of an earlier test can only lower the count), and the
-    # drop runs at most the jobs the materialize-once flow needs (30
-    # measured)
+    # drop runs at most the jobs the materialize-once flow with
+    # in-row refunds needs (26 measured)
     for fact in ("fct_orders", "fct_order_items"):
         assert len(_file_states(f"{wh}/{fact}/order_month=2024-02")) == 1
     assert sc._jsc.getPersistentRDDs().size() <= pins
-    assert jobs <= 30, jobs
+    assert jobs <= 26, jobs
 
 
 def test_raw_landing_zone_supports_replay_without_refetch(spark, tmp_path):
@@ -530,19 +608,22 @@ def test_refund_fetch_swallows_only_404(spark):
         WooHttpError,
     )
 
-    ids = spark.createDataFrame([(1,), (2,)], "order_id bigint")
+    inner = make_fake_transport(list(ORDERS), PRODUCTS, REFUNDS)
 
-    def missing(path, params):
-        raise WooHttpError(path, 404, "not found")
+    def failing_refunds(status):
+        def transport(path, params):
+            if path.endswith("/refunds"):
+                raise WooHttpError(path, status, "refunds unavailable")
+            return inner(path, params)
 
-    out = rest.fetch_refunds_for_orders(spark, missing, ids)
-    assert out.count() == 0
+        return transport
 
-    def unauthorized(path, params):
-        raise WooHttpError(path, 401, "bad credentials")
+    orders, items = _refunded(spark, failing_refunds(404))
+    assert [r["refund_total"] for r in orders.collect()] == [0.0] * 3
+    assert {r["refunded_quantity"] for r in items.collect()} == {0}
 
     with pytest.raises(Exception, match="401"):
-        rest.fetch_refunds_for_orders(spark, unauthorized, ids).collect()
+        _refunded(spark, failing_refunds(401))[0].collect()
 
 
 def test_watermark_store_recovers_from_corrupt_state(tmp_path):
@@ -586,31 +667,57 @@ def test_deleted_line_item_removed_on_rerun(spark, tmp_path):
 def test_duplicate_grain_refund_applied_once(spark):
     """An order carrying the SAME (product, variation) on two lines:
     the refund joins at that grain and a plain copy would double-count
-    it — it must land on exactly one deterministic line."""
+    it — it must land on exactly one deterministic line: the lowest
+    line_id, a NULL line_id first. A NULL product_id joins the grain
+    as 0, on the line and on the refund line alike."""
     from py_etl_pipeline_woocommerce_spark.plans.woo_flow import build_facts
 
-    o = _order(
+    def refund(*lines):
+        return {
+            "amount": "1.00",
+            "line_items": [
+                {"product_id": p, "variation_id": 0, "quantity": q, "total": t}
+                for p, q, t in lines
+            ],
+        }
+
+    o1 = _order(
         1, "2024-01-01T10:00:00", 30.0, 3.0, [(11, 1, 10.0), (11, 2, 10.0)]
     )
+    # order 2: line ids 5 and NULL on one grain -> the NULL line
+    o2 = _order(
+        2, "2024-01-01T11:00:00", 70.0, 7.0, [(11, 3, 10.0), (11, 4, 10.0)]
+    )
+    o2["line_items"][0]["id"], o2["line_items"][1]["id"] = 5, None
+    # order 3: a fee line with NULL product_id meets refund lines of
+    # NULL and of 0 product id
+    o3 = _order(
+        3, "2024-01-01T12:00:00", 30.0, 3.0, [(12, 2, 10.0), (0, 1, 10.0)]
+    )
+    o3["line_items"][1]["product_id"] = None
     refunds = {
-        1: [
-            {
-                "amount": "10.00",
-                "line_items": [
-                    {
-                        "product_id": 11,
-                        "variation_id": 0,
-                        "quantity": 1,
-                        "total": "-10.00",
-                    }
-                ],
-            }
-        ]
+        1: [refund((11, 1, "-10.00"))],
+        2: [refund((11, 2, "-20.00"))],
+        3: [refund((None, 1, "-5.00")), refund((0, 1, "-1.00"))],
     }
-    t = make_fake_transport([o], PRODUCTS, refunds)
+    t = make_fake_transport([o1, o2, o3], PRODUCTS, refunds)
     _orders, items = build_facts(spark, t, "2023-01-01T00:00:00")
-    got = sorted(r["refunded_total"] for r in items.collect())
-    assert got == [-10.0, 0.0]  # once, not copied onto both lines
+    got = {
+        (r["order_id"], r["product_id"], r["quantity"]): (
+            r["refunded_quantity"],
+            r["refunded_total"],
+        )
+        for r in items.collect()
+    }
+    assert got == {
+        # once, not copied onto both lines
+        (1, 11, 1): (1, -10.0),
+        (1, 11, 2): (0, 0.0),
+        (2, 11, 3): (0, 0.0),
+        (2, 11, 4): (2, -20.0),
+        (3, 12, 2): (0, 0.0),
+        (3, 0, 1): (2, -6.0),
+    }
 
 
 def test_null_month_rows_survive_later_null_month_upsert(spark, tmp_path):
@@ -677,12 +784,16 @@ def test_fetch_refunds_pages_exhaustively(spark):
     ]
 
     def t(path, params):
+        if path == "orders":
+            return json.dumps([{"id": 1}]), 1
         assert path == "orders/1/refunds"
         page = int(params.get("page", 1))
         return json.dumps(refs[(page - 1) * 100 : page * 100]), 2
 
-    ids = spark.createDataFrame([(1,)], "order_id long")
-    assert rest.fetch_refunds_for_orders(spark, t, ids).count() == 150
+    (row,) = rest.fetch_orders_since(spark, t, "2023-01-01T00:00:00").collect()
+    assert len(json.loads(row["refunds"])) == 150
+    (order,) = _refunded(spark, t)[0].collect()
+    assert order["refund_total"] == pytest.approx(150.0)
 
 
 def test_watermark_overlap_rule_selected_per_run(spark, transport, tmp_path):
