@@ -1,8 +1,9 @@
-"""Wall-clock helpers + the display-timezone knob.
+"""The display-timezone knob and the ns→µs timestamp floor.
 
-Parity with the reference's ``utils/time.py:1-12`` (``APP_TZ`` env
-var, UTC-now ISO string, lookback window helper), on stdlib
-``datetime``/``zoneinfo`` instead of pendulum.
+Parity with the reference's ``utils/time.py:1-6`` (``APP_TZ`` env
+var), on stdlib ``zoneinfo`` instead of pendulum. The reference's
+UTC-now and lookback helpers live where the lookback is used,
+``sources.state.WatermarkStore.get_since``.
 
 The engine itself stays UTC-everywhere — every stored timestamp,
 watermark, and oracle comparison is UTC (``catalog.load_table`` pins
@@ -16,7 +17,6 @@ across engines (DST makes local day buckets 23/25 hours long).
 from __future__ import annotations
 
 import os
-from datetime import datetime, timedelta, timezone
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column
@@ -41,19 +41,6 @@ TS_US_FLOOR = "(ts - pmod(ts, 1000)) div 1000"
 def app_tz() -> str:
     """The configured display timezone (``APP_TZ`` env, IANA name)."""
     return os.getenv("APP_TZ", DEFAULT_APP_TZ)
-
-
-def now_utc_iso() -> str:
-    """Current UTC time as an ISO-8601 string (``utils/time.py:8-9``)."""
-    return datetime.now(timezone.utc).isoformat(timespec="seconds")
-
-
-def default_lookback_iso(days: int) -> str:
-    """UTC now minus ``days`` as ISO-8601 (``utils/time.py:11-12``) —
-    the default incremental-extract window."""
-    return (datetime.now(timezone.utc) - timedelta(days=days)).isoformat(
-        timespec="seconds"
-    )
 
 
 def to_display_tz(col: Column, tz: str | None = None) -> Column:

@@ -1682,23 +1682,12 @@ def _line_index_staged_dir(spark, prefix: str, batch_id: int) -> str:
     return f"{parent}/_{base}_staged/batch-{batch_id}"
 
 
-def _line_partials_agg(lines: DataFrame) -> DataFrame:
-    """One batch's (line_hash, doc_freq, n_occurrences) partials —
-    the store row shape both the bucketed-parquet and Delta routes
-    append."""
-    return lines.groupBy("line_hash").agg(
-        F.countDistinct("doc_id").cast("long").alias("doc_freq"),
-        F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-    )
-
-
 def write_line_partials(
     lines: DataFrame,
     prefix: str,
     n_buckets: int = 32,
     mode: str = "append",
     batch_id: int | None = None,
-    delta_path: str | None = None,
 ) -> None:
     """Fold an already-exploded (doc_id, line_hash) frame into the
     store — the seam that lets ``run_stream_line_strip`` append the
@@ -1733,29 +1722,17 @@ def write_line_partials(
     rebuild, restart the stream from a source position consistent
     with the rebuilt store.
     """
-    if delta_path is not None:
-        # ACID route (dep-gated): idempotent Delta append — the
-        # txnAppId/txnVersion writer options replace the staged
-        # external-table + marker + rename protocol below. The caller
-        # addresses the store by PATH (Delta) instead of catalog
-        # table name (bucketed parquet).
-        from ..sources.table_format import append_partials_delta
-
-        append_partials_delta(
-            _line_partials_agg(lines),
-            delta_path,
-            app_id=f"line-index-{prefix}",
-            batch_id=batch_id,
-            mode=mode,
-        )
-        return
     from ..functions.fsutil import fs_delete, fs_exists, fs_touch
     from ..sources.bucketing import write_bucketed
 
     spark = lines.sparkSession
     table = f"{prefix}_lines"
     table_exists = spark.catalog.tableExists(table)
-    agg = _line_partials_agg(lines)
+    # one batch's (line_hash, doc_freq, n_occurrences) partials
+    agg = lines.groupBy("line_hash").agg(
+        F.countDistinct("doc_id").cast("long").alias("doc_freq"),
+        F.count(F.lit(1)).cast("long").alias("n_occurrences"),
+    )
     if batch_id is None or mode != "append":
         # rebuilds and unmarked appends keep the direct one-step write
         write_bucketed(

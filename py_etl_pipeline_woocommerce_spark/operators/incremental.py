@@ -1,10 +1,10 @@
-"""Incremental-load primitives: watermark filter/advance + backfill
-windows.
+"""Incremental-load primitives: watermark filter + backfill windows.
 
-Re-expresses the reference's watermark state machine
-(``/root/reference/src/etl/utils/state.py`` get/set ``since_iso``;
-``src/run.py:140-150`` advances to max(order_date)+1min) and windowed
-backfill (``src/run.py:106-130``: march a cursor in N-day windows).
+Re-expresses the reference's watermark predicate (``after=since_iso``)
+and windowed backfill (``src/run.py:106-130``: march a cursor in
+N-day windows). The watermark state machine itself (get/set
+``since_iso``, and ``src/run.py:140-150``'s advance to
+max(order_date)+1min) is ``sources.state.WatermarkStore``.
 
 Spark-first: the watermark predicate is a plain filter that Catalyst
 pushes into the parquet/iceberg scan — at 100 TB with date-partitioned
@@ -29,24 +29,6 @@ def filter_since(df: DataFrame, ts_col: str, watermark_iso: str) -> DataFrame:
 
     datetime.fromisoformat(watermark_iso)  # raises on malformed input
     return df.filter(F.col(ts_col) > F.lit(watermark_iso).cast("timestamp"))
-
-
-def next_watermark(df: DataFrame, ts_col: str) -> str | None:
-    """max(ts) + 1 minute, ISO string — matches run.py:146
-    (``p.parse(max_dt).add(minutes=1)``). ONE tiny agg whose +1min
-    and formatting run INSIDE Spark: the old two-job version
-    round-tripped the max through a driver-local naive datetime
-    (collect → createDataFrame), which drops the DST fold bit — with
-    a driver TZ that falls back (the repo's own Europe/Athens
-    default) a max in the repeated hour could land the watermark an
-    hour late and silently skip that hour's orders forever."""
-    row = df.agg(
-        F.date_format(
-            F.max(ts_col) + F.expr("INTERVAL 1 MINUTE"),
-            "yyyy-MM-dd'T'HH:mm:ss",
-        ).alias("iso")
-    ).collect()[0]
-    return row["iso"]
 
 
 def assign_backfill_windows(

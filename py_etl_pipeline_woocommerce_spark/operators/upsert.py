@@ -19,7 +19,6 @@ Two strategies:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def upsert_df(
@@ -50,27 +49,11 @@ def upsert_df(
 
 
 def upsert_partitioned_parquet(
-    batch: DataFrame, path: str, partition_col: str,
-    table_format: str = "parquet",
+    batch: DataFrame, path: str, partition_col: str
 ) -> None:
     """Replace only the partitions present in the batch. The dynamic
     overwrite mode rides as a WRITER option (below), which takes
-    precedence over any session conf — no session setup needed.
-
-    ``table_format="delta"`` (dep-gated; see sources/table_format.py)
-    routes to an atomic ``replaceWhere`` commit instead — same
-    touched-partitions-only contract, ACID under concurrent readers.
-    """
-    if table_format == "delta":
-        from ..sources.table_format import upsert_partitioned_delta
-
-        upsert_partitioned_delta(batch, path, partition_col)
-        return
-    if table_format != "parquet":
-        raise ValueError(
-            f"unknown table_format {table_format!r}; "
-            "expected 'parquet' or 'delta'"
-        )
+    precedence over any session conf — no session setup needed."""
     (
         batch.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

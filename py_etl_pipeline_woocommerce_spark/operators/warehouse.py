@@ -444,8 +444,8 @@ def rollup_merge(existing: DataFrame, batch_events: DataFrame) -> DataFrame:
 
 
 def _rollup_batch_frame(batch_events: DataFrame) -> DataFrame:
-    """Shared batch projection for BOTH rollup-store routes (parquet
-    staged-commit and Delta MERGE): daily partials with the measure
+    """The batch projection every rollup-store merge folds in
+    (staged-commit and direct alike): daily partials with the measure
     type PINNED at DECIMAL(30,2) — Spark widens decimal sums per
     plan, and letting each merge write whatever the optimizer
     inferred would drift the store schema between rounds — plus the
@@ -475,7 +475,6 @@ def _rollup_batch_frame(batch_events: DataFrame) -> DataFrame:
 def merge_rollup_store(
     spark, store_path: str, batch_events: DataFrame,
     batch_id: int | None = None,
-    table_format: str = "parquet",
 ) -> None:
     """Persist-side of ``rollup_merge``: fold a batch of raw events
     into an ON-DISK month-partitioned daily-rollup table, touching
@@ -488,8 +487,11 @@ def merge_rollup_store(
 
     Used directly for batch drops and as the body of the streaming
     ``RollupMergeSink`` — the continuous aggregate is maintained by
-    the identical code under both execution models.
+    the identical code under both execution models. Every frame a
+    merge pins is released before it returns, so a long-running
+    stream does not accumulate pinned RDDs one micro-batch at a time.
     """
+    from ..functions.frames import release
     from ..functions.fsutil import fs_exists, fs_touch
 
     # The stored measure type is PINNED at DECIMAL(30,2): Spark's sum
@@ -516,29 +518,6 @@ def merge_rollup_store(
     # see a partial month — Delta/Iceberg is the production fix there.
     # All probes/markers/renames go through the Hadoop FS client
     # (fsutil) so hdfs://s3a:// stores behave like local ones.
-    if table_format == "delta":
-        # ACID route (dep-gated): one MERGE folds the batch partials
-        # into matching (day, type) rows, pruned to the batch's
-        # months; Delta's log + txnAppId/txnVersion replace the whole
-        # staged-commit/marker replay protocol below.
-        from ..sources.table_format import merge_rollup_delta
-
-        merge_rollup_delta(
-            spark,
-            store_path,
-            _rollup_batch_frame(batch_events),
-            keys=["day_us", "event_type"],
-            sum_cols=["n_events", "total_value_dec"],
-            partition_col="month",
-            batch_id=batch_id,
-            app_id="rollup-merge",
-        )
-        return
-    if table_format != "parquet":
-        raise ValueError(
-            f"unknown table_format {table_format!r}; "
-            "expected 'parquet' or 'delta'"
-        )
     staged_dir = _rollup_staged_dir(store_path, batch_id)
     if batch_id is not None:
         marker = f"{store_path.rstrip('/')}/_applied/batch-{batch_id}"
@@ -549,38 +528,50 @@ def merge_rollup_store(
     # TWO consumers (the month list collect + the merge/write) — pin
     # or the batch aggregation runs twice per fold
     batch = _rollup_batch_frame(batch_events).localCheckpoint(eager=False)
-    if not _store_has_months(spark, store_path):
-        merged = batch
-    else:
-        months = [r[0] for r in batch.select("month").distinct().collect()]
-        existing = spark.read.parquet(store_path).filter(
-            F.col("month").isin(months)
-        )
-        cols = ["day_us", "event_type", "n_events", "total_value_dec", "month"]
-        merged = (
-            existing.select(*cols)
-            .unionByName(batch.select(*cols))
-            .groupBy("day_us", "event_type", "month")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("total_value_dec").cast(_dec).alias("total_value_dec"),
+    merged = batch
+    try:
+        if _store_has_months(spark, store_path):
+            months = [
+                r[0] for r in batch.select("month").distinct().collect()
+            ]
+            existing = spark.read.parquet(store_path).filter(
+                F.col("month").isin(months)
             )
-            .localCheckpoint(eager=True)
-        )
-    if batch_id is None:
-        # direct (non-replayed) drops keep the one-step dynamic
-        # partition overwrite — there is no marker to stage against
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("month")
-            .parquet(store_path)
-        )
-        return
-    # staged commit: stage -> marker (commit point) -> promote
-    merged.write.mode("overwrite").partitionBy("month").parquet(staged_dir)
-    fs_touch(spark, f"{store_path.rstrip('/')}/_applied/batch-{batch_id}")
-    _promote_staged_months(spark, staged_dir, store_path)
+            cols = [
+                "day_us", "event_type", "n_events", "total_value_dec", "month"
+            ]
+            merged = (
+                existing.select(*cols)
+                .unionByName(batch.select(*cols))
+                .groupBy("day_us", "event_type", "month")
+                .agg(
+                    F.sum("n_events").alias("n_events"),
+                    F.sum("total_value_dec").cast(_dec).alias("total_value_dec"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        if batch_id is None:
+            # direct (non-replayed) drops keep the one-step dynamic
+            # partition overwrite — there is no marker to stage against
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("month")
+                .parquet(store_path)
+            )
+        else:
+            # staged commit: stage -> marker (commit point) -> promote
+            merged.write.mode("overwrite").partitionBy("month").parquet(
+                staged_dir
+            )
+            fs_touch(spark, marker)
+            _promote_staged_months(spark, staged_dir, store_path)
+    finally:
+        # local checkpoints are out of unpersist()'s and clearCache()'s
+        # reach: free them here, on a crash exit as well
+        release(batch)
+        if merged is not batch:
+            release(merged)
 
 
 def _rollup_staged_dir(store_path: str, batch_id: int | None) -> str:

@@ -28,9 +28,10 @@ import shutil
 import time
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import checkpoint, release
 from ..functions.logging import get_logger
 from ..operators.upsert import upsert_df, upsert_partitioned_parquet
 from ..sources import rest
@@ -232,7 +233,7 @@ def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
 
     spark = table.sparkSession
     # the months present ride on the checkpoint job
-    out, seen = _checkpoint(
+    out, seen = checkpoint(
         transform(table.filter(_month_in(months))),
         _months_metric(),
         by=PARTITION_COL,
@@ -242,7 +243,7 @@ def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
         if present:
             upsert_partitioned_parquet(out, path, PARTITION_COL)
     finally:
-        _release(out)
+        release(out)
     for m in set(months) - present:
         # Hadoop-FS delete on the WAREHOUSE filesystem (a local rmtree
         # silently no-ops on hdfs/s3a), with the NULL month mapped to
@@ -253,28 +254,6 @@ def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
         n.startswith(f"{PARTITION_COL}=") for n in fs_list_names(spark, path)
     ):
         fs_delete(spark, path)
-
-
-def _checkpoint(
-    df: DataFrame, *metrics: F.Column, by: str | None = None
-) -> tuple[DataFrame, dict]:
-    """Materialize ``df`` once, right-sized: a REBALANCE (on ``by``
-    when given), which AQE coalesces to one partition for a
-    drop-sized frame and splits at the advisory size for a large one;
-    ``metrics`` observed on that same job; an eager
-    ``localCheckpoint``. Returns the checkpointed frame, which the
-    caller hands to ``_release``, and the observed values."""
-    seen = Observation()
-    hint = ("rebalance", by) if by else ("rebalance",)
-    out = df.hint(*hint).observe(seen, *metrics).localCheckpoint(eager=True)
-    return out, seen.get
-
-
-def _release(df: DataFrame) -> None:
-    """Free a ``_checkpoint``-ed frame's blocks. A local checkpoint is
-    not in the cache manager, so ``unpersist()`` and ``clearCache()``
-    both miss it; the LogicalRDD leaf it returns holds the RDD."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _months_metric() -> F.Column:
@@ -409,14 +388,14 @@ def _incremental_run_once(
         )
         # one job materializes the orders batch and observes all the
         # run needs of it: its size, the watermark candidate, its months
-        orders, seen = _checkpoint(
+        orders, seen = checkpoint(
             orders,
             F.count(F.lit(1)).alias("n"),
             F.max("order_date").alias("max_date"),
             _months_metric(),
         )
         checkpoints.append(orders)
-        items, seen_items = _checkpoint(items, F.count(F.lit(1)).alias("n"))
+        items, seen_items = checkpoint(items, F.count(F.lit(1)).alias("n"))
         checkpoints.append(items)
         # both batches now hold everything the raw extract fed them
         _unpersist(cleanup)
@@ -454,7 +433,7 @@ def _incremental_run_once(
         # cached partitions into its retry
         _unpersist(cleanup)
         for f in checkpoints:
-            _release(f)
+            release(f)
 
 
 def _unpersist(frames: list) -> None:

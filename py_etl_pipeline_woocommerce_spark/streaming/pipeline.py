@@ -228,9 +228,9 @@ def run_stream_line_strip(
     store that now already contains the batch's own partials — it can
     strip strictly MORE lines than the first delivery (never fewer),
     and the upsert sink keeps the re-run's rows; the store counts are
-    identical either way. The residual crash window (between the
-    append and its marker) is the transactional-format seam; a
-    from-scratch rebuild is ``write_line_index(...,
+    identical either way. A crash on either side of the marker is
+    covered by the fold's staged commit (see ``write_line_partials``);
+    a from-scratch rebuild is ``write_line_index(...,
     mode="overwrite")``, which also resets the markers.
 
     Returns (query, sink) where sink.rows maps (doc_id,) → stripped

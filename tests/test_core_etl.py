@@ -12,7 +12,6 @@ from py_etl_pipeline_woocommerce_spark.operators.enrich import enrich_items_with
 from py_etl_pipeline_woocommerce_spark.operators.incremental import (
     assign_backfill_windows,
     filter_since,
-    next_watermark,
 )
 from py_etl_pipeline_woocommerce_spark.operators.normalize import (
     normalize_items,
@@ -109,7 +108,6 @@ def test_watermark_filter_and_advance(spark):
     ).select(F.col("ts").cast("timestamp").alias("ts"))
     kept = filter_since(df, "ts", "2024-03-01T00:00:00")
     assert kept.count() == 1
-    assert next_watermark(df, "ts") == "2024-06-01T12:31:00"
 
 
 def test_backfill_window_assignment(spark):

@@ -490,8 +490,15 @@ def test_streaming_rollup_merge_matches_batch_store(spark, stream_dirs, tmp_path
     # batch twin: two sequential drops through the SAME merge code
     store_batch = str(tmp_path / "rollup_batch")
     all_events = spark.read.parquet(src)
+    # the direct path releases what it pins, into an empty store and
+    # into an existing one (a collected leftover of an earlier test
+    # can only lower the count)
+    jsc = spark.sparkContext._jsc
+    pins = jsc.getPersistentRDDs().size()
     merge_rollup_store(spark, store_batch, all_events.filter("event_id <= 3"))
+    assert jsc.getPersistentRDDs().size() <= pins
     merge_rollup_store(spark, store_batch, all_events.filter("event_id > 3"))
+    assert jsc.getPersistentRDDs().size() <= pins
 
     key = lambda r: (r["day_us"], r["event_type"])
     got = {key(r): r for r in spark.read.parquet(store_stream).collect()}

@@ -7,8 +7,6 @@ import pytest
 from py_etl_pipeline_woocommerce_spark.functions.logging import get_logger
 from py_etl_pipeline_woocommerce_spark.functions.timeutil import (
     app_tz,
-    default_lookback_iso,
-    now_utc_iso,
     to_display_tz,
 )
 
@@ -18,10 +16,6 @@ def test_app_tz_default_and_override(monkeypatch):
     assert app_tz() == "Europe/Athens"
     monkeypatch.setenv("APP_TZ", "America/New_York")
     assert app_tz() == "America/New_York"
-
-
-def test_lookback_is_before_now():
-    assert default_lookback_iso(7) < now_utc_iso()
 
 
 def test_to_display_tz_converts_at_render_boundary(spark):
