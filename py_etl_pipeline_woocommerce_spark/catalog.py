@@ -21,7 +21,9 @@ is kept per path; a new key replaces the old one. A path the driver
 cannot ``os.stat`` (a non-``file:`` URI, or a session whose
 ``fs.defaultFS`` is not local) is inferred on every call, as before.
 Blind spot: an in-place rewrite that leaves size, nanosecond mtime
-and inode all unchanged reuses the old schema.
+and inode all unchanged reuses the old schema. ``tables_snapshot``
+shares this key with ``plans/dashboard.py``, which keeps page rows
+under it, so the same rewrite also serves old dashboard rows.
 """
 
 from __future__ import annotations
@@ -109,6 +111,15 @@ def _snapshot_key(spark: SparkSession, path: str) -> tuple | None:
         return None
     confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
     return tuple(files), confs
+
+
+def tables_snapshot(
+    spark: SparkSession, sf_dir: str, names: tuple[str, ...]
+) -> tuple | None:
+    """The ``_snapshot_key`` of each named table under ``sf_dir``, or
+    None when any of them is None."""
+    keys = tuple(_snapshot_key(spark, table_path(sf_dir, n)) for n in names)
+    return None if None in keys else keys
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:

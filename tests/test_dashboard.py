@@ -4,10 +4,49 @@ defaults to the reference sidebar's LAST-30-DAYS-of-data window
 
 from __future__ import annotations
 
+import os
+import shutil
 import uuid
 from datetime import date, timedelta
+from urllib.parse import urlparse
 
+from pyspark.sql import functions as F
+
+from py_etl_pipeline_woocommerce_spark.catalog import load_table, table_path
+from py_etl_pipeline_woocommerce_spark.plans import analytics, dashboard
 from py_etl_pipeline_woocommerce_spark.plans.dashboard import dashboard_payload
+
+W95 = ("1995-01-01", "1995-12-31")
+#: the star-schema tables a page reads, spelled out here so a table
+#: missing from ``dashboard.PAGE_TABLES`` still gets copied
+STAR = ("orders", "lineitem", "part", "customer", "nation", "region")
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"dashboard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dashboard_payload")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _collect(frames):
+    return {
+        name: sorted(map(tuple, df.collect()), key=repr)
+        for name, df in frames.items()
+    }
+
+
+def _copy_tables(sf_dir, dest, skip=()):
+    """A private copy of the page's tables (new inodes, writable)."""
+    for t in STAR:
+        if t not in skip:
+            shutil.copyfile(table_path(sf_dir, t), table_path(str(dest), t))
+    return str(dest)
 
 
 def test_dashboard_payload_returns_all_frames(spark, sf_dir):
@@ -32,25 +71,20 @@ def test_dashboard_payload_respects_window(spark, sf_dir):
     # a narrower window strictly reduces the KPI order count vs the
     # explicit full data range
     bounds = frames["date_bounds"].first()
-    # after the first page, building a page with an explicit window is
-    # lazy: its 17 table loads reuse the inferred schemas, so no job
-    sc = spark.sparkContext
-    group = f"warm-page-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "warm dashboard_payload")
-    try:
-        full = dashboard_payload(spark, sf_dir, bounds["min_d"], bounds["max_d"])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    full_w = (bounds["min_d"], bounds["max_d"])
+    full = dashboard_payload(spark, sf_dir, *full_w)
+    # a page materializes its frames; revisiting the window on unchanged
+    # tables serves the kept rows, collecting included, with no job
+    _, n = _jobs(spark, lambda: _collect(dashboard_payload(spark, sf_dir, *full_w)))
+    assert n == 0
     all_k = full["kpis"].first()["orders_cnt"]
     win_k = frames["kpis"].first()["orders_cnt"]
     assert 0 < win_k < all_k
 
 
-def test_date_bounds_empty_table_fallback(spark, sf_dir, tmp_path):
+def test_date_bounds_empty_table_fallback(spark, sf_dir, tmp_path, monkeypatch):
     # reference parity (app.py:19-22): an EMPTY orders table yields
     # (today - 30d, today), not NULLs
-    from py_etl_pipeline_woocommerce_spark.catalog import load_table
     from py_etl_pipeline_woocommerce_spark.plans.analytics import date_bounds
 
     load_table(spark, sf_dir, "orders").limit(0).write.parquet(
@@ -69,6 +103,30 @@ def test_date_bounds_empty_table_fallback(spark, sf_dir, tmp_path):
         date.fromisoformat(row["max_d"])
         - date.fromisoformat(row["min_d"])
     ) == timedelta(days=30)
+
+    # the page keeps date_bounds under the UTC date too, so a kept
+    # fallback never outlives its day: the next day's page is a miss
+    # and shows what a fresh date_bounds shows. (Spark's current_date
+    # reads the wall clock, so the rebuilt rows are today's again.)
+    wh = _copy_tables(sf_dir, tmp_path, skip=("orders",))
+    monkeypatch.setattr(dashboard, "_utc_today", lambda: before.isoformat())
+    dashboard_payload(spark, wh)
+    builds = []
+
+    def counted(*a):
+        builds.append(a)
+        return date_bounds(*a)
+
+    monkeypatch.setattr(dashboard, "date_bounds", counted)
+    _, n = _jobs(spark, lambda: dashboard_payload(spark, wh))
+    assert (builds, n) == ([], 0)
+    tomorrow = (before + timedelta(days=1)).isoformat()
+    monkeypatch.setattr(dashboard, "_utc_today", lambda: tomorrow)
+    bounds, n = _jobs(
+        spark, lambda: dashboard_payload(spark, wh)["date_bounds"].first()
+    )
+    assert len(builds) == 1 and n > 0
+    assert bounds["max_d"] in {before.isoformat(), get_today().isoformat()}
 
 
 def test_dashboard_partial_override_anchors_to_effective_d2(spark, sf_dir):
@@ -144,3 +202,129 @@ def test_dashboard_payload_normalizes_noncanonical_d2(spark, sf_dir):
     # the window is non-empty: the kpis frame reports orders
     kp = frames["kpis"].collect()[0]
     assert kp["orders_cnt"] > 0
+
+
+def test_rewritten_table_serves_new_rows(spark, sf_dir, tmp_path):
+    wh = _copy_tables(sf_dir, tmp_path)
+    first = _collect(dashboard_payload(spark, wh, *W95))
+    path = table_path(wh, "lineitem")
+    os.remove(path)
+    load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_orderkey") % 2 == 0
+    ).write.parquet(path)
+    second = _collect(dashboard_payload(spark, wh, *W95))
+    assert second["kpis"] != first["kpis"]
+    for name in ("kpis", "revenue_timeseries", "top_products"):
+        fresh = getattr(analytics, name)(spark, wh, d1=W95[0], d2=W95[1])
+        assert second[name] == _collect({name: fresh})[name], name
+
+
+def test_revisit_runs_no_job_and_conf_flip_misses(spark, sf_dir, tmp_path):
+    wh = _copy_tables(sf_dir, tmp_path)
+    first = _collect(dashboard_payload(spark, wh, *W95))
+    again, n = _jobs(spark, lambda: _collect(dashboard_payload(spark, wh, *W95)))
+    assert n == 0 and again == first
+    conf = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false" if old == "true" else "true")
+    try:
+        flipped, n = _jobs(spark, lambda: _collect(dashboard_payload(spark, wh, *W95)))
+    finally:
+        spark.conf.set(conf, old)
+    assert n > 0 and flipped == first
+
+
+def test_new_window_reuses_unwindowed_frames(spark, sf_dir, tmp_path, monkeypatch):
+    wh = _copy_tables(sf_dir, tmp_path)
+    dashboard_payload(spark, wh, *W95)
+    builds = []
+    for name in ("date_bounds", "cohort_retention"):
+        real = getattr(dashboard, name)
+
+        def counted(*a, real=real, name=name):
+            builds.append(name)
+            return real(*a)
+
+        monkeypatch.setattr(dashboard, name, counted)
+    frames, n = _jobs(
+        spark, lambda: dashboard_payload(spark, wh, "1996-01-01", "1996-01-30")
+    )
+    assert builds == [] and n > 0
+    assert frames["cohort_retention"].count() > 0
+
+
+def test_kept_frames_stay_at_the_cap(spark, sf_dir, tmp_path, monkeypatch):
+    wh = _copy_tables(sf_dir, tmp_path)
+    # room for one page (7 frames) and a bit: two windows need 12
+    monkeypatch.setattr(dashboard, "_MAX_ENTRIES", 8)
+    windows = [("1995-01-01", "1995-01-30"), ("1995-02-01", "1995-03-02")]
+    for w in windows:
+        dashboard_payload(spark, wh, *w)
+    assert len(dashboard._KEPT) == 8
+    # least recently used out: the last window is still whole
+    _, n = _jobs(spark, lambda: _collect(dashboard_payload(spark, wh, *windows[-1])))
+    assert n == 0
+
+
+def test_page_key_covers_every_table_a_frame_reads(spark, sf_dir, monkeypatch):
+    """Each frame's plan reads only tables in ``PAGE_TABLES``: a frame
+    that starts reading another table would otherwise serve rows kept
+    under a key that misses that table's rewrites."""
+    monkeypatch.setattr(dashboard, "tables_snapshot", lambda *a: None)
+    frames = dashboard_payload(spark, sf_dir, *W95)
+    for name, df in frames.items():
+        files = df.inputFiles()
+        assert files, name
+        rel = (os.path.relpath(urlparse(f).path, sf_dir) for f in files)
+        read = {r.split(os.sep)[0].removesuffix(".parquet") for r in rel}
+        assert read <= set(dashboard.PAGE_TABLES), (name, read)
+
+
+def test_store_holds_under_concurrent_serves(monkeypatch):
+    """Threads serving overlapping keys through the kept-rows store
+    (Spark faked out) always get their own key's rows, and the store
+    never passes its cap."""
+    import sys
+    import threading
+    import time
+    from collections import OrderedDict
+    from types import SimpleNamespace as NS
+
+    monkeypatch.setattr(dashboard, "_KEPT", OrderedDict())
+    monkeypatch.setattr(dashboard, "_PAGE_KEYS", {"wh": ("page",)})
+    monkeypatch.setattr(dashboard, "_MAX_ENTRIES", 16)
+    monkeypatch.setattr(dashboard, "DataFrame", lambda jdf, spark: jdf)
+    spark = NS(_jsparkSession=NS(createDataFrame=lambda rows, schema: rows))
+
+    def build(k):
+        time.sleep(0)  # yield mid-miss, where Spark would run the jobs
+        return NS(_jdf=NS(collectAsList=lambda: [k], schema=lambda: None))
+
+    errors = []
+
+    def serve(t):
+        try:
+            for i in range(300):
+                k = (t * 7 + i) % 40
+                key = ("f", k)
+                got = dashboard._kept_frame(
+                    spark, "wh", ("page",), key, lambda: build(k)
+                )
+                assert got == [k], (k, got)
+                assert len(dashboard._KEPT) <= 16
+        except Exception as e:  # reported below with its thread's key
+            errors.append(e)
+
+    threads = [threading.Thread(target=serve, args=(t,)) for t in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(dashboard._KEPT) == 16
