@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.frames import pin
 from ..functions.logging import get_logger
 from ..functions.text import tokens_expr
 
@@ -376,7 +377,6 @@ def bpe_token_count(
     merges_df: DataFrame | None = None,
     n_merges: int = 8,
     max_vocab_words: int | None = DEFAULT_MAX_VOCAB_WORDS,
-    persisted_frames: list | None = None,
 ) -> DataFrame:
     """Exact BPE token budget per document under a trained merge
     table (trained here from the same corpus when ``merges_df`` is
@@ -394,26 +394,20 @@ def bpe_token_count(
     ``max_vocab_words``) still segment correctly — the fold replays
     merges on ANY token, not just vocabulary words.
     """
-    from pyspark.storagelevel import StorageLevel
-
     occ = documents.select(
         "doc_id", F.explode(tokens_expr("text")).alias("token")
     ).filter(F.col("token") != "")
     if merges_df is None:
         # self-training path: ONE corpus aggregation serves both the
         # trainer's model collect and the segmenter's distinct-token
-        # frame (persisted — vocabulary-sized, KB-MB; pass
-        # persisted_frames=[] to unpersist after materializing, the
-        # read_jsonl_quarantine convention). Without the shared frame
-        # the final action re-scanned the corpus for the vocabulary a
-        # second time.
+        # frame (pinned — vocabulary-sized, KB-MB). Without the shared
+        # frame the final action re-scanned the corpus for the
+        # vocabulary a second time.
         vc_all = (
             occ.groupBy("token")
             .agg(F.count(F.lit(1)).alias("tok_count"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .transform(pin)
         )
-        if persisted_frames is not None:
-            persisted_frames.append(vc_all)
         rows = _collect_capped_vocab(vc_all, max_vocab_words)
         merges = [
             (left, right)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint, pin
 from ..functions.text import (
     norm_text,
     token_count_expr,
@@ -58,7 +59,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 5) -> DataFrame:
     tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = documents.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -448,7 +449,7 @@ def mix_weights(
     per_lang = documents.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count_expr("text")).alias("lang_tokens"),
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     totals = per_lang.agg(
         F.sum("lang_tokens").alias("total_tokens"),
         F.count(F.lit(1)).alias("n_langs"),
@@ -506,7 +507,7 @@ def doc_rarity(documents: DataFrame) -> DataFrame:
     # exploded frame or the tokenize+explode re-runs per consumer
     occ = _spread(documents).select(
         "doc_id", F.explode(tokens_expr("text")).alias("term")
-    ).filter(F.col("term") != "").localCheckpoint(eager=False)
+    ).filter(F.col("term") != "").transform(local_checkpoint, eager=False)
     df_ = (
         occ.distinct()
         .groupBy("term")
@@ -565,7 +566,7 @@ def vocab_drift(
     counts = (
         toks.groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     totals = counts.groupBy("source").agg(F.sum("c").alias("total"))
     shares = (
@@ -678,7 +679,7 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     doc_tf = (
         occ.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf_doc"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     corpus_tf = doc_tf.groupBy("term").agg(F.sum("tf_doc").alias("tf"))
     total = corpus_tf.agg(F.sum("tf").alias("total"))
@@ -756,7 +757,7 @@ def bigram_logprob(documents: DataFrame) -> DataFrame:
     doc_tf = (
         occ.groupBy("doc_id", "gram", "w1")
         .agg(F.count(F.lit(1)).alias("tf_doc"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     c2 = doc_tf.groupBy("gram").agg(F.sum("tf_doc").alias("c2"))
     c1 = doc_tf.groupBy("w1").agg(F.sum("tf_doc").alias("c1"))
@@ -823,11 +824,11 @@ def source_divergence(documents: DataFrame, top_v: int = 2000) -> DataFrame:
     # corpus explode+agg+rank re-runs up to five times
     kept = counts.withColumn("rnk", F.row_number().over(w)).filter(
         F.col("rnk") <= top_v
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     totals = kept.groupBy("source").agg(F.sum("c").alias("tot"))
     probs = kept.join(totals, "source").select(
         "source", "term", (F.col("c").cast("double") / F.col("tot")).alias("p")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     a = probs.select(
         F.col("source").alias("source_a"),
         "term",
@@ -965,7 +966,7 @@ def token_budget_sample(
     d = (
         documents.select("doc_id", "lang")
         .join(q, "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     if n_buckets < 2:
         # degenerate opt-out: one bucket == the naive per-language
@@ -987,7 +988,7 @@ def token_budget_sample(
             F.size(F.filter("_cuts", lambda c: c > F.col("quality"))),
         )
     # b feeds the within-bucket cumsum AND the offset aggregate
-    b = b.localCheckpoint(eager=False)
+    b = local_checkpoint(b, eager=False)
     wb = (
         Window.partitionBy("lang", "_b")
         .orderBy(F.col("quality").desc(), "doc_id")
@@ -1115,7 +1116,7 @@ def _dsir_scored(
         )
         # TWO consumers (doc_b + b_stats) — pin the explode or the
         # "one token explode" claim above is false at execution time
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     doc_b = occ.groupBy("doc_id", "bucket").agg(
         F.count(F.lit(1)).alias("tf")
@@ -1125,7 +1126,7 @@ def _dsir_scored(
     b_stats = occ.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("raw_n"),
         F.count(F.when(F.col("source") == target_source, 1)).alias("tgt_n"),
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     totals = b_stats.agg(
         F.sum("raw_n").alias("raw_tot"), F.sum("tgt_n").alias("tgt_tot")
     )
@@ -1188,7 +1189,7 @@ def dsir_model(
     b_stats = occ.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("raw_n"),
         F.count(F.when(F.col("source") == target_source, 1)).alias("tgt_n"),
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     totals = b_stats.agg(
         F.sum("raw_n").alias("raw_tot"), F.sum("tgt_n").alias("tgt_tot")
     )
@@ -1337,7 +1338,7 @@ def corpus_prep_v2(
             "doc_id",
         )
         .withColumn("n_chars", F.length("text"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     gated = filter_pipeline(docs2).filter(F.col("keep")).select("doc_id")
     surv = docs2.join(gated, "doc_id", "left_semi")
@@ -1509,7 +1510,7 @@ def perplexity_bucket_mix(
     # agg); checkpoint so the text scan + token count runs once
     toks = documents.select(
         "doc_id", token_count_expr("text").alias("n_tokens")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     joined = scored.join(toks, "doc_id")
     if exact:
         w = Window.orderBy("bits_per_token", "doc_id")
@@ -1517,7 +1518,7 @@ def perplexity_bucket_mix(
     else:
         # two consumers in the sketch path (cuts agg + bucket
         # projection) — materialize the scored join once
-        joined = joined.localCheckpoint(eager=False)
+        joined = local_checkpoint(joined, eager=False)
         fr = ", ".join(str(i / 10) for i in range(1, 10))
         cuts = joined.agg(
             F.expr(f"percentile_approx(bits_per_token, array({fr}))").alias(
@@ -1584,7 +1585,7 @@ def pmi_terms(
     pres = documents.select(
         "doc_id",
         F.explode(F.array_distinct(tokens_expr("text"))).alias("term"),
-    ).filter(F.col("term") != "").localCheckpoint(eager=False)
+    ).filter(F.col("term") != "").transform(local_checkpoint, eager=False)
     # pres is raw-scale (one row per doc x distinct term) but feeds
     # BOTH the df aggregate and the pv join — the pin halves the
     # dominant tokenize+explode stage and MEASURED 0.78x median-of-5
@@ -1761,7 +1762,7 @@ def hash_embed(
             )
             .groupBy("doc_id", "dim_idx")
             .agg(F.sum("tf").cast("bigint").alias("tf"))
-            .localCheckpoint(eager=False)
+            .transform(local_checkpoint, eager=False)
         )
     else:
         occ = documents.select(
@@ -1771,7 +1772,7 @@ def hash_embed(
             "doc_id", (h.cast("bigint") % dim).alias("dim_idx")
         ).groupBy("doc_id", "dim_idx").agg(
             F.count(F.lit(1)).alias("tf")
-        ).localCheckpoint(eager=False)
+        ).transform(local_checkpoint, eager=False)
     norms = tb.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("_nrm")
     )
@@ -1851,7 +1852,6 @@ def corpus_drop_pipeline(
     dsir_model: DataFrame,
     min_log_weight: float = 0.0,
     budget: int = 512,
-    persisted_frames: list | None = None,
 ) -> DataFrame:
     """The PRODUCTION daily-drop shape: everything ``corpus_prep_v2``
     does, but against PERSISTED state so a day's batch costs
@@ -1876,9 +1876,9 @@ def corpus_drop_pipeline(
     from .packing import pack_bins_bfd
     from .textstats import filter_pipeline
 
-    dup = dedup_against_index(
-        new_docs, index_prefix, persisted_frames=persisted_frames
-    ).select("doc_id", "dup_of", "is_near_dup")
+    dup = dedup_against_index(new_docs, index_prefix).select(
+        "doc_id", "dup_of", "is_near_dup"
+    )
     gate = filter_pipeline(new_docs).select(
         "doc_id", F.col("keep").alias("gate_keep"), "reason"
     )
@@ -2042,7 +2042,7 @@ def bm25_search(
     else:
         tf = (
             _term_freq(documents)
-            .localCheckpoint(eager=False)
+            .transform(local_checkpoint, eager=False)
         )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     # df is only consumed for QUERY terms — pre-filtering on the
@@ -2140,7 +2140,7 @@ def hybrid_search(
     # exchange). Bucket counts from the tf frame are the same
     # integers the per-occurrence fold produced, so scores, ranks and
     # the fused output are unchanged.
-    tf = _term_freq(documents).localCheckpoint(eager=False)
+    tf = _term_freq(documents).transform(local_checkpoint, eager=False)
     lex = bm25_search(
         documents,
         queries=sample_queries(documents, every=every, doc_ids=query_ids),
@@ -2327,8 +2327,6 @@ def split_leakage_near(
     verify (split depends only on the ids), so the surviving pairs,
     and therefore every count, are identical to verifying first.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from .dedup import _band_candidates, _band_frame, _jaccard_verify_pairs
 
     h = _split_bucket()
@@ -2341,7 +2339,7 @@ def split_leakage_near(
         return _split_assign(_split_bucket(idcol), train_pct, val_pct)
 
     sh, bands = _band_frame(documents, "doc_id")
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
+    bands = pin(bands)
     cand = (
         _band_candidates(bands)
         .select(
@@ -2413,7 +2411,7 @@ def zipf_fit(documents: DataFrame, top_v: int = 500) -> DataFrame:
     # multi-consumer convention; r12 review find)
     counts = occ.groupBy("source", "term").agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     w = Window.partitionBy("source").orderBy(F.col("c").desc(), F.col("term"))
     vocab = counts.groupBy("source").agg(
         F.count(F.lit(1)).alias("vocab_size")

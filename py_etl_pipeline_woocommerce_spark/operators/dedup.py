@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.frames import local_checkpoint, pin, release
 from ..functions.text import md5_hex, norm_text, tokens_expr, word_shingles
 
 SHINGLE_N = 3
@@ -186,7 +187,6 @@ def _jaccard_verify_pairs(
 def ngram_jaccard_pairs(
     documents: DataFrame,
     threshold: float = 0.5,
-    persisted_frames: list | None = None,
     _shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by word-shingle Jaccard ≥ threshold (exact).
@@ -206,9 +206,6 @@ def ngram_jaccard_pairs(
     linear-ish in corpus size instead of quadratic per lang block —
     the 100 TB-safe EXACT path next to the approximate MinHash one.
 
-    Pass ``persisted_frames=[]`` to receive the internally persisted
-    shingle frame and unpersist it after materializing the result
-    (repeat callers would otherwise pin one frame per invocation).
     ``_shingles`` injects an externally persisted ``_shingle_sets``
     frame (the dedup_audit seam — the audit's exact and LSH sides
     share ONE corpus tokenize+shingle scan; the injector owns the
@@ -220,10 +217,8 @@ def ngram_jaccard_pairs(
         s = (
             _shingle_sets(documents, nonempty=True)  # empty sets pair with nothing
             .withColumn("n_sh", F.size("shingles"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .transform(pin)
         )
-        if persisted_frames is not None:
-            persisted_frames.append(s)
     cand = _prefix_filter_candidates(s, threshold)
     return _jaccard_verify_pairs(cand, s, threshold)
 
@@ -365,7 +360,6 @@ def _signature_from_shingles(s: DataFrame) -> DataFrame:
 def minhash_lsh_pairs(
     documents: DataFrame,
     threshold: float = 0.5,
-    persisted_frames: list | None = None,
     _shingles: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified by true Jaccard.
@@ -380,20 +374,13 @@ def minhash_lsh_pairs(
     The shingle table and the compact band table are persisted
     (MEMORY_AND_DISK, spills at scale): both are consumed by two
     downstream branches, and without a persist Spark re-tokenizes the
-    full corpus once per branch — the dominant cost. Pass
-    ``persisted_frames=[]`` to receive both and unpersist after
-    materializing (repeat callers would otherwise pin two frames per
-    invocation).
+    full corpus once per branch — the dominant cost.
     """
     # ONE band-key construction for every LSH consumer (_band_frame
     # also feeds the incremental and stored-index paths — a format
     # drift here would silently break index compatibility)
     sh, bands = _band_frame(documents, "doc_id", _shingles=_shingles)
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_frames is not None:
-        # an injected shingle frame belongs to the injector — only
-        # hand back the frames this call persisted itself
-        persisted_frames += [bands] if _shingles is not None else [sh, bands]
+    bands = pin(bands)
     cand = _band_candidates(bands)
     return _jaccard_verify_pairs(cand, sh, threshold)
 
@@ -468,7 +455,6 @@ def simhash_pairs(
     documents: DataFrame,
     max_hamming: int = 3,
     bits: int = 32,
-    persisted_frames: list | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: hamming(simhash) ≤ max_hamming.
 
@@ -479,11 +465,6 @@ def simhash_pairs(
     default; band widths are the near-equal integer split of
     ``bits``). Exact hamming verification follows. Same
     join-don't-cross-join shape as MinHash LSH.
-
-    Pass ``persisted_frames=[]`` to receive the internally persisted
-    fingerprint frame and unpersist it after materializing the
-    result (repeat callers would otherwise pin one frame per
-    invocation).
     """
     n_bands = max_hamming + 1
     if n_bands > bits:
@@ -492,9 +473,7 @@ def simhash_pairs(
             f"fingerprint has only {bits} bits"
         )
     bounds = [i * bits // n_bands for i in range(n_bands + 1)]
-    sim = _simhash_bits(documents, bits).persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_frames is not None:
-        persisted_frames.append(sim)
+    sim = pin(_simhash_bits(documents, bits))
     bands = sim.select(
         "doc_id",
         F.posexplode(
@@ -561,13 +540,12 @@ def dedup_clusters(
     rounds of Kiveris et al. "Connected Components in MapReduce" —
     same join shape, logarithmic rounds.
     """
-    _own_frames: list = []
     if pairs is None:
-        pairs = minhash_lsh_pairs(documents, persisted_frames=_own_frames)
+        pairs = minhash_lsh_pairs(documents)
     edges = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-    edges = edges.persist()
+    edges = pin(edges, StorageLevel.MEMORY_AND_DISK_DESER)
     # Only vertices that touch a near-dup edge can ever change label;
     # the (overwhelming) singleton majority keeps cluster_id = doc_id.
     # Running the loop on the active set alone shrinks every per-round
@@ -585,7 +563,7 @@ def dedup_clusters(
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
         .coalesce(par)
-        .localCheckpoint(eager=True)
+        .transform(local_checkpoint)
     )
     # pre-assigned so max_iter <= 0 hits the non-convergence refusal
     # below instead of an UnboundLocalError (r12 review find); -1
@@ -614,19 +592,13 @@ def dedup_clusters(
                 ).alias("_changed"),
             )
             .coalesce(par)
-            .localCheckpoint(eager=True)
+            .transform(local_checkpoint)
         )
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")
         if changed == 0:
             break
-    edges.unpersist()
-    # labels were eagerly checkpointed every round, so nothing
-    # downstream re-reads the pair plan — release the minhash frames
-    # minhash_lsh_pairs persisted internally (a repeat caller would
-    # otherwise pin two corpus-scale frames per invocation)
-    for f in _own_frames:
-        f.unpersist()
+    release(edges)
     if changed != 0:
         # same refusal as dedup_clusters_star: labels that stopped
         # mid-propagation split one component into several clusters —
@@ -667,9 +639,8 @@ def dedup_clusters_star(
     no driver-side data. Per-round ``localCheckpoint`` truncates
     lineage exactly as in ``dedup_clusters``.
     """
-    _own_frames: list = []
     if pairs is None:
-        pairs = minhash_lsh_pairs(documents, persisted_frames=_own_frames)
+        pairs = minhash_lsh_pairs(documents)
     # canonical (hi, lo): hi > lo
     par = documents.sparkSession.sparkContext.defaultParallelism
     E = (
@@ -680,12 +651,8 @@ def dedup_clusters_star(
         .filter(F.col("hi") != F.col("lo"))
         .distinct()
         .coalesce(par)
-        .localCheckpoint(eager=True)
+        .transform(local_checkpoint)
     )
-    # E is eagerly checkpointed — the pair plan is never re-read;
-    # release the frames minhash_lsh_pairs persisted internally
-    for f in _own_frames:
-        f.unpersist()
 
     def signature(e: DataFrame) -> tuple[int, int]:
         # bit_xor: order-insensitive and overflow-free under ANSI mode
@@ -727,7 +694,7 @@ def dedup_clusters_star(
         part2 = m2.select(F.col("src").alias("hi"), F.col("mn").alias("lo"))
         # coalesce before checkpoint: see dedup_clusters (task overhead
         # of near-empty default-conf partitions dominates otherwise)
-        E = part1.union(part2).distinct().coalesce(par).localCheckpoint(eager=True)
+        E = part1.union(part2).distinct().coalesce(par).transform(local_checkpoint)
         new_sig = signature(E)
         if new_sig == sig:
             converged = True
@@ -817,7 +784,7 @@ def _band_frame(docs: DataFrame, id_alias: str, _shingles=None):
         sh = _shingles.select(*keep)
     else:
         sh = _shingle_sets(docs, nonempty=True).select("doc_id", "shingles")
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+        sh = pin(sh)
     sig = _signature_from_shingles(sh)
     bands = sig.select(
         F.col("doc_id").alias(id_alias),
@@ -888,7 +855,6 @@ def dedup_incremental_near(
     new_docs: DataFrame,
     existing: DataFrame | None = None,
     threshold: float = 0.5,
-    persisted_frames: list | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup: annotate a new batch with its best
     near-duplicate in the already-ingested corpus — the daily-drop
@@ -907,12 +873,6 @@ def dedup_incremental_near(
     When ``existing`` is None, a deterministic self-contained split
     makes the driver query: doc_id % 10 == 0 plays the incoming
     batch, the rest the ingested corpus.
-
-    Pass ``persisted_frames=[]`` to receive the internally persisted
-    shingle frames; unpersist them once the result has been
-    materialized (a repeated caller — e.g. a foreachBatch body —
-    otherwise accumulates one pinned frame per invocation until the
-    ContextCleaner happens to GC the reference).
     """
     if existing is None:
         existing = new_docs.filter(F.col("doc_id") % 10 != 0)
@@ -920,8 +880,6 @@ def dedup_incremental_near(
 
     sh_c, bands_c = _band_frame(existing, "dup_of")
     sh_b, bands_b = _band_frame(new_docs, "doc_id")
-    if persisted_frames is not None:
-        persisted_frames += [sh_c, sh_b]
     # no F.broadcast hint: a drop-sized batch index is broadcast by
     # AQE's runtime sizing anyway, while a forced hint on a LARGE
     # batch (the existing=None split makes it 10% of the corpus)
@@ -954,31 +912,23 @@ def write_lsh_index(documents: DataFrame, prefix: str, n_buckets: int = 32) -> N
     sh, bands = _band_frame(documents, "doc_id")
     write_bucketed(bands, f"{prefix}_bands", ["band_hash"], n_buckets=n_buckets)
     write_bucketed(sh, f"{prefix}_shingles", ["doc_id"], n_buckets=n_buckets)
-    sh.unpersist()
+    release(sh)
 
 
 def dedup_against_index(
     new_docs: DataFrame,
     prefix: str,
     threshold: float = 0.5,
-    persisted_frames: list | None = None,
 ) -> DataFrame:
     """Annotate a new batch against a stored LSH index (see
     ``write_lsh_index``) — same output contract as
     ``dedup_incremental_near`` but the corpus side comes from the
     bucketed tables, so the per-drop cost is O(batch), not O(corpus).
-
-    Pass ``persisted_frames=[]`` and unpersist its contents after
-    materializing the result — essential for long-running streams
-    that call this per micro-batch (see
-    ``streaming.pipeline.run_stream_dedup_against_index``).
     """
     spark = new_docs.sparkSession
     bands_c = spark.table(f"{prefix}_bands").withColumnRenamed("doc_id", "dup_of")
     sh_c = spark.table(f"{prefix}_shingles")
     sh_b, bands_b = _band_frame(new_docs, "doc_id")
-    if persisted_frames is not None:
-        persisted_frames.append(sh_b)
     cand = (
         bands_c.join(bands_b, ["band", "band_hash"])
         .select("doc_id", "dup_of")
@@ -990,7 +940,6 @@ def dedup_against_index(
 def containment_pairs(
     documents: DataFrame,
     threshold: float = 0.8,
-    persisted_frames: list | None = None,
 ) -> DataFrame:
     """Directional near-dup pairs by shingle CONTAINMENT:
     C(A→B) = |A∩B| / |A| ≥ threshold — "most of A appears inside B".
@@ -1020,13 +969,8 @@ def containment_pairs(
     s = (
         _shingle_sets(documents, nonempty=True, with_hash=True)
         .withColumn("n_sh", F.size("shingles"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(pin)
     )
-    # Same escape hatch as dedup_incremental_near: repeated callers
-    # pass a list to unpersist after materializing the result —
-    # otherwise each invocation pins one corpus-sized frame.
-    if persisted_frames is not None:
-        persisted_frames.append(s)
     prefix_len = (
         F.col("n_sh")
         - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int")
@@ -1203,7 +1147,7 @@ def strip_repeated_spans(
     base = (
         _spread(documents)
         .select("doc_id", tokens_expr("text").alias("tk"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     spans = repeated_spans(documents, k=k, min_count=min_count, _toks=base)
     covered = spans.select(
@@ -1245,7 +1189,6 @@ def strip_repeated_spans(
 def dedup_audit(
     documents: DataFrame,
     threshold: float = 0.5,
-    persisted_frames: list | None = None,
     sample_frac: float | None = None,
     seed: int = 42,
 ) -> DataFrame:
@@ -1279,12 +1222,6 @@ def dedup_audit(
     audits everything.
     """
     if sample_frac is not None:
-        if persisted_frames is not None:
-            raise ValueError(
-                "sample_frac resamples the document universe, which a "
-                "caller-persisted shingle frame would not reflect — "
-                "pass one or the other"
-            )
         m = 1_000_000
         documents = documents.filter(
             F.pmod(F.xxhash64("doc_id", F.lit(seed)), F.lit(m))
@@ -1297,11 +1234,7 @@ def dedup_audit(
     # image into the SAME persisted frame: the prefix-filter side's
     # total order and the minhash side's signature family both
     # consume it, so every shingle is hashed once, not once per side.
-    shared = _shingle_sets(documents, nonempty=True, with_hash=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if persisted_frames is not None:
-        persisted_frames.append(shared)
+    shared = pin(_shingle_sets(documents, nonempty=True, with_hash=True))
     # ONE O(|A|+|B|) exact-Jaccard verify for BOTH sides (r13): the
     # exact and LSH candidate sets overlap heavily (banding candidates
     # are near-dups the prefix filter also finds), and each side
@@ -1323,9 +1256,7 @@ def dedup_audit(
     s = shared.withColumn("n_sh", F.size("shingles"))
     exact_cand = _prefix_filter_candidates(s, threshold)
     _sh, bands = _band_frame(documents, "doc_id", _shingles=shared)
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted_frames is not None:
-        persisted_frames.append(bands)
+    bands = pin(bands)
     # lang attach from the SHARED frame (every candidate doc has
     # shingle rows by construction, so the lookup is total and the
     # values identical to the documents table's)
@@ -1548,7 +1479,7 @@ def strip_common_lines(documents: DataFrame, min_df: int = 2) -> DataFrame:
     # three consumers (frequency agg, anti-join probe, per-doc line
     # totals) — pin the exploded frame or Catalyst re-runs the
     # explode per consumer
-    lines = _doc_lines(documents).localCheckpoint(eager=False)
+    lines = _doc_lines(documents).transform(local_checkpoint, eager=False)
     common = (
         lines.groupBy("line")
         .agg(F.countDistinct("doc_id").alias("_df"))
@@ -1845,7 +1776,7 @@ def compact_line_index(
             F.sum("doc_freq").cast("long").alias("doc_freq"),
             F.sum("n_occurrences").cast("long").alias("n_occurrences"),
         )
-        .localCheckpoint(eager=True)
+        .transform(local_checkpoint)
     )
     from ..sources.bucketing import write_bucketed
 
@@ -1886,7 +1817,7 @@ def strip_against_line_index(
     lines = (
         _doc_lines(new_docs)
         .withColumn("line_hash", F.md5("line"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     if lines_out is not None:
         # hand the checkpointed frame to the caller so a following

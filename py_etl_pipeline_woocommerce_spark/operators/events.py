@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint
 from ..functions.money import dec_money
 from ..functions.timeutil import TS_US_FLOOR as _TS_US_FLOOR
 
@@ -339,7 +340,7 @@ def user_overlap(events: DataFrame, exact: bool = False) -> DataFrame:
             events.filter(F.col("user_id").isNotNull())
             .select("user_id", "event_type")
             .distinct()
-            .localCheckpoint(eager=False)
+            .transform(local_checkpoint, eager=False)
         )
         sizes = ut.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n")
@@ -386,7 +387,7 @@ def user_overlap(events: DataFrame, exact: bool = False) -> DataFrame:
     sizes = (
         e.groupBy("event_type")
         .agg(F.approx_count_distinct("user_id").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     types = sizes.select("event_type")
     pairs = (

@@ -18,8 +18,11 @@ driver-side data beyond the node count (a scalar) ever moves.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.frames import local_checkpoint, pin, release
 
 
 def copurchase_edges(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
@@ -105,13 +108,13 @@ def pagerank(
     deg = (
         sym.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
-    out_edges = sym.join(deg, "src").persist()
+    out_edges = pin(sym.join(deg, "src"), StorageLevel.MEMORY_AND_DISK_DESER)
     n = deg.count()  # scalar: the only driver-side value
     spark = edges.sparkSession
     if n == 0:  # empty graph: no nodes, so no 1/n mass to spread
-        out_edges.unpersist()
+        release(out_edges)
         return edges.select(F.col("src").alias("node")).limit(0).withColumn(
             "rank", F.lit(0.0)
         )
@@ -119,7 +122,7 @@ def pagerank(
     ranks = (
         deg.select("src", F.lit(1.0 / n).alias("rank"))
         .coalesce(par)
-        .localCheckpoint(eager=True)
+        .transform(local_checkpoint)
     )
     base = 1.0 - damping
     for i in range(n_iter):
@@ -135,8 +138,8 @@ def pagerank(
             .coalesce(par)
         )
         if (i + 1) % ckpt_every == 0 or i == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    out_edges.unpersist()
+            ranks = local_checkpoint(ranks)
+    release(out_edges)
     return ranks.select(F.col("src").alias("node"), "rank")
 
 

@@ -18,6 +18,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint
 from ..functions.logging import get_logger
 
 _LOG = get_logger(__name__)
@@ -568,7 +569,7 @@ def ivf_centroids(
             )
             # truncate per-round lineage AND serve the two consumers
             # of the final frame (assignment + query probes)
-            .localCheckpoint(eager=False)
+            .transform(local_checkpoint, eager=False)
         )
     return cents
 
@@ -936,7 +937,7 @@ def ann_quantized_topk(
     # the _dim_ranges aggregate + full-corpus quantization run twice
     coded = e.join(F.broadcast(ranges)).select(
         "vec_id", F.transform("emb", _code).alias("codes")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     q = coded.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("codes").alias("q_codes")
     )
@@ -992,7 +993,7 @@ def centroid_cell_pairs(
         # Measured flat locally (8.7 vs 9.0 s median at sf0.1, r9) —
         # kept for the halved fit+assign at SF (deep subtree, unlike
         # a cheap filtered rescan).
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     B = n_blocks
     left = assigned.select(
         F.col("centroid_id").alias("cell"),
@@ -1282,7 +1283,7 @@ def cluster_stats(
             F.coalesce("inertia", F.lit(0.0)).alias("inertia"),
             "mean_dist",
         )
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     total = per_cell.agg(F.sum("n_vectors").alias("_total"))
     return per_cell.join(F.broadcast(total)).select(
@@ -1368,11 +1369,11 @@ def embedding_outliers(
     # (r12 review find)
     with_b = scored.withColumn(
         "_b", F.floor(F.col("_dist") * F.lit(1000.0)).cast("bigint")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     counts = (
         with_b.groupBy("_b")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     wcum = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
     hist = counts.select(
@@ -1535,7 +1536,7 @@ def ann_tune_geometry(
     exact = (
         ann_topk(embeddings, n_queries, k)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     per_q = exact.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_exact")

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint
+
 SALT_COL = "__salt"
 
 
@@ -92,7 +94,7 @@ def hot_keys(df: DataFrame, key_col: str, topk: int = 20) -> DataFrame:
     counts = (
         df.groupBy(F.col(key_col).cast("string").alias("key_value"))
         .agg(F.count(F.lit(1)).alias("n_rows"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     totals = counts.agg(
         F.sum("n_rows").alias("_total"),
@@ -210,7 +212,7 @@ def hot_keys_approx(
             F.col(key_col).isNull().alias("_isnull"),
         )
         .mapInPandas(mg, schema)
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     merged = (
         summaries.filter(F.col("is_null").isNotNull())

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint
 from ..functions.timeutil import TS_US_FLOOR
 
 from ..functions.stats import pctl_fn
@@ -376,7 +377,7 @@ def _day_grid(events: DataFrame):
         F.coalesce(
             F.sum(_money_value()), F.lit(0).cast("decimal(18,2)")
         ).alias("_val"),
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     bounds = daily.agg(
         F.min("day_idx").alias("_lo"), F.max("day_idx").alias("_hi")
     )
@@ -437,7 +438,7 @@ def rolling_active_users(events: DataFrame, window_days: int = 7) -> DataFrame:
         # distinct frame — the dayn_retention convention; measured
         # flat locally (0.88 vs 0.90 median-of-5, r9) and halves the
         # distinct shuffle at SF
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     contrib = du.select(
         F.explode(
@@ -1016,7 +1017,7 @@ def event_mix_drift(
         F.sum(F.lit(1) - before).alias("n_after"),
     )
     # two consumers (totals + the share join) — pin the types-row agg
-    per_type = per_type.localCheckpoint(eager=False)
+    per_type = local_checkpoint(per_type, eager=False)
     totals = per_type.agg(
         F.sum("n_before").alias("_tb"), F.sum("n_after").alias("_ta")
     )
@@ -1161,7 +1162,7 @@ def seasonal_anomaly(
     # (type, day) aggregate or the raw scan re-runs per consumer
     daily = daily.withColumn(
         "weekday", F.expr("(day_idx + 3) % 7")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     base = daily.groupBy("event_type", "weekday").agg(
         F.sum("n_events").alias("_tot"), F.count(F.lit(1)).alias("_days")
     )
@@ -1399,7 +1400,7 @@ def ks_drift(
     per_value = e.groupBy("event_type", "value").agg(
         F.sum(F.when(F.col("t_us") < cut_us, 1).otherwise(0)).alias("d_b"),
         F.sum(F.when(F.col("t_us") < cut_us, 0).otherwise(1)).alias("d_a"),
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     totals = per_value.groupBy("event_type").agg(
         F.sum("d_b").alias("n_before"), F.sum("d_a").alias("n_after")
     )
@@ -1477,7 +1478,7 @@ def dayn_retention(
     # or the distinct scan re-runs per consumer
     days = e.select(
         "user_id", _day_idx_col().alias("day_idx")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(local_checkpoint, eager=False)
     firsts = days.groupBy("user_id").agg(F.min("day_idx").alias("first_day"))
     max_day = days.agg(F.max("day_idx").alias("max_day"))
     probes = (
@@ -1562,7 +1563,7 @@ def cusum_changepoint(events: DataFrame) -> DataFrame:
         .agg(F.sum(_money_value()).cast("decimal(28,2)").alias("x"))
         # two consumers (totals + the cumulative select) — pin the
         # aggregated frame or the raw scan re-runs per consumer
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     totals = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("decimal(10,0)").alias("n"),

@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint
 from ..functions.text import md5_hex, norm_text, token_count_expr, tokens_expr, word_shingles
 
 #: Marker words per language for the heuristic classifier. Honest
@@ -602,7 +603,7 @@ def lang_id_nb(documents: DataFrame, top_v: int = 4096) -> DataFrame:
     tf = (
         occ.groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     # lg itself has THREE consumers (vocab, totals, matrix) — without
     # a checkpoint each re-runs the corpus-sized tf⋈lang join + agg.
@@ -622,7 +623,7 @@ def lang_id_nb(documents: DataFrame, top_v: int = 4096) -> DataFrame:
         )
         .groupBy("lang", "gram")
         .agg(F.sum("tf").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     # distributed TakeOrdered vocab cut (trigram vocabulary is
     # corpus-sized — a rank window over it would be a one-task sort)
@@ -632,7 +633,7 @@ def lang_id_nb(documents: DataFrame, top_v: int = 4096) -> DataFrame:
         .orderBy(F.col("vc").desc(), "gram")
         .limit(top_v)
         .select("gram")
-        .localCheckpoint(eager=False)  # 3 consumers, ≤top_v rows
+        .transform(local_checkpoint, eager=False)  # 3 consumers, ≤top_v rows
     )
     v_size = vocab.agg(F.count(F.lit(1)).alias("v_size"))
     totals = (
@@ -652,7 +653,7 @@ def lang_id_nb(documents: DataFrame, top_v: int = 4096) -> DataFrame:
         # |langs|-row aggregate — pin or the vocab join + per-lang
         # aggregate re-run per consumer (measured flat locally at
         # sf0.1, r9; the halved vocab join is the SF payoff)
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     matrix = (
         lg.join(vocab, "gram")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import frames
+from ..functions.frames import local_checkpoint
 from ..functions.timeutil import TS_US_FLOOR
 
 def _row_fingerprint(cols: list[str], prefix: str = "") -> "F.Column":
@@ -103,7 +105,7 @@ def scd2_apply(
     joined = (
         open_rows.withColumn("_fp", fp)
         .join(upd, key, "full_outer")
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     # rows whose key has an update with different tracked values
     changed = F.col("_new_fp").isNotNull() & (
@@ -487,11 +489,11 @@ def merge_rollup_store(
 
     Used directly for batch drops and as the body of the streaming
     ``RollupMergeSink`` — the continuous aggregate is maintained by
-    the identical code under both execution models. Every frame a
-    merge pins is released before it returns, so a long-running
-    stream does not accumulate pinned RDDs one micro-batch at a time.
+    the identical code under both execution models. A merge runs in
+    its own ``frames.scope()``, so every frame it pins is released
+    before it returns and a long-running stream does not accumulate
+    pinned RDDs one micro-batch at a time.
     """
-    from ..functions.frames import release
     from ..functions.fsutil import fs_exists, fs_touch
 
     # The stored measure type is PINNED at DECIMAL(30,2): Spark's sum
@@ -527,9 +529,9 @@ def merge_rollup_store(
             return
     # TWO consumers (the month list collect + the merge/write) — pin
     # or the batch aggregation runs twice per fold
-    batch = _rollup_batch_frame(batch_events).localCheckpoint(eager=False)
-    merged = batch
-    try:
+    with frames.scope():
+        batch = local_checkpoint(_rollup_batch_frame(batch_events), eager=False)
+        merged = batch
         if _store_has_months(spark, store_path):
             months = [
                 r[0] for r in batch.select("month").distinct().collect()
@@ -548,7 +550,7 @@ def merge_rollup_store(
                     F.sum("n_events").alias("n_events"),
                     F.sum("total_value_dec").cast(_dec).alias("total_value_dec"),
                 )
-                .localCheckpoint(eager=True)
+                .transform(local_checkpoint)
             )
         if batch_id is None:
             # direct (non-replayed) drops keep the one-step dynamic
@@ -566,12 +568,6 @@ def merge_rollup_store(
             )
             fs_touch(spark, marker)
             _promote_staged_months(spark, staged_dir, store_path)
-    finally:
-        # local checkpoints are out of unpersist()'s and clearCache()'s
-        # reach: free them here, on a crash exit as well
-        release(batch)
-        if merged is not batch:
-            release(merged)
 
 
 def _rollup_staged_dir(store_path: str, batch_id: int | None) -> str:
@@ -674,7 +670,7 @@ def cdc_apply(
             ),
         )
         # two consumers (touched + upserts) — pin the drop-sized net
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     touched = net.select(key).distinct()
     # no forced broadcast: `touched` is FEED-sized, and a backfill

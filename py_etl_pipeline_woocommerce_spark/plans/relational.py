@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_checkpoint
 from ..functions.stats import pctl_fn
 
 from ..catalog import load_table
@@ -262,7 +263,7 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic either way)
     rev = lineitem.groupBy("l_suppkey").agg(
         F.sum(disc_price()).alias("_rev_dec")
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     gmax = rev.agg(F.max("_rev_dec").alias("_max"))
     best = rev.join(F.broadcast(gmax)).filter(
         F.col("_rev_dec") == F.col("_max")
@@ -1108,7 +1109,7 @@ def rfm_segments(
         F.max(day).alias("_last_day"),
         F.count(F.lit(1)).alias("frequency"),
         F.sum(dec_money("o_totalprice")).alias("_spend"),
-    ).localCheckpoint(eager=False)
+    ).transform(local_checkpoint, eager=False)
     maxday = per_cust.agg(F.max("_last_day").alias("_corpus_last"))
     feats = per_cust.join(F.broadcast(maxday)).select(
         "cust_id",
@@ -1329,7 +1330,7 @@ def wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("week_idx")
         .agg(F.sum(dec_money("o_totalprice")).cast("double").alias("revenue"))
-        .localCheckpoint(eager=False)
+        .transform(local_checkpoint, eager=False)
     )
     spine = observed.agg(
         F.min("week_idx").alias("_lo"), F.max("week_idx").alias("_hi")

@@ -7,7 +7,7 @@ from_json normalize with the refunds applied inside the order row →
 category enrich (broadcast) → delete+insert upsert into a
 month-partitioned parquet warehouse → watermark advance.
 
-The raw extract is the only cached frame: it lands in bronze and
+The raw extract is the only pinned frame: it lands in bronze and
 feeds both facts, and the refund path needs no shuffle, join, window
 or cache of its own. Each drop is materialized once, at a size that
 fits it. Extract and transform stay lazy lineage until one job per
@@ -17,8 +17,10 @@ latest order date, the months it touches) and local-checkpoints it.
 The upserts and the watermark then read the checkpoint and the
 observed values, never re-planning the extract. Every month rewrite
 is materialized the same way, rebalanced by month, so a drop-sized
-month is written as one file. A run releases every checkpoint it
-made, on success and on failure alike.
+month is written as one file. A run is one ``frames.scope()``: it
+releases the pinned extract and both batch checkpoints on success and
+on failure alike. Each month rewrite opens its own scope, so its
+checkpoint is freed as soon as the month is written.
 """
 
 from __future__ import annotations
@@ -28,10 +30,12 @@ import shutil
 import time
 from datetime import datetime, timedelta
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.frames import checkpoint, release
+from ..functions import frames
+from ..functions.frames import checkpoint
 from ..functions.logging import get_logger
 from ..operators.upsert import upsert_df, upsert_partitioned_parquet
 from ..sources import rest
@@ -83,7 +87,6 @@ def build_facts(
     transport: rest.Transport,
     since_iso: str,
     warehouse_dir: str | None = None,
-    persisted_frames: list | None = None,
     before_iso: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Extract + transform since the watermark → (orders, items) with
@@ -93,17 +96,14 @@ def build_facts(
     Refunds arrive on each order row from the extract and are applied
     inside that row (``rest.orders_frame``/``rest.items_frame``).
     When ``warehouse_dir`` is given, the raw order JSON lands in
-    ``stg_orders_raw`` first; the raw frame is then the one cached
+    ``stg_orders_raw`` first; the raw frame is then the one pinned
     frame (so the paged API extract runs exactly once for landing +
-    parsing) and is appended to ``persisted_frames`` for the caller
-    to unpersist."""
+    parsing), released by the caller's ``frames.scope()``."""
     raw = rest.fetch_orders_since(
         spark, transport, since_iso, before_iso=before_iso
     )
     if warehouse_dir is not None:
-        raw = raw.persist()
-        if persisted_frames is not None:
-            persisted_frames.append(raw)
+        raw = frames.pin(raw, StorageLevel.MEMORY_AND_DISK_DESER)
         stage_raw_orders(raw, warehouse_dir)
     parsed = rest.parse_orders(raw)
     orders = _with_month(rest.orders_frame(parsed))
@@ -232,18 +232,16 @@ def _rewrite_months(table: DataFrame, path: str, months, transform) -> None:
     from ..functions.fsutil import fs_delete, fs_list_names
 
     spark = table.sparkSession
-    # the months present ride on the checkpoint job
-    out, seen = checkpoint(
-        transform(table.filter(_month_in(months))),
-        _months_metric(),
-        by=PARTITION_COL,
-    )
-    try:
+    with frames.scope():
+        # the months present ride on the checkpoint job
+        out, seen = checkpoint(
+            transform(table.filter(_month_in(months))),
+            _months_metric(),
+            by=PARTITION_COL,
+        )
         present = {m for (m,) in seen["months"]}
         if present:
             upsert_partitioned_parquet(out, path, PARTITION_COL)
-    finally:
-        release(out)
     for m in set(months) - present:
         # Hadoop-FS delete on the WAREHOUSE filesystem (a local rmtree
         # silently no-ops on hdfs/s3a), with the NULL month mapped to
@@ -375,16 +373,11 @@ def _incremental_run_once(
 ) -> dict:
     since = state.get_since()
     log.info("incremental run since=%s", since)
-    cleanup: list = []
-    checkpoints: list = []
-    try:
+    # released on BOTH exits, so a failed attempt doesn't leak pinned
+    # or checkpointed partitions into its retry
+    with frames.scope():
         orders, items = build_facts(
-            spark,
-            transport,
-            since,
-            warehouse_dir,
-            persisted_frames=cleanup,
-            before_iso=before_iso,
+            spark, transport, since, warehouse_dir, before_iso=before_iso
         )
         # one job materializes the orders batch and observes all the
         # run needs of it: its size, the watermark candidate, its months
@@ -394,11 +387,7 @@ def _incremental_run_once(
             F.max("order_date").alias("max_date"),
             _months_metric(),
         )
-        checkpoints.append(orders)
         items, seen_items = checkpoint(items, F.count(F.lit(1)).alias("n"))
-        checkpoints.append(items)
-        # both batches now hold everything the raw extract fed them
-        _unpersist(cleanup)
         n_orders, n_items = seen["n"], seen_items["n"]
         months = {m for (m,) in seen["months"]}
         log.info("extracted %d orders / %d items", n_orders, n_items)
@@ -428,20 +417,6 @@ def _incremental_run_once(
                 state.set_since(nxt)
                 log.info("watermark advanced to %s", nxt)
         return {"since": since, "orders": n_orders, "items": n_items}
-    finally:
-        # release on BOTH exits so a failed attempt doesn't leak
-        # cached partitions into its retry
-        _unpersist(cleanup)
-        for f in checkpoints:
-            release(f)
-
-
-def _unpersist(frames: list) -> None:
-    for f in frames:
-        try:
-            f.unpersist()
-        except Exception:  # pragma: no cover - best effort
-            pass
 
 
 def re_enrich_run(

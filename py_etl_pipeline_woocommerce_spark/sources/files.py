@@ -20,10 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.frames import in_scope, pin
+
 CORRUPT_COL = "_corrupt_record"
 
-# Paths already warned about by read_jsonl_quarantine's no-handle
-# branch (warn once per path, not per call).
+# Paths already warned about by read_jsonl_quarantine outside a
+# frames.scope() (warn once per path, not per call).
 _QUARANTINE_CACHED_PATHS: set[str] = set()
 
 
@@ -65,31 +67,26 @@ def read_jsonl_quarantine(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    persisted_frames: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """PERMISSIVE JSON-lines scan split into (good, quarantined) —
     the landing-zone pattern when upstream can't be trusted to be
     well-formed: good rows flow on, corrupt raw lines are preserved
     for triage instead of killing the job or vanishing.
 
-    Pass ``persisted_frames`` (a list) to receive the shared
-    materialized frame for deterministic release: call
-    ``f.unpersist()`` on it when both branches are consumed. Without
-    it the persisted scan stays in the session's cache until the
+    Call it inside ``frames.scope()`` and consume both branches there:
+    the scope releases the shared materialized frame on exit. Outside
+    a scope the persisted scan stays in the session's cache until the
     session ends — the documented cost of the SPARK-21610 unblock.
     Spark's CacheManager dedupes identical plans, so repeated calls
     over the SAME path reuse one entry; a long-lived loop reading a
-    NEW path per cycle (landing-zone ingestion) MUST pass
-    persisted_frames and unpersist per cycle or the cached parsed
-    frames accumulate unboundedly.
+    NEW path per cycle (landing-zone ingestion) MUST open a scope per
+    cycle or the cached parsed frames accumulate unboundedly.
     The materialization is ``persist(MEMORY_AND_DISK)``, NOT a
     ``localCheckpoint``: checkpoint blocks are non-recomputable, so
     on a real cluster one lost executor (spot nodes, dynamic
     allocation) would make BOTH branches permanently unreadable,
     while a persisted frame just recomputes from the files.
     """
-    from pyspark.storagelevel import StorageLevel
-
     with_corrupt = T.StructType(
         list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
     )
@@ -101,22 +98,20 @@ def read_jsonl_quarantine(
         # column alone (SPARK-21610); materializing the parsed frame
         # is the documented unblock — and both branches reuse the one
         # scan.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(pin)
     )
-    if persisted_frames is not None:
-        persisted_frames.append(raw)
-    elif path not in _QUARANTINE_CACHED_PATHS:
-        # Without a release handle this cache entry lives until the
-        # session ends; a per-path ingestion loop that forgets the
-        # handle accumulates one pinned frame per distinct path.
-        # Warn once per path so the leak is visible, not silent.
+    if not in_scope() and path not in _QUARANTINE_CACHED_PATHS:
+        # Outside a scope this cache entry lives until the session
+        # ends; a per-path ingestion loop without one accumulates one
+        # pinned frame per distinct path. Warn once per path so the
+        # leak is visible, not silent.
         _QUARANTINE_CACHED_PATHS.add(path)
         from ..functions.logging import get_logger
 
         get_logger(__name__).warning(
             "read_jsonl_quarantine(%s): caching parsed frame for the "
-            "session's lifetime; pass persisted_frames=[] and "
-            "unpersist() it after consuming both branches to release",
+            "session's lifetime; call it inside frames.scope() and "
+            "consume both branches there to release it",
             path,
         )
     good = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import scope
 from ..functions.timeutil import TS_US_FLOOR
 
 from ..functions.money import dec_money
@@ -176,17 +177,14 @@ def run_stream_dedup_against_index(
     sink = ForeachBatchUpserter(["doc_id"])
 
     def check_batch(batch_df: DataFrame, batch_id: int) -> None:
-        frames: list = []
-        flagged = dedup_against_index(
-            batch_df, index_prefix, threshold, persisted_frames=frames
-        )
-        # the sink's own __call__ does increment-then-merge — don't
-        # re-implement its bookkeeping here (r12 review find)
-        sink(flagged, batch_id)
-        # the sink collected the result; free the shingle frame now or
-        # a long-running stream pins one persisted frame per batch.
-        for f in frames:
-            f.unpersist()
+        # a scope per batch, opened on the callback's own thread: the
+        # sink collects the result inside it, and the exit frees the
+        # shingle frame, so a long-running stream pins none per batch
+        with scope():
+            flagged = dedup_against_index(batch_df, index_prefix, threshold)
+            # the sink's own __call__ does increment-then-merge — don't
+            # re-implement its bookkeeping here (r12 review find)
+            sink(flagged, batch_id)
 
     query = (
         stream.writeStream.outputMode("append")
@@ -244,30 +242,31 @@ def run_stream_line_strip(
     sink = ForeachBatchUpserter(["doc_id"])
 
     def strip_batch(batch_df: DataFrame, batch_id: int) -> None:
-        frames: list = []
-        # strip BEFORE folding: the batch's own cross-doc repeats are
-        # already counted by strip_against_line_index's batch_df term,
-        # so folding first would double-count them for this batch
-        sink(
-            strip_against_line_index(
-                batch_df, index_prefix, min_df, lines_out=frames
-            ),
-            batch_id,
-        )
-        if fold_into_index:
-            # fold the SAME checkpointed exploded frame the strip just
-            # consumed — no second explode+md5 of the drop's text; the
-            # n_buckets must match the store's spec (Spark rejects a
-            # mismatched append loudly, no silent bucket corruption).
-            # batch_id makes the fold idempotent under replay (marker
-            # checked/written inside write_line_partials)
-            write_line_partials(
-                frames[0], index_prefix, n_buckets=n_buckets,
-                batch_id=batch_id,
+        lines: list = []
+        # a scope per batch (the callback's own thread): its exit frees
+        # the batch's line checkpoint once both consumers wrote, so a
+        # long-running stream does not accumulate one per batch
+        with scope():
+            # strip BEFORE folding: the batch's own cross-doc repeats are
+            # already counted by strip_against_line_index's batch_df term,
+            # so folding first would double-count them for this batch
+            sink(
+                strip_against_line_index(
+                    batch_df, index_prefix, min_df, lines_out=lines
+                ),
+                batch_id,
             )
-        # drop the reference: the checkpoint blocks are GC-managed,
-        # and a long-running stream must not accumulate one per batch
-        frames.clear()
+            if fold_into_index:
+                # fold the SAME checkpointed exploded frame the strip just
+                # consumed — no second explode+md5 of the drop's text; the
+                # n_buckets must match the store's spec (Spark rejects a
+                # mismatched append loudly, no silent bucket corruption).
+                # batch_id makes the fold idempotent under replay (marker
+                # checked/written inside write_line_partials)
+                write_line_partials(
+                    lines[0], index_prefix, n_buckets=n_buckets,
+                    batch_id=batch_id,
+                )
 
     query = (
         stream.writeStream.outputMode("append")

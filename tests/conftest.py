@@ -22,6 +22,13 @@ def spark():
     yield s
 
 
+def pinned_ids(spark) -> set:
+    """Ids of the session's persistent RDDs. Compare them as sets, not
+    counts: the ContextCleaner frees older unreachable checkpoints on a
+    JVM GC, and that drop would hide a new pin in a net count."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -374,7 +374,7 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     state.set_since("2023-12-31T00:00:00")
     wh = str(tmp_path / "wh")
     sc = spark.sparkContext
-    pins = sc._jsc.getPersistentRDDs().size()
+    pins = set(sc._jsc.getPersistentRDDs().keySet())
     incremental_run(spark, transport, state, wh)
 
     fct = f"{wh}/fct_orders"
@@ -405,13 +405,13 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     assert {r["order_month"] for r in items.collect()} == {"2024-01", "2024-02"}
 
     # drop budget: each fact's rewritten month is ONE right-sized file,
-    # both runs released every frame they pinned (a collected
-    # leftover of an earlier test can only lower the count), and the
+    # both runs released every frame they pinned (no new persistent
+    # RDD id; ids, not counts, so a freed leftover hides nothing), and the
     # drop runs at most the jobs the materialize-once flow with
     # in-row refunds needs (26 measured)
     for fact in ("fct_orders", "fct_order_items"):
         assert len(_file_states(f"{wh}/{fact}/order_month=2024-02")) == 1
-    assert sc._jsc.getPersistentRDDs().size() <= pins
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= pins
     assert jobs <= 26, jobs
 
 

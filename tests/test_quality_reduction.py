@@ -9,6 +9,7 @@ import math
 
 import numpy as np
 import pytest
+from conftest import pinned_ids
 from pyspark.sql import functions as F
 
 from py_etl_pipeline_woocommerce_spark.operators import corpus, reduction
@@ -636,8 +637,6 @@ def test_dedup_audit_empty_corpus_recall_one(spark):
 
 
 def test_dedup_audit_sampled_mode(spark, sf_dir):
-    import pytest as _pytest
-
     from py_etl_pipeline_woocommerce_spark.catalog import load_table
     from py_etl_pipeline_woocommerce_spark.operators.dedup import (
         dedup_audit,
@@ -654,9 +653,6 @@ def test_dedup_audit_sampled_mode(spark, sf_dir):
     assert a.n_exact_pairs <= full.n_exact_pairs
     assert a.n_hits == a.n_lsh_pairs  # precision-1 subset holds
     assert 0.0 <= a.recall <= 1.0
-    # sampling is incompatible with caller-persisted shingle frames
-    with _pytest.raises(ValueError):
-        dedup_audit(docs, sample_frac=0.5, persisted_frames=[])
 
 
 # ------------------------------------------------------------------
@@ -700,7 +696,8 @@ def test_quality_percentile_normalizes_within_source(spark):
     assert sk[4].quality_pctile == 0.0
 
 
-def test_dedup_audit_persisted_frames_escape_hatch(spark):
+def test_dedup_audit_pins_released_by_scope(spark):
+    from py_etl_pipeline_woocommerce_spark.functions import frames
     from py_etl_pipeline_woocommerce_spark.operators.dedup import (
         dedup_audit,
     )
@@ -710,14 +707,13 @@ def test_dedup_audit_persisted_frames_escape_hatch(spark):
         [(1, "alpha beta gamma delta epsilon zeta", "en", "s"),
          (2, "alpha beta gamma delta epsilon eta", "en", "s")],
     )
-    frames = []
-    dedup_audit(docs, persisted_frames=frames).collect()
-    # ONE shared shingle frame (r12: both sides tokenize once) + the
-    # LSH band table
-    assert len(frames) == 2
-    for f in frames:
-        assert f.storageLevel.useMemory or f.storageLevel.useDisk
-        f.unpersist()
+    before = pinned_ids(spark)
+    with frames.scope():
+        dedup_audit(docs).collect()
+        # ONE shared shingle frame (r12: both sides tokenize once) +
+        # the LSH band table
+        assert len(pinned_ids(spark) - before) == 2
+    assert pinned_ids(spark) - before == set()
 
 
 # ------------------------------------------------------------------
@@ -790,23 +786,22 @@ def test_corpus_drop_pipeline_end_to_end(spark):
                 (102, "tiny", "en", "src0"),
             ],
         )
+        from py_etl_pipeline_woocommerce_spark.functions import frames
         from py_etl_pipeline_woocommerce_spark.operators.corpus import (
             corpus_drop_pipeline,
         )
 
-        frames = []
-        out = {
-            r.doc_id: r
-            for r in corpus_drop_pipeline(
-                batch,
-                "drop_test",
-                model,
-                min_log_weight=-1e9,
-                persisted_frames=frames,
-            ).collect()
-        }
-        for f in frames:
-            f.unpersist()
+        before = pinned_ids(spark)
+        with frames.scope():
+            out = {
+                r.doc_id: r
+                for r in corpus_drop_pipeline(
+                    batch, "drop_test", model, min_log_weight=-1e9
+                ).collect()
+            }
+            # the batch's shingle frame, pinned by dedup_against_index
+            assert len(pinned_ids(spark) - before) == 1
+        assert pinned_ids(spark) - before == set()
         assert out[100].is_near_dup and not out[100].selected
         assert out[100].dup_of == 0
         assert out[102].reason == "too_short" and not out[102].selected

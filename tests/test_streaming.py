@@ -491,14 +491,14 @@ def test_streaming_rollup_merge_matches_batch_store(spark, stream_dirs, tmp_path
     store_batch = str(tmp_path / "rollup_batch")
     all_events = spark.read.parquet(src)
     # the direct path releases what it pins, into an empty store and
-    # into an existing one (a collected leftover of an earlier test
-    # can only lower the count)
+    # into an existing one (no new persistent RDD id; ids, not counts,
+    # so a freed leftover of an earlier test hides nothing)
     jsc = spark.sparkContext._jsc
-    pins = jsc.getPersistentRDDs().size()
+    pins = set(jsc.getPersistentRDDs().keySet())
     merge_rollup_store(spark, store_batch, all_events.filter("event_id <= 3"))
-    assert jsc.getPersistentRDDs().size() <= pins
+    assert set(jsc.getPersistentRDDs().keySet()) <= pins
     merge_rollup_store(spark, store_batch, all_events.filter("event_id > 3"))
-    assert jsc.getPersistentRDDs().size() <= pins
+    assert set(jsc.getPersistentRDDs().keySet()) <= pins
 
     key = lambda r: (r["day_us"], r["event_type"])
     got = {key(r): r for r in spark.read.parquet(store_stream).collect()}

@@ -421,13 +421,14 @@ def test_rollup_store_staged_commit_survives_both_crash_windows(
         }
 
     # every merge releases the frames it pinned, on a crash exit too
-    # (a collected leftover of an earlier test can only lower the count)
+    # (no new persistent RDD id; ids, not counts, so a freed leftover
+    # of an earlier test hides nothing)
     jsc = spark.sparkContext._jsc
-    pins = jsc.getPersistentRDDs().size()
+    pins = set(jsc.getPersistentRDDs().keySet())
 
     wh.merge_rollup_store(spark, store, b0, batch_id=0)
     after_b0 = snapshot()
-    assert jsc.getPersistentRDDs().size() <= pins
+    assert set(jsc.getPersistentRDDs().keySet()) <= pins
 
     # WINDOW A: crash between the staged write and the marker — the
     # live store must be untouched, and replay must apply ONCE.
@@ -443,10 +444,10 @@ def test_rollup_store_staged_commit_survives_both_crash_windows(
         wh.merge_rollup_store(spark, store, b1, batch_id=1)
     monkeypatch.setattr(fsutil, "fs_touch", real_touch)
     assert snapshot() == after_b0  # fully absent
-    assert jsc.getPersistentRDDs().size() <= pins
+    assert set(jsc.getPersistentRDDs().keySet()) <= pins
     wh.merge_rollup_store(spark, store, b1, batch_id=1)  # replay
     after_b1 = snapshot()
-    assert jsc.getPersistentRDDs().size() <= pins
+    assert set(jsc.getPersistentRDDs().keySet()) <= pins
     assert after_b1 != after_b0
     wh.merge_rollup_store(spark, store, b1, batch_id=1)  # re-delivery
     assert snapshot() == after_b1  # exactly once
@@ -467,7 +468,7 @@ def test_rollup_store_staged_commit_survives_both_crash_windows(
     assert snapshot() == after_b1  # marked but not yet promoted
     wh.merge_rollup_store(spark, store, b2, batch_id=2)  # replay
     after_b2 = snapshot()
-    assert jsc.getPersistentRDDs().size() <= pins
+    assert set(jsc.getPersistentRDDs().keySet()) <= pins
     d0 = (base // 1_000 - (base // 1_000) % 86_400_000_000, "click")
     assert after_b2[d0][0] == 4  # events 1,2,3,5 on day 0 — no doubles
     wh.merge_rollup_store(spark, store, b2, batch_id=2)

@@ -11,7 +11,9 @@ Usage:
     python tools/opt_probe.py --tag r12 --suffix before --all   # every HEADLINE query
 
 Same methodology as bench.py (warm pass, clearCache between passes,
-median), same data dir / core count env contract.
+median), same data dir / core count env contract. Each pass runs in
+its own ``frames.scope()``, released after the timer stops, so no
+pass inherits the pinned frames of the one before.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from py_etl_pipeline_woocommerce_spark.functions import frames  # noqa: E402
 from py_etl_pipeline_woocommerce_spark.session import get_spark  # noqa: E402
 
 
@@ -59,22 +62,24 @@ def main() -> None:
     out: dict[str, float] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"opt_probe: {name}")
-        df = qs[name](spark, sf_dir)
-        if not args.no_plan:
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(plan_dir, f"{name}_{args.suffix}.txt"), "w") as f:
-                f.write(plan)
-        df.write.mode("overwrite").format("noop").save()
+        with frames.scope():
+            df = qs[name](spark, sf_dir)
+            if not args.no_plan:
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                with open(os.path.join(plan_dir, f"{name}_{args.suffix}.txt"), "w") as f:
+                    f.write(plan)
+            df.write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()
         samples = []
         for _ in range(args.passes):
-            # monotonic: an NTP step mid-pass would corrupt a
-            # time.time() sample (r12 advice)
-            t0 = time.monotonic()
-            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            samples.append(time.monotonic() - t0)
+            with frames.scope():
+                # monotonic: an NTP step mid-pass would corrupt a
+                # time.time() sample (r12 advice)
+                t0 = time.monotonic()
+                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+                samples.append(time.monotonic() - t0)
             spark.catalog.clearCache()
         samples.sort()
         out[name] = round(samples[len(samples) // 2], 3)

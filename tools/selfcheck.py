@@ -18,6 +18,7 @@ import pandas as pd
 
 import __spark_entry__ as entrymod
 from py_etl_pipeline_woocommerce_spark.catalog import TABLES, table_path
+from py_etl_pipeline_woocommerce_spark.functions import frames
 from py_etl_pipeline_woocommerce_spark.session import get_spark
 
 
@@ -163,7 +164,9 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # the scope frees what the query pinned once it is collected
+            with frames.scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"[FAIL] {name}: SPARK ERROR {type(e).__name__}: {str(e)[:300]}")
             failures += 1
