@@ -569,6 +569,7 @@ def dedup_clusters(
     # below instead of an UnboundLocalError (r12 review find); -1
     # never equals the converged sentinel 0
     changed = -1
+    held = labels  # the last checkpointed round, which the loop reads
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.v == labels.doc_id)
@@ -595,7 +596,9 @@ def dedup_clusters(
             .transform(local_checkpoint)
         )
         changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
+        # the round just materialized replaces the one it read
+        release(held)
+        held, labels = new_labels, new_labels.drop("_changed")
         if changed == 0:
             break
     release(edges)
@@ -694,8 +697,11 @@ def dedup_clusters_star(
         part2 = m2.select(F.col("src").alias("hi"), F.col("mn").alias("lo"))
         # coalesce before checkpoint: see dedup_clusters (task overhead
         # of near-empty default-conf partitions dominates otherwise)
-        E = part1.union(part2).distinct().coalesce(par).transform(local_checkpoint)
-        new_sig = signature(E)
+        new_E = part1.union(part2).distinct().coalesce(par).transform(local_checkpoint)
+        new_sig = signature(new_E)
+        # the round just materialized replaces the one it read
+        release(E)
+        E = new_E
         if new_sig == sig:
             converged = True
             break

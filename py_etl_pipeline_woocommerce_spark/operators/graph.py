@@ -115,6 +115,7 @@ def pagerank(
     spark = edges.sparkSession
     if n == 0:  # empty graph: no nodes, so no 1/n mass to spread
         release(out_edges)
+        release(deg)
         return edges.select(F.col("src").alias("node")).limit(0).withColumn(
             "rank", F.lit(0.0)
         )
@@ -125,6 +126,7 @@ def pagerank(
         .transform(local_checkpoint)
     )
     base = 1.0 - damping
+    held = ranks  # the last checkpointed round, which the loop reads
     for i in range(n_iter):
         contribs = out_edges.join(ranks, "src").select(
             F.col("dst").alias("src"),
@@ -139,7 +141,11 @@ def pagerank(
         )
         if (i + 1) % ckpt_every == 0 or i == n_iter - 1:
             ranks = local_checkpoint(ranks)
+            # the round just materialized replaces the one it read
+            release(held)
+            held = ranks
     release(out_edges)
+    release(deg)
     return ranks.select(F.col("src").alias("node"), "rank")
 
 

@@ -12,10 +12,11 @@ honoring on 429/5xx, and total-page discovery from the
 fan-out over every page (page 1's probe rides in the task closure).
 
 Pickling: instances ship to executors inside ``mapInPandas`` closures,
-so the ``requests.Session`` (unpicklable, holds sockets) is built
-lazily per process and dropped from ``__getstate__`` — each executor
-gets its own connection pool, which is exactly what you want for a
-parallel backfill.
+so the ``requests.Session`` (unpicklable, holds sockets) is dropped
+from ``__getstate__`` and built lazily by each unpickled copy — one per
+fetch task. The task's pool threads call one copy at once, so the
+lazy build runs under a lock: they share that one session and its
+connection pool instead of each building their own.
 
 Offline by design in tests: the session factory and sleep function are
 injectable, so retry/auth/error behavior is unit-tested against a
@@ -25,6 +26,7 @@ scripted fake with zero network and zero real sleeping.
 from __future__ import annotations
 
 import os
+import threading
 import time
 from typing import Any, Callable
 
@@ -102,25 +104,36 @@ class WooHttpTransport:
         self._session_factory = session_factory
         self._sleep = sleep
         self._session: Any = None
+        self._session_lock = threading.Lock()
 
-    # -- pickling: drop the live session; rebuild lazily per process --
+    # -- pickling: drop the live session and its lock; an unpickled
+    # -- copy gets a fresh lock and builds its session on first call
     def __getstate__(self):
         state = self.__dict__.copy()
         state["_session"] = None
+        del state["_session_lock"]
         return state
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._session_lock = threading.Lock()
 
     def _get_session(self):
         if self._session is None:
-            if self._session_factory is not None:
-                self._session = self._session_factory()
-            else:
-                if requests is None:
-                    raise RuntimeError(
-                        "the 'requests' package is required for WooHttpTransport; "
-                        "inject a session_factory or install requests"
-                    )
-                self._session = requests.Session()
+            with self._session_lock:
+                if self._session is None:
+                    self._session = self._new_session()
         return self._session
+
+    def _new_session(self):
+        if self._session_factory is not None:
+            return self._session_factory()
+        if requests is None:
+            raise RuntimeError(
+                "the 'requests' package is required for WooHttpTransport; "
+                "inject a session_factory or install requests"
+            )
+        return requests.Session()
 
     #: ceiling for honoring a server's Retry-After beyond the normal
     #: exponential cap — waiting out a compliant throttle beats

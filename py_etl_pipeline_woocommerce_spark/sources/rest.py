@@ -4,11 +4,15 @@ Re-expresses the reference extract stack Spark-first:
 
 - ``wc_client.py:36-49`` fetches pages serially on one machine; here
   page 1 is probed on the driver to learn the page count, then every
-  page fans out to executors in ONE stage: a ``mapInPandas`` over
-  ``spark.range`` in which task ``k`` takes pages ``k+1, k+1+n, …``
-  and page 1's records ride in the closure instead of being fetched
-  twice. N workers ingest N pages concurrently, which is the only way
-  a REST backfill finishes at warehouse scale.
+  page is fetched in ONE stage, a ``mapInPandas`` over ``spark.range``
+  with ``C = min(pages, 2 × cores)`` calls in flight; page 1's records
+  ride in the closure instead of being fetched twice. The fan-out is
+  sized by its pages, not by the cores: a task takes at least ``C``
+  pages before another task is added, and runs its calls on an
+  in-task pool of ``C // tasks`` threads. A day-sized drop is one
+  Python task with ``C`` calls in flight; a backfill of ``C²`` pages
+  or more spreads over ``2 × cores`` tasks, which is how a REST
+  backfill finishes at warehouse scale.
 - ``orders.py:4-18`` (orders since watermark) and
   ``products.py:31-73`` (batch by ids + per-id fallback) become thin
   wrappers producing DataFrames of raw JSON strings, parsed with
@@ -21,15 +25,19 @@ Re-expresses the reference extract stack Spark-first:
   the row — no shuffle, join or window between an order and its
   refunds.
 
-The HTTP transport is injectable (any picklable
-``(path, params) -> (json_text, total_pages)`` callable) so the layer
-is testable offline and swappable for a real session-pooled client.
+The HTTP transport is injectable (any picklable, thread-safe
+``(path, params) -> (json_text, total_pages)`` callable; a task calls
+it from its pool threads at once) so the layer is testable offline and
+swappable for a real session-pooled client.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterator
+import logging
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -41,9 +49,31 @@ from .http_transport import WooHttpError
 #: transport(path, params) -> (response_json_text, total_pages).
 #: total_pages mirrors WooCommerce's X-WP-TotalPages header; a
 #: transport that can't know it may return -1 for "unknown" (the
-#: fetch then probes pages until an empty one, each task along its
-#: own stride of pages).
+#: fetch then probes pages until an empty one, along each stride).
 Transport = Callable[[str, dict], tuple[str, int]]
+
+#: transport calls in flight per core: a paged fetch keeps
+#: ``min(pages, 2 × cores)`` in flight, and a products task (at most
+#: one runs per core) keeps 2
+_CALLS_PER_CORE = 2
+
+_log = logging.getLogger(__name__)
+
+
+def _in_flight(fn: Callable, items: Iterable, k: int) -> list:
+    """``[fn(x) for x in items]`` with at most ``k`` calls at a time,
+    results in order. The first failing call's exception (in item
+    order) is raised here and calls not yet started are cancelled:
+    nothing is swallowed in a pool thread. ``k <= 1`` runs inline."""
+    items = list(items)
+    if k <= 1 or len(items) <= 1:
+        return [fn(x) for x in items]
+    pool = ThreadPoolExecutor(min(k, len(items)))
+    try:
+        return list(pool.map(fn, items))
+    finally:
+        pool.shutdown(cancel_futures=True)
+
 
 RAW_SCHEMA = T.StructType(
     [
@@ -193,13 +223,19 @@ def fetch_paged(
     """All pages of a paged endpoint as a DataFrame of raw JSON rows.
 
     Page 1 runs on the driver (one RTT) and yields the page count.
-    The fetch is then ONE stage: ``n = min(pages, 2 × cores)`` tasks
-    over ``spark.range``, task ``k`` taking pages ``k+1, k+1+n, …``;
-    page 1's records ride in the closure, so task 0 starts from them
-    instead of fetching the page again. When the transport reports an
-    unknown page count (-1), each task walks its stride until its
-    first empty page — the serial loop of ``wc_client.paged`` turned
-    into ``n`` concurrent ones.
+    The fetch is then ONE stage: a ``mapInPandas`` over ``spark.range``
+    that keeps ``C = min(pages, 2 × cores)`` calls in flight. The pages
+    form ``C`` strides (stride ``j`` takes pages ``j+1, j+1+C, …``),
+    and tasks grow with the page count, not with the cores: a task
+    takes at least ``C`` pages before another is added, so
+    ``tasks = min(C, pages // C)``, and each task walks its
+    strides on ``C // tasks`` threads. A drop-sized fetch (fewer than
+    ``2C`` pages) is one task; ``C²`` pages or more keep ``2 × cores``
+    single-threaded tasks. Page 1's records ride in the closure, so
+    stride 0 starts from them instead of fetching the page again.
+    When the transport reports an unknown page count (-1), each stride
+    walks until its first empty page — the serial loop of
+    ``wc_client.paged`` turned into ``C`` concurrent ones.
     """
     return _fetch_pages(
         spark, transport, path, params, per_page, max_unknown_pages
@@ -216,7 +252,9 @@ def _fetch_pages(
     with_refunds: bool = False,
 ) -> DataFrame:
     """``fetch_paged``; ``with_refunds`` adds each record's refunds
-    (``_order_refunds``), fetched by the task that fetched the record."""
+    (``_order_refunds``), fetched by the task that fetched the record
+    on the same ``C // tasks`` threads, so at most ``C`` calls of
+    either kind are in flight."""
     first_body, total_pages = transport(path, {**params, "page": 1, "per_page": per_page})
     first = _load(first_body)
     known_total = total_pages >= 0
@@ -234,13 +272,16 @@ def _fetch_pages(
             "to silently drop the remaining pages"
         )
     last_page = max(total_pages, 1) if first else 1
-    n_tasks = min(last_page, spark.sparkContext.defaultParallelism * 2)
+    calls = min(last_page, spark.sparkContext.defaultParallelism * _CALLS_PER_CORE)
+    n_tasks = min(calls, last_page // calls)
+    threads = calls // n_tasks
 
-    def stride(k: int) -> Iterator[tuple[int, list]]:
-        """Task ``k``'s pages and their records."""
-        for page in range(k + 1, last_page + 1, n_tasks):
+    def stride(j: int) -> list[tuple[int, list]]:
+        """Stride ``j``'s pages and their records."""
+        out = []
+        for page in range(j + 1, last_page + 1, calls):
             if page == 1:
-                yield page, first  # the driver's probe, not refetched
+                out.append((page, first))  # the driver's probe, not refetched
                 continue
             body, _ = transport(
                 path, {**params, "page": page, "per_page": per_page}
@@ -259,13 +300,11 @@ def _fetch_pages(
                         f"{total_pages} pages — refusing to "
                         "silently drop the remaining pages"
                     )
-                return  # past the end (unknown-total probing)
+                break  # past the end (unknown-total probing)
             if not known_total and page == last_page:
                 # probe range exhausted with data still flowing:
                 # pages beyond max_unknown_pages may exist
-                import logging
-
-                logging.getLogger(__name__).warning(
+                _log.warning(
                     "fetch_paged: unknown-total probe of %s hit the "
                     "max_unknown_pages=%d ceiling with a non-empty "
                     "page — data past page %d is NOT extracted",
@@ -273,14 +312,16 @@ def _fetch_pages(
                     last_page,
                     last_page,
                 )
-            yield page, recs
+            out.append((page, recs))
+        return out
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            strides = [j for t in pdf["id"] for j in range(int(t), calls, n_tasks)]
             rows = [
                 (page, r)
-                for k in pdf["id"]
-                for page, recs in stride(int(k))
+                for walk in _in_flight(stride, strides, threads)
+                for page, recs in walk
                 for r in recs
             ]
             out = {
@@ -288,7 +329,9 @@ def _fetch_pages(
                 "raw": [json.dumps(r) for _, r in rows],
             }
             if with_refunds:
-                out["refunds"] = [_order_refunds(transport, r) for _, r in rows]
+                out["refunds"] = _in_flight(
+                    partial(_order_refunds, transport), [r for _, r in rows], threads
+                )
             yield pd.DataFrame(out)
 
     schema = RAW_SCHEMA
@@ -528,38 +571,43 @@ def fetch_products_by_ids(
     ``product_ids`` is a 1-column DataFrame (distributed dedup of the
     item fan-in, unlike products.py:40 which sorts ids on one node);
     executors fetch id-batches of 100 via the include= endpoint
-    (products.py:47-60). category_snapshot is the ``" | "`` join of
-    category names (flow.py:88-91).
+    (products.py:47-60), two batches in flight per task.
+    category_snapshot is the ``" | "`` join of category names
+    (flow.py:88-91).
     """
+
+    def include(chunk: list[int]) -> list[str]:
+        # paginate each include= chunk exhaustively: a host that
+        # clamps per_page (WAF/plugin caps) returns fewer rows plus
+        # total_pages > 1, and ignoring that header silently NULLs the
+        # category snapshot for 90% of the chunk — the truncation
+        # fetch_paged never allows (same exhaustive loop as
+        # _order_refunds)
+        raws: list[str] = []
+        page = 1
+        while True:
+            body, total_pages = transport(
+                "products",
+                {
+                    "include": ",".join(str(x) for x in chunk),
+                    "per_page": 100,
+                    "page": page,
+                    "status": "any",
+                    "context": "edit",
+                },
+            )
+            raws.extend(_records(body))
+            if page >= max(int(total_pages or 1), 1):
+                return raws
+            page += 1
 
     def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = sorted({int(i) for i in pdf["product_id"].dropna()})
-            raws: list[str] = []
-            for i in range(0, len(ids), 100):
-                chunk = ids[i : i + 100]
-                # paginate each include= chunk exhaustively: a host
-                # that clamps per_page (WAF/plugin caps) returns fewer
-                # rows plus total_pages > 1, and ignoring that header
-                # silently NULLs the category snapshot for 90% of the
-                # chunk — the truncation fetch_paged never allows
-                # (same exhaustive loop as _order_refunds)
-                page = 1
-                while True:
-                    body, total_pages = transport(
-                        "products",
-                        {
-                            "include": ",".join(str(x) for x in chunk),
-                            "per_page": 100,
-                            "page": page,
-                            "status": "any",
-                            "context": "edit",
-                        },
-                    )
-                    raws.extend(_records(body))
-                    if page >= max(int(total_pages or 1), 1):
-                        break
-                    page += 1
+            chunks = [ids[i : i + 100] for i in range(0, len(ids), 100)]
+            raws = [
+                r for recs in _in_flight(include, chunks, _CALLS_PER_CORE) for r in recs
+            ]
             yield pd.DataFrame({"page": [0] * len(raws), "raw": raws})
 
     raw = (

@@ -65,6 +65,34 @@ def test_outside_a_scope_nothing_is_registered(spark):
     frames.release(c)
 
 
+def test_iterative_loops_hold_one_round(spark):
+    """pagerank and both components loops release a round's checkpoint
+    once the next round is materialized and its signature read, so
+    the pins a scope holds after the loop do not grow with the rounds
+    run: on a 12-node chain only the final round remains (before:
+    one per round, e.g. pagerank's 15 rounds left 5)."""
+    from pyspark.sql import functions as F
+
+    from py_etl_pipeline_woocommerce_spark.operators import dedup, graph
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
+    )
+    docs = spark.range(1, 13).withColumnRenamed("id", "doc_id")
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    for loop in (
+        lambda: graph.pagerank(edges),
+        lambda: dedup.dedup_clusters(docs, pairs),
+        lambda: dedup.dedup_clusters_star(docs, pairs),
+    ):
+        before = pinned_ids(spark)
+        with frames.scope():
+            out = loop()
+            assert out.count() == 12
+            assert len(pinned_ids(spark) - before) <= 1
+        assert pinned_ids(spark) - before == set()
+
+
 def test_headline_queries_leave_no_pinned_rdd(spark, sf_dir):
     """Every bench.py headline query, run inside a scope to the noop
     sink, leaves no new persistent RDD id behind."""

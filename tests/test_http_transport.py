@@ -6,6 +6,10 @@ All against a scripted fake session — no network, no real sleeping."""
 from __future__ import annotations
 
 import pickle
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -249,3 +253,78 @@ def test_error_messages_redact_credentials():
     msg = str(ei.value)
     assert "ck_SECRET1" not in msg and "cs_SECRET2" not in msg
     assert "consumer_key=***" in msg and "consumer_secret=***" in msg
+
+
+class _ThrottledOnce:
+    """Per page: a 429 echoing the credentialed URL, then a 200. Page
+    0 is throttled on every attempt."""
+
+    def __init__(self):
+        self.attempts: dict = {}
+        self.lock = threading.Lock()
+
+    def get(self, url, params=None, timeout=None):
+        page = params["page"]
+        with self.lock:
+            n = self.attempts[page] = self.attempts.get(page, 0) + 1
+        if page == 0 or n == 1:
+            echo = (
+                f"throttled {url}?consumer_key={params['consumer_key']}"
+                f"&consumer_secret={params['consumer_secret']}"
+            )
+            return FakeResponse(429, echo, {"Retry-After": "2"})
+        return FakeResponse(200, f'[{{"id": {page}}}]', {"X-WP-TotalPages": "8"})
+
+
+_BUILT: list = []
+
+
+def _slow_throttled_session():
+    time.sleep(0.05)  # widen the window a racy lazy build would hit
+    session = _ThrottledOnce()
+    _BUILT.append(session)
+    return session
+
+
+def test_concurrent_first_calls_share_one_session():
+    """A fetch task calls its unpickled transport copy from its pool
+    threads at once: the lazy build runs once and the threads share
+    the session; retry-after backoff and credential redaction hold
+    per call."""
+    _BUILT.clear()
+    sleeps: list = []
+    transport = pickle.loads(
+        pickle.dumps(
+            WooHttpTransport(
+                "https://shop.example.com",
+                "ck_SECRET1",
+                "cs_SECRET2",
+                max_retries=1,
+                session_factory=_slow_throttled_session,
+            )
+        )
+    )
+    transport._sleep = sleeps.append
+    start = threading.Barrier(8)
+
+    def call(page):
+        start.wait(timeout=30)
+        try:
+            return transport("orders", {"page": page})
+        except WooHttpError as exc:
+            return exc
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            results = list(pool.map(call, range(8)))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(_BUILT) == 1
+    assert results[1:] == [(f'[{{"id": {p}}}]', 8) for p in range(1, 8)]
+    assert sleeps == [2.0] * 8  # one Retry-After wait per call
+    err = results[0]
+    assert isinstance(err, WooHttpError) and err.status == 429
+    assert "ck_SECRET1" not in str(err) and "cs_SECRET2" not in str(err)
+    assert "consumer_key=***" in str(err)

@@ -139,9 +139,10 @@ def test_fetch_paged_fans_out_all_pages(spark, transport, tmp_path):
     assert len(rows) == 3  # per_page_cap=2 -> 2 pages
     assert {json.loads(r["raw"])["id"] for r in rows} == {1, 2, 3}
     assert {r["page"] for r in rows} == {1, 2}
-    # every page, page 1 included, is one task of ONE stage: six
-    # orders, two a page -> three tasks, collected in a single job
-    # (no exchange), each page fetched once (page 1 only by the probe)
+    # three pages are fewer than 2C (C = min(pages, 2 x cores)), so
+    # the fetch is ONE task of ONE stage: six orders, two a page,
+    # collected in a single job (no exchange), each page fetched once
+    # (page 1 only by the probe)
     six = list(ORDERS) + [
         _order(i, f"2024-01-0{i}T09:00:00", 10.0, 1.0, [(11, 1, 10.0)])
         for i in (4, 5, 6)
@@ -149,7 +150,7 @@ def test_fetch_paged_fans_out_all_pages(spark, transport, tmp_path):
     log_path = str(tmp_path / "pages.log")
     paged = _logged(make_fake_transport(six, PRODUCTS, REFUNDS), log_path)
     raw = rest.fetch_orders_since(spark, paged, "2023-01-01T00:00:00")
-    assert raw.rdd.getNumPartitions() == 3
+    assert raw.rdd.getNumPartitions() == 1
     sc = spark.sparkContext
     group = f"fan-out-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "three-page fetch")
@@ -160,6 +161,102 @@ def test_fetch_paged_fans_out_all_pages(spark, transport, tmp_path):
     assert pages == [1, 1, 2, 2, 3, 3]
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert _pages_fetched(log_path) == [1, 2, 3]
+
+
+def _numbered(n_pages):
+    """A transport serving ``n_pages`` one-record pages."""
+
+    def transport(path, params):
+        page = int(params["page"])
+        return json.dumps([{"id": page}] if page <= n_pages else []), n_pages
+
+    return transport
+
+
+def test_fetch_paged_sizes_tasks_by_pages(spark):
+    """C = min(pages, 2 x cores) calls stay in flight; a task takes at
+    least C pages before another task is added, so a drop is one task
+    and a backfill of C^2 pages or more keeps 2 x cores tasks."""
+    cores2 = 2 * spark.sparkContext.defaultParallelism
+
+    def tasks(n_pages):
+        df = rest.fetch_paged(spark, _numbered(n_pages), "orders", {}, per_page=1)
+        return df.rdd.getNumPartitions()
+
+    assert tasks(1) == 1
+    assert tasks(cores2) == 1
+    assert tasks(2 * cores2 - 1) == 1
+    assert tasks(2 * cores2) == 2
+    assert tasks(cores2 * cores2) == cores2
+    assert tasks(cores2 * cores2 + 7) == cores2
+
+
+def _timed(inner, log_path):
+    """``inner`` that sleeps 20 ms inside each call and appends its
+    start and end times to ``log_path``."""
+    import time
+
+    def transport(path, params):
+        with open(log_path, "a") as f:
+            f.write(f"{time.time()} 1\n")
+        try:
+            time.sleep(0.02)
+            return inner(path, params)
+        finally:
+            with open(log_path, "a") as f:
+                f.write(f"{time.time()} -1\n")
+
+    return transport
+
+
+def _max_in_flight(log_path):
+    with open(log_path) as f:
+        events = sorted(
+            (float(t), int(d)) for t, d in (line.split() for line in f)
+        )
+    now = peak = 0
+    for _, d in events:
+        now += d
+        peak = max(peak, now)
+    return peak
+
+
+#: sixteen one-line orders: eight pages of two on the fake transport
+SIXTEEN = [
+    _order(i, f"2024-01-{i:02d}T09:00:00", 10.0, 1.0, [(11, 1, 10.0)])
+    for i in range(1, 17)
+]
+
+
+def test_fetch_paged_in_flight_calls_bounded_by_c(spark, tmp_path):
+    """Pages and refunds run on the task's pool: at most C calls are
+    in flight (C = min(pages, 2 x cores)), and more than one is."""
+    log_path = str(tmp_path / "calls.log")
+    t = _timed(make_fake_transport(SIXTEEN, PRODUCTS, REFUNDS), log_path)
+    raw = rest.fetch_orders_since(spark, t, "2023-01-01T00:00:00")
+    rows = raw.collect()
+    assert sorted(json.loads(r["raw"])["id"] for r in rows) == list(range(1, 17))
+    c = min(8, 2 * spark.sparkContext.defaultParallelism)
+    assert 2 <= _max_in_flight(log_path) <= c
+
+
+def test_refund_error_in_pool_thread_fails_the_fetch(spark):
+    """A non-404 refund failure raised in one pool thread fails the
+    whole fetch instead of leaving that order's refunds empty."""
+    from py_etl_pipeline_woocommerce_spark.sources.http_transport import (
+        WooHttpError,
+    )
+
+    inner = make_fake_transport(SIXTEEN, PRODUCTS, REFUNDS)
+
+    def transport(path, params):
+        if path == "orders/11/refunds":
+            raise WooHttpError(path, 503, "retries exhausted")
+        return inner(path, params)
+
+    raw = rest.fetch_orders_since(spark, transport, "2023-01-01T00:00:00")
+    with pytest.raises(Exception, match="503"):
+        raw.collect()
 
 
 def test_fetch_paged_unknown_total_walks_strides(spark, tmp_path):
@@ -195,6 +292,19 @@ def test_fetch_paged_unknown_total_walks_strides(spark, tmp_path):
     fetched = _pages_fetched(log_path)
     assert fetched.count(1) == 1
     assert len(fetched) <= 5 + n
+
+    # a probe ceiling under C^2: the strides share a task's pool, and
+    # each still stops at its first empty page
+    log_path = str(tmp_path / "pooled.log")
+    t = _logged(unknown_total(10), log_path)
+    df = rest.fetch_paged(spark, t, "orders", {}, per_page=2, max_unknown_pages=20)
+    calls = min(20, 2 * spark.sparkContext.defaultParallelism)
+    assert df.rdd.getNumPartitions() == 20 // calls
+    rows = df.collect()
+    assert sorted(json.loads(r["raw"])["id"] for r in rows) == list(range(1, 11))
+    fetched = _pages_fetched(log_path)
+    assert fetched.count(1) == 1
+    assert len(fetched) <= 5 + calls
 
 
 def test_orders_and_items_frames(spark, transport):
@@ -408,7 +518,8 @@ def test_incremental_batch_rewrites_only_touched_partitions(spark, tmp_path):
     # both runs released every frame they pinned (no new persistent
     # RDD id; ids, not counts, so a freed leftover hides nothing), and the
     # drop runs at most the jobs the materialize-once flow with
-    # in-row refunds needs (26 measured)
+    # in-row refunds needs (26 measured; this one-page drop is one
+    # fetch task with or without the page-sized fan-out)
     for fact in ("fct_orders", "fct_order_items"):
         assert len(_file_states(f"{wh}/{fact}/order_month=2024-02")) == 1
     assert set(sc._jsc.getPersistentRDDs().keySet()) <= pins
