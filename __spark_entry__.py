@@ -66,7 +66,7 @@ def _doc_sample_frac() -> float:
     """Deterministic sample fraction for the PAIRWISE-verify entries —
     the whole family whose ORACLES are O(true-pairs): on documents
     dedup_ngram_jaccard / dedup_simhash / dedup_containment /
-    dedup_audit / dedup_minhash / dedup_clusters(+_star) /
+    dedup_audit / dedup_minhash / dedup_clusters /
     dedup_incremental_near / doc_similarity_topk / lsh_index_digest,
     and on embeddings embedding_cosine_dup / semdedup_apply. Read
     from ``SPARK_GRAFT_DOC_SAMPLE`` in (0, 1]. Default 1.0 = full
@@ -525,7 +525,6 @@ _R12_FRONT = [
     "dedup_audit",
     "dedup_minhash",
     "dedup_clusters",
-    "dedup_clusters_star",
     "dedup_incremental_near",
     "doc_similarity_topk",
     "semdedup_apply",
@@ -1719,7 +1718,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "embedding_cosine_dup": lambda s, d: similarity.cosine_dup_pairs(_emb_pair_sampled(s, d)),
         "dedup_apply": lambda s, d: corpus.dedup_apply(_docs(s, d)),
-        "dedup_clusters_star": lambda s, d: dedup.dedup_clusters_star(_docs_pair_sampled(s, d)),
         "dedup_simhash": lambda s, d: dedup.simhash_pairs(_docs_pair_sampled(s, d)),
         "dedup_clusters": lambda s, d: dedup.dedup_clusters(_docs_pair_sampled(s, d)),
         # --- new in r3 (oracle-backed, never driver-verified) ---
@@ -3726,7 +3724,6 @@ WHERE rn = 1
         "dedup_minhash": _doc_sample_cte(_MINHASH_SQL),
         "dedup_simhash": _doc_sample_cte(_SIMHASH_SQL),
         "dedup_clusters": _doc_sample_cte(_CLUSTERS_SQL),
-        "dedup_clusters_star": _doc_sample_cte(_CLUSTERS_SQL),
         "hopping_window_agg": """
 WITH e AS (SELECT event_type, value, epoch_us(ts) AS ts_us FROM events),
 x AS (SELECT event_type, value, ts_us,

@@ -535,10 +535,9 @@ def dedup_clusters(
     labels — no driver-side data beyond that scalar.
 
     At 100 TB the same loop holds (labels and edges shuffle on doc
-    ids, both high-cardinality); for adversarial graphs with long
-    chains, swap the propagation step for the large-star/small-star
-    rounds of Kiveris et al. "Connected Components in MapReduce" —
-    same join shape, logarithmic rounds.
+    ids, both high-cardinality). A component deeper than ``max_iter``
+    hops is refused, not split: raise ``max_iter`` for adversarial
+    graphs with long chains.
     """
     if pairs is None:
         pairs = minhash_lsh_pairs(documents)
@@ -603,130 +602,18 @@ def dedup_clusters(
             break
     release(edges)
     if changed != 0:
-        # same refusal as dedup_clusters_star: labels that stopped
-        # mid-propagation split one component into several clusters —
-        # downstream keep-one would silently retain near-duplicates
+        # labels that stopped mid-propagation split one component into
+        # several clusters — downstream keep-one would silently retain
+        # near-duplicates
         raise RuntimeError(
             f"dedup_clusters did not converge in {max_iter} rounds "
             f"({changed} labels still moving — a component with "
-            "diameter > max_iter; raise max_iter or use "
-            "dedup_clusters_star, whose star rounds converge in "
-            "O(log diameter))"
+            "diameter > max_iter; raise max_iter)"
         )
-    return _attach_cluster_sizes(documents, labels, root_in_labels=True)
+    return _attach_cluster_sizes(documents, labels)
 
 
-def dedup_clusters_star(
-    documents: DataFrame, pairs: DataFrame | None = None, max_iter: int = 12
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — same output contract as ``dedup_clusters``.
-
-    Min-label propagation converges in O(component diameter) rounds,
-    which is fine for the tight clusters near-dup graphs produce but
-    degenerates on adversarial long chains. The star rounds instead
-    rewire the graph toward its component minima:
-
-    - large-star (per node u): attach every strictly larger neighbor
-      to ``m(u) = min(Γ(u) ∪ {u})``;
-    - small-star (per node u): attach u and its smaller neighbors
-      to ``m(u)``.
-
-    Each round is one groupBy(min) + one equi-join on node id — the
-    same shuffle shape as propagation — but convergence is
-    O(log diameter) rounds, so a 10⁶-long chain resolves in ~20
-    rounds instead of 10⁶. Every emitted edge (x, y) satisfies
-    y < x, so the canonical edge set is directly comparable across
-    rounds; convergence is a 2-scalar aggregate (count + hash sum),
-    no driver-side data. Per-round ``localCheckpoint`` truncates
-    lineage exactly as in ``dedup_clusters``.
-    """
-    if pairs is None:
-        pairs = minhash_lsh_pairs(documents)
-    # canonical (hi, lo): hi > lo
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    E = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("hi"),
-            F.least("doc_a", "doc_b").alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-        .coalesce(par)
-        .transform(local_checkpoint)
-    )
-
-    def signature(e: DataFrame) -> tuple[int, int]:
-        # bit_xor: order-insensitive and overflow-free under ANSI mode
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("hi", "lo")), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    sig = signature(E)
-    converged = False
-    for _ in range(max_iter):
-        adj = E.select(F.col("hi").alias("src"), F.col("lo").alias("dst")).union(
-            E.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        )
-        m = (
-            adj.groupBy("src")
-            .agg(F.min("dst").alias("_mn"))
-            .select("src", F.least("_mn", F.col("src")).alias("m"))
-        )
-        # large-star: strictly larger neighbors -> m(src)
-        large = (
-            adj.filter(F.col("dst") > F.col("src"))
-            .join(m, "src")
-            .select(F.col("dst").alias("hi"), F.col("m").alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
-        )
-        # small-star over the large-star output
-        adj2 = large.select(F.col("hi").alias("src"), F.col("lo").alias("dst")).union(
-            large.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-        )
-        smaller = adj2.filter(F.col("dst") < F.col("src"))
-        m2 = smaller.groupBy("src").agg(F.min("dst").alias("mn"))
-        part1 = (
-            smaller.join(m2, "src")
-            .filter(F.col("dst") != F.col("mn"))
-            .select(F.col("dst").alias("hi"), F.col("mn").alias("lo"))
-        )
-        part2 = m2.select(F.col("src").alias("hi"), F.col("mn").alias("lo"))
-        # coalesce before checkpoint: see dedup_clusters (task overhead
-        # of near-empty default-conf partitions dominates otherwise)
-        new_E = part1.union(part2).distinct().coalesce(par).transform(local_checkpoint)
-        new_sig = signature(new_E)
-        # the round just materialized replaces the one it read
-        release(E)
-        E = new_E
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # a non-star E would emit duplicate, conflicting label rows
-        # (a node can appear as both hi and a root) — refuse rather
-        # than return silently-wrong clusters
-        raise RuntimeError(
-            f"dedup_clusters_star did not converge in {max_iter} "
-            "star rounds (O(log diameter) expected — this graph's "
-            "diameter is astronomically deep or max_iter was "
-            "lowered); raise max_iter or use dedup_clusters"
-        )
-    labels = E.groupBy(F.col("hi").alias("doc_id")).agg(
-        F.min("lo").alias("cluster_id")
-    )
-    # At convergence E is a star graph, so `labels` holds every member
-    # EXCEPT each cluster's root (the root never appears as `hi`).
-    return _attach_cluster_sizes(documents, labels, root_in_labels=False)
-
-
-def _attach_cluster_sizes(
-    documents: DataFrame, labels: DataFrame, root_in_labels: bool
-) -> DataFrame:
+def _attach_cluster_sizes(documents: DataFrame, labels: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, cluster_size) for the whole corpus, with
     sizes computed on the GRAPH-sized label frame, not the corpus.
 
@@ -739,28 +626,15 @@ def _attach_cluster_sizes(
     then needs a single left join against a graph-sized frame, which
     AQE turns into a broadcast at typical near-dup graph sizes —
     corpus-side shuffle-free, the shape that matters at 100 TB.
-
-    ``root_in_labels``: min-label propagation emits the root labelled
-    with itself; star contraction's final edge set omits the root, so
-    its per-cluster counts are one short.
+    Propagation labels each root with itself, so ``labels`` holds every
+    member of every non-singleton cluster.
     """
     sizes = labels.groupBy("cluster_id").agg(
-        (F.count(F.lit(1)) + F.lit(0 if root_in_labels else 1)).alias(
-            "cluster_size"
-        )
+        F.count(F.lit(1)).alias("cluster_size")
     )
     labelled = labels.join(sizes, "cluster_id").select(
         "doc_id", "cluster_id", "cluster_size"
     )
-    if not root_in_labels:
-        # re-insert each root as a member of its own cluster
-        labelled = labelled.unionByName(
-            sizes.select(
-                F.col("cluster_id").alias("doc_id"),
-                "cluster_id",
-                "cluster_size",
-            )
-        )
     return (
         documents.select("doc_id")
         .join(labelled, "doc_id", "left")

@@ -24,6 +24,17 @@ from pyspark.sql import functions as F
 
 from ..functions.frames import local_checkpoint, pin, release
 
+#: pagerank truncates lineage every this many rounds, not every
+#: round: unlike the components loop there is no per-round
+#: convergence count forcing materialization, and a few-round
+#: join+agg plan is still small, so batching checkpoints trades
+#: bounded plan growth for ~1 fewer job per skipped round (r12 A/B at
+#: sf0.1: every-5 beat every-3 by ~11% median, and lazy/no-AQE
+#: variants were 1.4-2.5x WORSE — AQE's per-round partition
+#: coalescing is load-bearing on the tiny per-round frames, so the
+#: loop keeps it on)
+PAGERANK_CKPT_EVERY = 5
+
 
 def copurchase_edges(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
     """Undirected co-purchase edges between parts: an edge (a, b)
@@ -70,7 +81,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     n_iter: int = 15,
-    ckpt_every: int = 5,
 ) -> DataFrame:
     """PageRank over an undirected edge list (edges are symmetrized;
     weights are ignored — classic uniform-split PageRank): rank_v =
@@ -85,16 +95,9 @@ def pagerank(
     Per round: one hash join of the static (src, dst, deg) frame
     with the current rank vector + one groupBy(dst) sum — O(edges)
     shuffled rows, independent of round count. Lineage is truncated
-    every ``ckpt_every`` rounds rather than every round: unlike the
-    components loop there is no per-round convergence count forcing
-    materialization, and a 3-round join+agg plan is still small, so
-    batching checkpoints trades bounded plan growth for ~1 fewer job
-    per skipped round (r12 A/B at sf0.1: every-5 beat every-3 by
-    ~11% median and lazy/no-AQE variants were 1.4-2.5x WORSE — AQE's
-    per-round partition coalescing is load-bearing on the tiny
-    per-round frames, so the loop keeps it on). Float sums make the
-    low-order bits partitioning-dependent, so this is verified
-    against a dense power-iteration oracle in pytest (1e-9
+    every ``PAGERANK_CKPT_EVERY`` rounds and after the last. Float
+    sums make the low-order bits partitioning-dependent, so this is
+    verified against a dense power-iteration oracle in pytest (1e-9
     tolerance), not a SQL hash — the driver records a rows-only
     check.
     """
@@ -139,7 +142,7 @@ def pagerank(
             )
             .coalesce(par)
         )
-        if (i + 1) % ckpt_every == 0 or i == n_iter - 1:
+        if (i + 1) % PAGERANK_CKPT_EVERY == 0 or i == n_iter - 1:
             ranks = local_checkpoint(ranks)
             # the round just materialized replaces the one it read
             release(held)

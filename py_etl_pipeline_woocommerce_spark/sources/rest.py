@@ -171,9 +171,21 @@ def _load(body: str) -> list:
     return data if isinstance(data, list) else [data]
 
 
-def _records(body: str) -> list[str]:
-    """Response body -> one JSON string per record."""
-    return [json.dumps(r) for r in _load(body)]
+def _drain(transport: Transport, path: str, params: dict) -> list:
+    """Every record of ``path``, paged serially until the end: page
+    ``total_pages`` when the transport knows it, else the first short
+    page (``fetch_paged``'s rule). Used where one task owns a small
+    paged walk, so stopping at page 1 would silently truncate it."""
+    per_page = 100
+    page, recs = 1, []
+    while True:
+        body, total_pages = transport(path, {**params, "per_page": per_page, "page": page})
+        batch = _load(body)
+        recs.extend(batch)
+        done = page >= total_pages if total_pages >= 0 else len(batch) < per_page
+        if done:
+            return recs
+        page += 1
 
 
 def _order_refunds(transport: Transport, order: dict) -> str:
@@ -181,27 +193,14 @@ def _order_refunds(transport: Transport, order: dict) -> str:
 
     Pages EXHAUSTIVELY: a subscription/marketplace order can exceed
     one page of refunds, and stopping at page 1 silently understates
-    refund_total (the truncation ``fetch_paged`` never allows itself).
-    A missing order (404) has no refunds; any other failure
-    propagates.
+    refund_total. A missing order (404) has no refunds; any other
+    failure propagates.
     """
     oid = order.get("id")
     if oid is None:
         return "[]"
-    page, recs = 1, []
     try:
-        while True:
-            body, total_pages = transport(
-                f"orders/{int(oid)}/refunds", {"per_page": 100, "page": page}
-            )
-            batch = _load(body)
-            recs.extend(batch)
-            done = (
-                page >= total_pages if total_pages >= 0 else len(batch) < 100
-            )
-            if done:
-                break
-            page += 1
+        recs = _drain(transport, f"orders/{int(oid)}/refunds", {})
     except WooHttpError as exc:
         # refunds.py:26-28: a MISSING order -> no refunds. Only 404
         # qualifies — swallowing auth failures or exhausted retries
@@ -219,6 +218,7 @@ def fetch_paged(
     params: dict,
     per_page: int = 100,
     max_unknown_pages: int = 10_000,
+    with_refunds: bool = False,
 ) -> DataFrame:
     """All pages of a paged endpoint as a DataFrame of raw JSON rows.
 
@@ -236,25 +236,12 @@ def fetch_paged(
     When the transport reports an unknown page count (-1), each stride
     walks until its first empty page — the serial loop of
     ``wc_client.paged`` turned into ``C`` concurrent ones.
-    """
-    return _fetch_pages(
-        spark, transport, path, params, per_page, max_unknown_pages
-    )
 
-
-def _fetch_pages(
-    spark: SparkSession,
-    transport: Transport,
-    path: str,
-    params: dict,
-    per_page: int = 100,
-    max_unknown_pages: int = 10_000,
-    with_refunds: bool = False,
-) -> DataFrame:
-    """``fetch_paged``; ``with_refunds`` adds each record's refunds
+    ``with_refunds`` adds a ``refunds`` column: each record's refunds
     (``_order_refunds``), fetched by the task that fetched the record
     on the same ``C // tasks`` threads, so at most ``C`` calls of
-    either kind are in flight."""
+    either kind are in flight.
+    """
     first_body, total_pages = transport(path, {**params, "page": 1, "per_page": per_page})
     first = _load(first_body)
     known_total = total_pages >= 0
@@ -363,7 +350,7 @@ def fetch_orders_since(
         params["status"] = status
     if before_iso:
         params["before"] = before_iso
-    return _fetch_pages(spark, transport, "orders", params, with_refunds=True)
+    return fetch_paged(spark, transport, "orders", params, with_refunds=True)
 
 
 def parse_orders(raw: DataFrame) -> DataFrame:
@@ -577,29 +564,16 @@ def fetch_products_by_ids(
     """
 
     def include(chunk: list[int]) -> list[str]:
-        # paginate each include= chunk exhaustively: a host that
-        # clamps per_page (WAF/plugin caps) returns fewer rows plus
-        # total_pages > 1, and ignoring that header silently NULLs the
-        # category snapshot for 90% of the chunk — the truncation
-        # fetch_paged never allows (same exhaustive loop as
-        # _order_refunds)
-        raws: list[str] = []
-        page = 1
-        while True:
-            body, total_pages = transport(
-                "products",
-                {
-                    "include": ",".join(str(x) for x in chunk),
-                    "per_page": 100,
-                    "page": page,
-                    "status": "any",
-                    "context": "edit",
-                },
-            )
-            raws.extend(_records(body))
-            if page >= max(int(total_pages or 1), 1):
-                return raws
-            page += 1
+        # drain each include= chunk: a host that clamps per_page
+        # (WAF/plugin caps) returns fewer rows plus total_pages > 1,
+        # and ignoring that header silently NULLs the category
+        # snapshot for 90% of the chunk
+        params = {
+            "include": ",".join(str(x) for x in chunk),
+            "status": "any",
+            "context": "edit",
+        }
+        return [json.dumps(r) for r in _drain(transport, "products", params)]
 
     def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -527,15 +527,11 @@ def test_docs_as_lines_bridge_rewraps_tokens(spark):
 
 def test_dedup_clusters_raises_on_nonconvergence(spark):
     """A component whose diameter exceeds max_iter must REFUSE, not
-    return labels that silently split one cluster into several — the
-    same policy dedup_clusters_star already enforces. The star rounds
-    resolve the identical chain in O(log diameter)."""
+    return labels that silently split one cluster into several. With
+    max_iter=0 no round runs at all, which must refuse too."""
     import pytest as _pytest
 
-    from py_etl_pipeline_woocommerce_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
+    from py_etl_pipeline_woocommerce_spark.operators.dedup import dedup_clusters
 
     docs = spark.createDataFrame(
         [(i, f"doc {i}", "en", "s") for i in range(25)],
@@ -544,16 +540,13 @@ def test_dedup_clusters_raises_on_nonconvergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(24)], "doc_a long, doc_b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(docs, pairs=chain, max_iter=3)
+    for max_iter in (0, 3):
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            dedup_clusters(docs, pairs=chain, max_iter=max_iter)
     # enough rounds: one component rooted at 0
     ok = dedup_clusters(docs, pairs=chain, max_iter=30).collect()
     assert {r.cluster_id for r in ok} == {0}
-    star = dedup_clusters_star(docs, pairs=chain).collect()
-    assert {r.cluster_id for r in star} == {0}
-    assert sorted((r.doc_id, r.cluster_size) for r in ok) == sorted(
-        (r.doc_id, r.cluster_size) for r in star
-    )
+    assert {r.cluster_size for r in ok} == {25}
 
 
 def test_simhash_rejects_bits_past_md5_nibbles(spark):

@@ -66,11 +66,11 @@ def test_outside_a_scope_nothing_is_registered(spark):
 
 
 def test_iterative_loops_hold_one_round(spark):
-    """pagerank and both components loops release a round's checkpoint
-    once the next round is materialized and its signature read, so
-    the pins a scope holds after the loop do not grow with the rounds
-    run: on a 12-node chain only the final round remains (before:
-    one per round, e.g. pagerank's 15 rounds left 5)."""
+    """pagerank and the components loop release a round's checkpoint
+    once the next round is materialized, so the pins a scope holds
+    after the loop do not grow with the rounds run: on a 12-node chain
+    only the final round remains (before: one per round, e.g.
+    pagerank's 15 rounds left 5)."""
     from pyspark.sql import functions as F
 
     from py_etl_pipeline_woocommerce_spark.operators import dedup, graph
@@ -83,7 +83,6 @@ def test_iterative_loops_hold_one_round(spark):
     for loop in (
         lambda: graph.pagerank(edges),
         lambda: dedup.dedup_clusters(docs, pairs),
-        lambda: dedup.dedup_clusters_star(docs, pairs),
     ):
         before = pinned_ids(spark)
         with frames.scope():

@@ -36,10 +36,7 @@ def _union_find(n_ids, edges):
 
 
 def test_dedup_clusters_random_graph_vs_union_find(spark):
-    from py_etl_pipeline_woocommerce_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_star,
-    )
+    from py_etl_pipeline_woocommerce_spark.operators.dedup import dedup_clusters
 
     rng = random.Random(11)
     ids = list(range(1, 121))
@@ -55,12 +52,11 @@ def test_dedup_clusters_random_graph_vs_union_find(spark):
         "doc_id bigint, text string, lang string, source string",
     )
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    for fn in (dedup_clusters, dedup_clusters_star):
-        got = {
-            r.doc_id: (r.cluster_id, r.cluster_size)
-            for r in fn(docs, pairs=pairs).collect()
-        }
-        assert got == expected, fn.__name__
+    got = {
+        r.doc_id: (r.cluster_id, r.cluster_size)
+        for r in dedup_clusters(docs, pairs=pairs).collect()
+    }
+    assert got == expected
 
 
 def test_sessionize_random_events_vs_python(spark):

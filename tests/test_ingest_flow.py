@@ -907,6 +907,30 @@ def test_fetch_refunds_pages_exhaustively(spark):
     assert order["refund_total"] == pytest.approx(150.0)
 
 
+def test_drain_stops_at_known_total_else_at_short_page():
+    """The one serial page walk (refunds, products include=): a known
+    total ends the walk at that page even when pages look full; an
+    unknown total (-1) walks until the first short page."""
+    recs = list(range(250))
+
+    def pages(total):
+        calls = []
+
+        def t(path, params):
+            page = params["page"]
+            calls.append(page)
+            return json.dumps(recs[(page - 1) * 100 : page * 100]), total
+
+        return t, calls
+
+    t, calls = pages(2)
+    assert rest._drain(t, "x", {}) == recs[:200]
+    assert calls == [1, 2]
+    t, calls = pages(-1)
+    assert rest._drain(t, "x", {}) == recs
+    assert calls == [1, 2, 3]
+
+
 def test_watermark_overlap_rule_selected_per_run(spark, transport, tmp_path):
     """overlap_minutes=1 selects state.py's gap-free advance rule
     (max - 1 minute) instead of the reference-parity skip-a-minute
