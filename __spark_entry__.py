@@ -1018,7 +1018,7 @@ def _q_cdc_store_digest(spark, sf_dir):
 
 def _q_first_seen_digest(spark, sf_dir):
     """Gate for the ON-DISK first-seen store (the batch body of the
-    streaming FirstSeenSink): fold the events history through
+    streaming run_stream_first_seen): fold the events history through
     merge_first_seen_store in THREE user-sharded batches applied out
     of order (1, 2, 0), then digest the store per first day. MIN is
     associative, so the oracle is simply per-user MIN(day) over all

@@ -539,6 +539,8 @@ def dedup_clusters(
     hops is refused, not split: raise ``max_iter`` for adversarial
     graphs with long chains.
     """
+    if max_iter < 1:
+        raise ValueError(f"dedup_clusters: max_iter must be >= 1, got {max_iter}")
     if pairs is None:
         pairs = minhash_lsh_pairs(documents)
     edges = pairs.select(
@@ -564,10 +566,6 @@ def dedup_clusters(
         .coalesce(par)
         .transform(local_checkpoint)
     )
-    # pre-assigned so max_iter <= 0 hits the non-convergence refusal
-    # below instead of an UnboundLocalError (r12 review find); -1
-    # never equals the converged sentinel 0
-    changed = -1
     held = labels  # the last checkpointed round, which the loop reads
     for _ in range(max_iter):
         neighbor_min = (

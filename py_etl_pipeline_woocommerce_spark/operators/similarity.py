@@ -157,7 +157,6 @@ def cosine_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.3,
     n_blocks: int = 8,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """Exact all-pairs cosine join, block-grid partitioned.
 
@@ -179,58 +178,41 @@ def cosine_dup_pairs(
       (n/B)² comparisons. Pick B so an (n/B)-row block fits in task
       memory; B ~ sqrt(2·cores) saturates a cluster.
 
-    Two kernels score a cell:
-
-    - ``pandas`` (default): cogrouped ``applyInPandas`` — only the
-      two (n/B)-row blocks cross the shuffle (~n·B/2 rows total,
-      never the O(n²) pair rows), and the cell scores as one
-      vectorized float64 matrix product + threshold mask. This is an
-      order of magnitude faster than emitting pair rows: the measured
-      sf0.1 cost of the SQL kernel was dominated by shuffling 2.25M
-      wide candidate rows and folding a 64-element HOF per pair.
-    - ``sql``: pure-JVM equi-join on the cell key + sequential
-      left-fold dot. Bit-identical to the DuckDB oracle's
-      ``list_sum`` order; kept for oracle-parity verification and
-      environments without Arrow. Plan shape is ShuffledHashJoin /
-      SortMergeJoin — no CartesianProduct either way.
+    A cell is scored by a cogrouped ``applyInPandas``: only the two
+    (n/B)-row blocks cross the shuffle (~n·B/2 rows total, never the
+    O(n²) pair rows), and the cell scores as one vectorized float64
+    matrix product + threshold mask. This is an order of magnitude
+    faster than emitting pair rows: the measured sf0.1 cost of a
+    pure-SQL kernel was dominated by shuffling 2.25M wide candidate
+    rows and folding a 64-element HOF per pair.
 
     BLAS matmul sums in a different association order than a
     sequential fold, so a pair whose cosine sits within ~1 ulp of the
-    threshold could in principle flip; ``test_cosine_kernels_agree``
-    pins set-equality of both kernels on the real testdata. O(n²)
-    work remains information-theoretically required; for
-    recall-tunable sub-quadratic retrieval use ``ann_lsh_topk`` /
-    ``ann_ivf_topk``.
+    threshold could in principle flip;
+    ``test_cosine_dup_blocked_matches_bruteforce`` pins set-equality
+    with the sequential-fold ``cosine_dup_pairs_bruteforce`` on the
+    real testdata. O(n²) work remains information-theoretically
+    required; for recall-tunable sub-quadratic retrieval use
+    ``ann_lsh_topk`` / ``ann_ivf_topk``.
     """
     B = n_blocks
-    if kernel == "pandas":
-        return _cosine_dup_pairs_pandas(embeddings, threshold, B)
-    if kernel != "sql":
-        # a typo ('Pandas', 'arrow') used to fall through SILENTLY to
-        # the order-of-magnitude-slower SQL kernel (r12 review find)
-        raise ValueError(
-            f"cosine_dup_pairs: kernel must be 'sql' or 'pandas', "
-            f"got {kernel!r}"
-        )
-    left = _prepped(embeddings, "ida", "ea", "na").withColumn(
-        "ba", F.pmod(F.col("ida"), F.lit(B))
-    )
-    right = _prepped(embeddings, "idb", "eb", "nb").withColumn(
-        "bb", F.pmod(F.col("idb"), F.lit(B))
-    )
-    left_x = left.withColumn("bb", F.explode(F.sequence(F.col("ba"), F.lit(B - 1))))
-    right_x = right.withColumn("ba", F.explode(F.sequence(F.lit(0), F.col("bb"))))
-    cand = left_x.join(right_x, ["ba", "bb"]).filter(
-        (F.col("ba") < F.col("bb")) | (F.col("ida") < F.col("idb"))
-    )
+    embeddings = embeddings.filter(cosable_embedding())
+    left = embeddings.select(
+        F.col("vec_id").alias("ida"),
+        F.col("embedding").alias("ea"),
+        F.pmod(F.col("vec_id"), F.lit(B)).alias("ba"),
+    ).withColumn("bb", F.explode(F.sequence(F.col("ba"), F.lit(B - 1))))
+    right = embeddings.select(
+        F.col("vec_id").alias("idb"),
+        F.col("embedding").alias("eb"),
+        F.pmod(F.col("vec_id"), F.lit(B)).alias("bb"),
+    ).withColumn("ba", F.explode(F.sequence(F.lit(0), F.col("bb"))))
     return (
-        cand.withColumn(
-            "cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.least("ida", "idb").alias("vec_a"),
-            F.greatest("ida", "idb").alias("vec_b"),
+        left.groupBy("ba", "bb")
+        .cogroup(right.groupBy("ba", "bb"))
+        .applyInPandas(
+            _block_cosine_score(threshold, lambda k: k[0] == k[1]),
+            "vec_a long, vec_b long",
         )
     )
 
@@ -264,31 +246,6 @@ def _block_cosine_score(threshold: float, is_diag):
         )
 
     return score
-
-
-def _cosine_dup_pairs_pandas(
-    embeddings: DataFrame, threshold: float, B: int
-) -> DataFrame:
-    """Cogrouped-BLAS kernel for ``cosine_dup_pairs`` (see there)."""
-    embeddings = embeddings.filter(cosable_embedding())
-    left = embeddings.select(
-        F.col("vec_id").alias("ida"),
-        F.col("embedding").alias("ea"),
-        F.pmod(F.col("vec_id"), F.lit(B)).alias("ba"),
-    ).withColumn("bb", F.explode(F.sequence(F.col("ba"), F.lit(B - 1))))
-    right = embeddings.select(
-        F.col("vec_id").alias("idb"),
-        F.col("embedding").alias("eb"),
-        F.pmod(F.col("vec_id"), F.lit(B)).alias("bb"),
-    ).withColumn("ba", F.explode(F.sequence(F.lit(0), F.col("bb"))))
-    return (
-        left.groupBy("ba", "bb")
-        .cogroup(right.groupBy("ba", "bb"))
-        .applyInPandas(
-            _block_cosine_score(threshold, lambda k: k[0] == k[1]),
-            "vec_a long, vec_b long",
-        )
-    )
 
 
 def _hyperplane(plane: int, dim: int = 64):
@@ -1053,8 +1010,12 @@ def semdedup_apply(
 
     if mode == "centroid":
         raw = centroid_cell_pairs(embeddings, threshold, n_centroids)
-    else:
+    elif mode == "exact":
         raw = cosine_dup_pairs(embeddings, threshold)
+    else:
+        raise ValueError(
+            f"semdedup_apply: mode must be 'exact' or 'centroid', got {mode!r}"
+        )
     pairs = raw.select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )

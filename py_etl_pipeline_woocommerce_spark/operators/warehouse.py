@@ -488,7 +488,7 @@ def merge_rollup_store(
     contract as ``woo_flow._upsert_table``.
 
     Used directly for batch drops and as the body of the streaming
-    ``RollupMergeSink`` — the continuous aggregate is maintained by
+    ``run_stream_rollup_merge`` — the continuous aggregate is maintained by
     the identical code under both execution models. A merge runs in
     its own ``frames.scope()``, so every frame it pins is released
     before it returns and a long-running stream does not accumulate
@@ -1069,8 +1069,8 @@ def cdc_apply_store(
     each fold rewrites the table once, cost O(store + batch) with one
     key shuffle. For fact-scale targets use the month-pruned
     ``woo_flow`` upsert instead. Used directly for batch drops and as
-    the body of the streaming ``CdcApplySink`` — one code path under
-    both execution models.
+    the body of the streaming ``run_stream_cdc_apply`` — one code
+    path under both execution models.
     """
     from ..functions.fsutil import fs_exists
 

@@ -48,10 +48,16 @@ log = get_logger(__name__)
 #: it touches (the 100 TB form of the reference's keyed DELETE).
 PARTITION_COL = "order_month"
 
+#: The bronze ``stg_orders_raw`` table: one landed order row each.
+BRONZE_ORDERS_SCHEMA = (
+    "order_id long, json string, refunds string, extracted_at timestamp"
+)
+
 
 def stage_raw_orders(raw: DataFrame, warehouse_dir: str) -> None:
-    """Land the raw order JSON BEFORE any parsing — the Spark twin of
-    the reference's ``stg_orders_raw`` table (``load/ddl.sql:1-5``).
+    """Land the raw order rows BEFORE any parsing — the Spark twin of
+    the reference's ``stg_orders_raw`` table (``load/ddl.sql:1-5``):
+    each order's JSON, and beside it the JSON array of its refunds.
 
     Append-only: every extract lands with its timestamp, so normalize
     can be replayed (schema fixes, bug fixes) without refetching the
@@ -61,6 +67,7 @@ def stage_raw_orders(raw: DataFrame, warehouse_dir: str) -> None:
     staged = raw.select(
         F.get_json_object("raw", "$.id").cast("long").alias("order_id"),
         F.col("raw").alias("json"),
+        "refunds",
         F.current_timestamp().alias("extracted_at"),
     )
     staged.write.mode("append").parquet(
@@ -69,15 +76,23 @@ def stage_raw_orders(raw: DataFrame, warehouse_dir: str) -> None:
 
 
 def replay_parsed_from_raw(spark: SparkSession, warehouse_dir: str) -> DataFrame:
-    """Re-parse the landed raw JSON with NO transport: latest landed
+    """Re-parse the landed order rows with NO transport: latest landed
     copy per order_id → the same parsed frame ``build_facts`` produces
-    in-flight. One key-hash shuffle (row_number per order)."""
-    raw = spark.read.parquet(os.path.join(warehouse_dir, "stg_orders_raw"))
+    in-flight, refunds included. One key-hash shuffle (row_number per
+    order).
+
+    The table is read with ``BRONZE_ORDERS_SCHEMA``, so a directory
+    whose files differ in columns reads the same way every time. A
+    row landed before refunds were landed beside the JSON reads NULL
+    refunds and replays with zero refunds."""
+    raw = spark.read.schema(BRONZE_ORDERS_SCHEMA).parquet(
+        os.path.join(warehouse_dir, "stg_orders_raw")
+    )
     w = Window.partitionBy("order_id").orderBy(F.col("extracted_at").desc())
     latest = (
         raw.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(F.col("json").alias("raw"))
+        .select(F.col("json").alias("raw"), "refunds")
     )
     return rest.parse_orders(latest)
 
@@ -86,7 +101,7 @@ def build_facts(
     spark: SparkSession,
     transport: rest.Transport,
     since_iso: str,
-    warehouse_dir: str | None = None,
+    warehouse_dir: str,
     before_iso: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Extract + transform since the watermark → (orders, items) with
@@ -95,16 +110,15 @@ def build_facts(
 
     Refunds arrive on each order row from the extract and are applied
     inside that row (``rest.orders_frame``/``rest.items_frame``).
-    When ``warehouse_dir`` is given, the raw order JSON lands in
-    ``stg_orders_raw`` first; the raw frame is then the one pinned
-    frame (so the paged API extract runs exactly once for landing +
-    parsing), released by the caller's ``frames.scope()``."""
-    raw = rest.fetch_orders_since(
-        spark, transport, since_iso, before_iso=before_iso
+    The order rows land in ``warehouse_dir``'s ``stg_orders_raw``
+    first; the raw frame is the one pinned frame (so the paged API
+    extract runs exactly once for landing + parsing), released by the
+    caller's ``frames.scope()``."""
+    raw = frames.pin(
+        rest.fetch_orders_since(spark, transport, since_iso, before_iso=before_iso),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    if warehouse_dir is not None:
-        raw = frames.pin(raw, StorageLevel.MEMORY_AND_DISK_DESER)
-        stage_raw_orders(raw, warehouse_dir)
+    stage_raw_orders(raw, warehouse_dir)
     parsed = rest.parse_orders(raw)
     orders = _with_month(rest.orders_frame(parsed))
     items = rest.items_frame(parsed)
@@ -140,8 +154,8 @@ def _upsert_table(
     batch: DataFrame,
     path: str,
     keys: list[str],
+    months: set,
     delete_keys: DataFrame | None = None,
-    months: set | None = None,
 ) -> None:
     """Partition-local delete+insert upsert into a month-partitioned
     parquet table (the local-mode stand-in for MERGE INTO an
@@ -166,9 +180,8 @@ def _upsert_table(
     that was its only row, an order whose lines were all removed) is
     deleted, exactly as the reference's DELETE leaves no row behind.
 
-    ``months`` are the months of ``delete_keys`` (else of ``batch``)
-    when the caller already observed them on the batch's checkpoint;
-    left out, they are collected here.
+    ``months`` are the months of ``delete_keys`` (else of ``batch``),
+    which the caller observed on the batch's checkpoint.
     """
     from ..functions.fsutil import fs_exists
 
@@ -179,11 +192,6 @@ def _upsert_table(
     # from an empty table — silently deleting prior history
     if fs_exists(spark, path):
         table = spark.read.parquet(path)
-        if months is None:
-            months = {
-                r[0]
-                for r in key_src.select(PARTITION_COL).distinct().collect()
-            }
         months = set(months) | set(
             _months_holding(table, batch_keys, keys, months)
         )

@@ -25,6 +25,10 @@ Re-expresses the reference extract stack Spark-first:
   the row — no shuffle, join or window between an order and its
   refunds.
 
+An order row is ``(raw, refunds)`` (``ORDER_ROW_SCHEMA``) from the
+fetch through the bronze table (``woo_flow.stage_raw_orders``) to the
+facts, so a replay from bronze parses exactly what the run parsed.
+
 The HTTP transport is injectable (any picklable, thread-safe
 ``(path, params) -> (json_text, total_pages)`` callable; a task calls
 it from its pool threads at once) so the layer is testable offline and
@@ -75,10 +79,12 @@ def _in_flight(fn: Callable, items: Iterable, k: int) -> list:
         pool.shutdown(cancel_futures=True)
 
 
-RAW_SCHEMA = T.StructType(
+#: an order row from the fetch through bronze to the facts: the
+#: order's JSON and the JSON array of its refund records
+ORDER_ROW_SCHEMA = T.StructType(
     [
-        T.StructField("page", T.IntegerType()),
         T.StructField("raw", T.StringType()),
+        T.StructField("refunds", T.StringType()),
     ]
 )
 
@@ -218,9 +224,9 @@ def fetch_paged(
     params: dict,
     per_page: int = 100,
     max_unknown_pages: int = 10_000,
-    with_refunds: bool = False,
 ) -> DataFrame:
-    """All pages of a paged endpoint as a DataFrame of raw JSON rows.
+    """All pages of a paged orders endpoint as order rows
+    (``ORDER_ROW_SCHEMA``): each record's JSON and its refunds.
 
     Page 1 runs on the driver (one RTT) and yields the page count.
     The fetch is then ONE stage: a ``mapInPandas`` over ``spark.range``
@@ -237,10 +243,9 @@ def fetch_paged(
     walks until its first empty page — the serial loop of
     ``wc_client.paged`` turned into ``C`` concurrent ones.
 
-    ``with_refunds`` adds a ``refunds`` column: each record's refunds
-    (``_order_refunds``), fetched by the task that fetched the record
-    on the same ``C // tasks`` threads, so at most ``C`` calls of
-    either kind are in flight.
+    Each record's refunds (``_order_refunds``) are drained by the task
+    that fetched the record, on the same ``C // tasks`` threads, so at
+    most ``C`` calls of either kind are in flight.
     """
     first_body, total_pages = transport(path, {**params, "page": 1, "per_page": per_page})
     first = _load(first_body)
@@ -263,12 +268,12 @@ def fetch_paged(
     n_tasks = min(calls, last_page // calls)
     threads = calls // n_tasks
 
-    def stride(j: int) -> list[tuple[int, list]]:
-        """Stride ``j``'s pages and their records."""
+    def stride(j: int) -> list:
+        """Stride ``j``'s records, page by page."""
         out = []
         for page in range(j + 1, last_page + 1, calls):
             if page == 1:
-                out.append((page, first))  # the driver's probe, not refetched
+                out.extend(first)  # the driver's probe, not refetched
                 continue
             body, _ = transport(
                 path, {**params, "page": page, "per_page": per_page}
@@ -299,35 +304,24 @@ def fetch_paged(
                     last_page,
                     last_page,
                 )
-            out.append((page, recs))
+            out.extend(recs)
         return out
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             strides = [j for t in pdf["id"] for j in range(int(t), calls, n_tasks)]
-            rows = [
-                (page, r)
-                for walk in _in_flight(stride, strides, threads)
-                for page, recs in walk
-                for r in recs
-            ]
-            out = {
-                "page": [page for page, _ in rows],
-                "raw": [json.dumps(r) for _, r in rows],
-            }
-            if with_refunds:
-                out["refunds"] = _in_flight(
-                    partial(_order_refunds, transport), [r for _, r in rows], threads
-                )
-            yield pd.DataFrame(out)
+            recs = [r for walk in _in_flight(stride, strides, threads) for r in walk]
+            yield pd.DataFrame(
+                {
+                    "raw": [json.dumps(r) for r in recs],
+                    "refunds": _in_flight(
+                        partial(_order_refunds, transport), recs, threads
+                    ),
+                }
+            )
 
-    schema = RAW_SCHEMA
-    if with_refunds:
-        schema = T.StructType(
-            RAW_SCHEMA.fields + [T.StructField("refunds", T.StringType())]
-        )
     return spark.range(0, n_tasks, numPartitions=n_tasks).mapInPandas(
-        fetch, schema=schema
+        fetch, schema=ORDER_ROW_SCHEMA
     )
 
 
@@ -339,8 +333,8 @@ def fetch_orders_since(
     before_iso: str | None = None,
 ) -> DataFrame:
     """Raw orders created after ``since_iso`` (orders.py:4-18), each
-    with its refunds: ``(page, raw, refunds)``, where ``refunds`` is
-    the JSON array of the order's refund records, drained by the same
+    with its refunds: ``(raw, refunds)``, where ``refunds`` is the
+    JSON array of the order's refund records, drained by the same
     ``fetch_paged`` task that fetched the order (refunds.py:24-28).
     ``before_iso`` adds Woo's upper ``before`` bound — what makes a
     windowed backfill actually extract ONE window instead of
@@ -350,12 +344,12 @@ def fetch_orders_since(
         params["status"] = status
     if before_iso:
         params["before"] = before_iso
-    return fetch_paged(spark, transport, "orders", params, with_refunds=True)
+    return fetch_paged(spark, transport, "orders", params)
 
 
 def parse_orders(raw: DataFrame) -> DataFrame:
-    """raw JSON rows -> typed order structs (one row per order), with
-    the ``refunds`` array alongside when ``raw`` carries it.
+    """Order rows ``(raw, refunds)`` -> typed order structs (one row
+    per order) with the parsed ``refunds`` array alongside.
 
     Malformed JSON FAILS LOUDLY (the module doctrine): the default
     PERMISSIVE mode would turn a corrupt record into an all-NULL
@@ -364,13 +358,12 @@ def parse_orders(raw: DataFrame) -> DataFrame:
     idempotence one corrupt record at a time. FAILFAST raises on the
     record instead.
     """
-    refunds = [c for c in ("refunds",) if c in raw.columns]
     return raw.select(
         F.from_json("raw", ORDER_JSON_SCHEMA, {"mode": "FAILFAST"}).alias(
             "o"
         ),
-        *[F.from_json(c, T.ArrayType(REFUND_JSON_SCHEMA)).alias(c) for c in refunds],
-    ).select("o.*", *refunds)
+        F.from_json("refunds", T.ArrayType(REFUND_JSON_SCHEMA)).alias("refunds"),
+    ).select("o.*", "refunds")
 
 
 def _money(col) -> F.Column:
@@ -395,23 +388,15 @@ def orders_frame(parsed: DataFrame) -> DataFrame:
     """Order-grain frame matching the reference's df_orders columns
     (normalize_orders.py:25-49).
 
-    When ``parsed`` carries the order's ``refunds``, they are applied
-    in the row (refunds.py:30-37): ``refund_total`` sums the refund
-    amounts (NULL or garbage counts 0.0) and ``net_after_refunds`` is
+    The order's ``refunds`` are applied in the row (refunds.py:30-37):
+    ``refund_total`` sums the refund amounts (NULL or garbage counts
+    0.0, NULL refunds count none) and ``net_after_refunds`` is
     ``net_total - refund_total``."""
     total, total_tax = _money("total"), _money("total_tax")
-    refunds = []
-    if "refunds" in parsed.columns:
-        refund_total = F.coalesce(
-            F.aggregate(
-                "refunds", F.lit(0.0), lambda acc, r: acc + _money(r["amount"])
-            ),
-            F.lit(0.0),
-        )
-        refunds = [
-            refund_total.alias("refund_total"),
-            (total - total_tax - refund_total).alias("net_after_refunds"),
-        ]
+    refund_total = F.coalesce(
+        F.aggregate("refunds", F.lit(0.0), lambda acc, r: acc + _money(r["amount"])),
+        F.lit(0.0),
+    )
     return parsed.select(
         F.col("id").alias("order_id"),
         _order_date().alias("order_date"),
@@ -428,7 +413,8 @@ def orders_frame(parsed: DataFrame) -> DataFrame:
         (total - total_tax).alias("net_total"),
         F.col("billing.country").alias("billing_country"),
         F.col("billing.city").alias("billing_city"),
-        *refunds,
+        refund_total.alias("refund_total"),
+        (total - total_tax - refund_total).alias("net_after_refunds"),
     )
 
 
@@ -438,8 +424,8 @@ def items_frame(parsed: DataFrame) -> DataFrame:
     carries its order's ``order_date``, so it is laid out like its
     order without a join.
 
-    When ``parsed`` carries the order's ``refunds``, each line gets
-    ``refunded_quantity``/``refunded_total`` summed from the refund
+    Each line gets ``refunded_quantity``/``refunded_total`` from the
+    order's ``refunds``, summed from the refund
     lines of its (product_id, variation_id) grain (refunds.py:39-53;
     Woo refund line totals are negative, summed as-is). An order can
     carry one grain on two lines (``line_id``, Woo's ``li.id``, tells
@@ -450,22 +436,13 @@ def items_frame(parsed: DataFrame) -> DataFrame:
     (deliberately): order-grain totals agree either way, but a
     row-for-row check over fct_order_items must encode this policy
     (test-pinned in tests/test_ingest_flow.py)."""
-    refunded = "refunds" in parsed.columns
-    if refunded:
-        parsed = _with_line_refunds(parsed)
-    li = parsed.select(
+    li = _with_line_refunds(parsed).select(
         F.col("id").alias("order_id"),
         _order_date().alias("order_date"),
         F.posexplode("line_items").alias("pos", "li"),
-        *(["_line_refunds"] if refunded else []),
+        "_line_refunds",
     )
-    refund_cols = []
-    if refunded:
-        mine = F.col("_line_refunds")[F.col("pos")]
-        refund_cols = [
-            mine["refunded_quantity"].alias("refunded_quantity"),
-            mine["refunded_total"].alias("refunded_total"),
-        ]
+    mine = F.col("_line_refunds")[F.col("pos")]
     return li.select(
         "order_id",
         "order_date",
@@ -481,7 +458,8 @@ def items_frame(parsed: DataFrame) -> DataFrame:
             "subtotal"
         ),
         F.col("li.tax_class").alias("tax_class"),
-        *refund_cols,
+        mine["refunded_quantity"].alias("refunded_quantity"),
+        mine["refunded_total"].alias("refunded_total"),
     )
 
 
@@ -582,12 +560,12 @@ def fetch_products_by_ids(
             raws = [
                 r for recs in _in_flight(include, chunks, _CALLS_PER_CORE) for r in recs
             ]
-            yield pd.DataFrame({"page": [0] * len(raws), "raw": raws})
+            yield pd.DataFrame({"raw": raws})
 
     raw = (
         product_ids.select(F.col(product_ids.columns[0]).alias("product_id"))
         .distinct()
-        .mapInPandas(fetch_batches, schema=RAW_SCHEMA)
+        .mapInPandas(fetch_batches, schema="raw string")
     )
     parsed = raw.select(F.from_json("raw", PRODUCT_JSON_SCHEMA).alias("p")).select(
         "p.*"

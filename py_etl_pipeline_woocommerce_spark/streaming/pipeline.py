@@ -110,6 +110,32 @@ class ForeachBatchUpserter:
         self._merge(batch_df)
 
 
+class _StoreSink:
+    """``foreachBatch`` sink that folds every micro-batch into an
+    on-disk store: ``fold(batch_df, batch_id)`` is the same function a
+    batch drop calls, so a stream-maintained store equals the batch
+    one. Counts ``batches_seen``."""
+
+    def __init__(self, fold):
+        self.fold = fold
+        self.batches_seen = 0
+
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        self.batches_seen += 1
+        self.fold(batch_df, batch_id)
+
+
+def _start(stream: DataFrame, checkpoint_dir: str, body, mode: str = "append"):
+    """Start ``stream`` with ``body`` as its ``foreachBatch`` callback,
+    checkpointed at ``checkpoint_dir``; returns the query."""
+    return (
+        stream.writeStream.outputMode(mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(body)
+        .start()
+    )
+
+
 def run_stream_to_upsert(
     spark: SparkSession,
     source_path: str,
@@ -123,13 +149,7 @@ def run_stream_to_upsert(
         read_event_stream(spark, source_path), window, watermark
     )
     upserter = ForeachBatchUpserter(["window_start", "event_type"])
-    query = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upserter)
-        .start()
-    )
-    return query, upserter
+    return _start(agg, checkpoint_dir, upserter, mode="update"), upserter
 
 
 def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -186,13 +206,7 @@ def run_stream_dedup_against_index(
             # re-implement its bookkeeping here (r12 review find)
             sink(flagged, batch_id)
 
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(check_batch)
-        .start()
-    )
-    return query, sink
+    return _start(stream, checkpoint_dir, check_batch), sink
 
 
 def run_stream_line_strip(
@@ -202,14 +216,13 @@ def run_stream_line_strip(
     index_prefix: str,
     schema,
     min_df: int = 2,
-    fold_into_index: bool = True,
     n_buckets: int = 32,
 ) -> tuple:
     """Streaming daily-drop boilerplate strip: each micro-batch is
     stripped against the STORED line-frequency index
     (``dedup.write_line_index`` — initialize it over the existing
-    corpus before starting the stream), and by default its own line
-    partials are then appended, making the store SELF-MAINTAINING: a
+    corpus before starting the stream), and its own line partials
+    are then appended, making the store SELF-MAINTAINING: a
     footer that appears once per daily drop crosses ``min_df`` after
     enough drops and starts being stripped — the cross-drop detection
     no per-batch strip can do. Per-batch cost is O(drop) (see
@@ -256,25 +269,17 @@ def run_stream_line_strip(
                 ),
                 batch_id,
             )
-            if fold_into_index:
-                # fold the SAME checkpointed exploded frame the strip just
-                # consumed — no second explode+md5 of the drop's text; the
-                # n_buckets must match the store's spec (Spark rejects a
-                # mismatched append loudly, no silent bucket corruption).
-                # batch_id makes the fold idempotent under replay (marker
-                # checked/written inside write_line_partials)
-                write_line_partials(
-                    lines[0], index_prefix, n_buckets=n_buckets,
-                    batch_id=batch_id,
-                )
+            # fold the SAME checkpointed exploded frame the strip just
+            # consumed — no second explode+md5 of the drop's text; the
+            # n_buckets must match the store's spec (Spark rejects a
+            # mismatched append loudly, no silent bucket corruption).
+            # batch_id makes the fold idempotent under replay (marker
+            # checked/written inside write_line_partials)
+            write_line_partials(
+                lines[0], index_prefix, n_buckets=n_buckets, batch_id=batch_id
+            )
 
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(strip_batch)
-        .start()
-    )
-    return query, sink
+    return _start(stream, checkpoint_dir, strip_batch), sink
 
 
 def streaming_session_agg(
@@ -330,33 +335,6 @@ def streaming_daily_active_sketch(
     )
 
 
-class RollupMergeSink:
-    """``foreachBatch`` sink that maintains an on-disk continuous
-    aggregate: every micro-batch of raw events folds into the stored
-    month-partitioned daily rollup via
-    ``warehouse.merge_rollup_store`` — the IDENTICAL code path a
-    batch drop uses, so stream- and batch-maintained stores are
-    bit-equal (pytest-asserted). Per batch cost is O(batch + touched
-    months' partial rows); history is never rescanned. Late events
-    within the watermark fold into their (old) day naturally because
-    the stored measures are associative partials."""
-
-    def __init__(self, store_path: str):
-        self.store_path = store_path
-        self.batches_seen = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.warehouse import merge_rollup_store
-
-        self.batches_seen += 1
-        # batch_id makes re-delivered micro-batches no-ops (the SUM
-        # fold is not idempotent; see merge_rollup_store's marker note)
-        merge_rollup_store(
-            batch_df.sparkSession, self.store_path, batch_df,
-            batch_id=batch_id,
-        )
-
-
 def run_stream_rollup_merge(
     spark: SparkSession,
     source_path: str,
@@ -364,44 +342,30 @@ def run_stream_rollup_merge(
     store_path: str,
 ) -> tuple:
     """Wire source → foreachBatch continuous-aggregate maintenance;
-    returns (query, sink). Raw events go straight to the sink (no
-    pre-aggregation in the stream graph): the merge aggregates
-    per-batch inside ``merge_rollup_store``, keeping ALL state in
-    the store — restart-safe with zero streaming state beyond the
-    source offsets in the checkpoint."""
-    stream = read_event_stream(spark, source_path)
-    sink = RollupMergeSink(store_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
-    return query, sink
+    returns (query, sink). Every micro-batch of raw events folds into
+    the stored month-partitioned daily rollup via
+    ``warehouse.merge_rollup_store`` — the IDENTICAL code path a batch
+    drop uses, so stream- and batch-maintained stores are bit-equal
+    (pytest-asserted). Per batch cost is O(batch + touched months'
+    partial rows); history is never rescanned. Late events within the
+    watermark fold into their (old) day naturally because the stored
+    measures are associative partials.
 
+    Raw events go straight to the sink (no pre-aggregation in the
+    stream graph): the merge aggregates per-batch inside
+    ``merge_rollup_store``, keeping ALL state in the store —
+    restart-safe with zero streaming state beyond the source offsets
+    in the checkpoint."""
+    from ..operators.warehouse import merge_rollup_store
 
-class CdcApplySink:
-    """``foreachBatch`` sink that maintains an on-disk current-state
-    table from a CDC change stream: every micro-batch folds through
-    ``warehouse.cdc_apply_store`` — the IDENTICAL code path a batch
-    drop uses. Because the store keeps each row's last applied
-    sequence and the fold resolves max-seq over stored ∪ incoming,
-    the result is independent of micro-batch boundaries AND of
-    out-of-order delivery across batches (split-invariance
-    pytest-asserted)."""
-
-    def __init__(self, store_path: str, key: str):
-        self.store_path = store_path
-        self.key = key
-        self.batches_seen = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.warehouse import cdc_apply_store
-
-        self.batches_seen += 1
-        cdc_apply_store(
-            batch_df.sparkSession, self.store_path, batch_df, self.key
+    # batch_id makes re-delivered micro-batches no-ops (the SUM fold
+    # is not idempotent; see merge_rollup_store's marker note)
+    sink = _StoreSink(
+        lambda df, batch_id: merge_rollup_store(
+            df.sparkSession, store_path, df, batch_id=batch_id
         )
+    )
+    return _start(read_event_stream(spark, source_path), checkpoint_dir, sink), sink
 
 
 def run_stream_cdc_apply(
@@ -413,41 +377,24 @@ def run_stream_cdc_apply(
     key: str,
 ) -> tuple:
     """Wire a CDC change-file stream → foreachBatch current-state
-    maintenance; returns (query, sink). All state lives in the store
-    (rows + their last applied seq) — restart-safe with zero
-    streaming state beyond source offsets."""
+    maintenance; returns (query, sink). Every micro-batch folds
+    through ``warehouse.cdc_apply_store`` — the IDENTICAL code path a
+    batch drop uses. Because the store keeps each row's last applied
+    sequence and the fold resolves max-seq over stored ∪ incoming,
+    the result is independent of micro-batch boundaries AND of
+    out-of-order delivery across batches (split-invariance
+    pytest-asserted). All state lives in the store (rows + their last
+    applied seq) — restart-safe with zero streaming state beyond
+    source offsets."""
+    from ..operators.warehouse import cdc_apply_store
+
     stream = read_event_stream(
         spark, source_path, max_files_per_trigger=1, schema=source_schema
     )
-    sink = CdcApplySink(store_path, key)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    sink = _StoreSink(
+        lambda df, _: cdc_apply_store(df.sparkSession, store_path, df, key)
     )
-    return query, sink
-
-
-class FirstSeenSink:
-    """``foreachBatch`` sink maintaining the on-disk (user, first-day)
-    table via ``warehouse.merge_first_seen_store`` — MIN is
-    associative, so the stream-maintained store equals the one-shot
-    batch fold regardless of micro-batch boundaries or arrival order
-    (pytest-asserted). The live new-vs-returning split joins each
-    day's actives against this store."""
-
-    def __init__(self, store_path: str):
-        self.store_path = store_path
-        self.batches_seen = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.warehouse import merge_first_seen_store
-
-        self.batches_seen += 1
-        merge_first_seen_store(
-            batch_df.sparkSession, self.store_path, batch_df
-        )
+    return _start(stream, checkpoint_dir, sink), sink
 
 
 def run_stream_first_seen(
@@ -457,14 +404,18 @@ def run_stream_first_seen(
     store_path: str,
 ) -> tuple:
     """Wire an event stream → foreachBatch first-seen maintenance;
-    returns (query, sink). All state is in the store — restart-safe
-    with zero streaming state beyond source offsets."""
+    returns (query, sink). Each micro-batch folds into the on-disk
+    (user, first-day) table via ``warehouse.merge_first_seen_store`` —
+    MIN is associative, so the stream-maintained store equals the
+    one-shot batch fold regardless of micro-batch boundaries or
+    arrival order (pytest-asserted). The live new-vs-returning split
+    joins each day's actives against this store. All state is in the
+    store — restart-safe with zero streaming state beyond source
+    offsets."""
+    from ..operators.warehouse import merge_first_seen_store
+
     stream = read_event_stream(spark, source_path, max_files_per_trigger=1)
-    sink = FirstSeenSink(store_path)
-    query = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    sink = _StoreSink(
+        lambda df, _: merge_first_seen_store(df.sparkSession, store_path, df)
     )
-    return query, sink
+    return _start(stream, checkpoint_dir, sink), sink

@@ -286,6 +286,10 @@ def test_retry_restages_bronze_and_replay_matches_loaded_facts(
     }
     assert replayed[3]["net_total"] == pytest.approx(23.0)
     assert set(replayed) == set(loaded)
+    assert {k: r["refund_total"] for k, r in replayed.items()} == {
+        k: r["refund_total"] for k, r in loaded.items()
+    }
+    assert loaded[2]["refund_total"] == pytest.approx(10.0)
 
 
 def test_cli_backfill_never_parks_watermark_in_the_future(spark, tmp_path):

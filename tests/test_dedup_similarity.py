@@ -165,20 +165,6 @@ def test_cosine_dup_blocked_matches_bruteforce(spark, sf_dir):
     assert len(blocked) > 0
 
 
-def test_cosine_kernels_agree(spark, sf_dir):
-    # BLAS matmul vs sequential-fold SQL kernel: same pair set on real
-    # data (guards the ulp-at-threshold risk noted in the docstring)
-    from py_etl_pipeline_woocommerce_spark.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    pd_pairs = {(r["vec_a"], r["vec_b"]) for r in cosine_dup_pairs(emb).collect()}
-    sql_pairs = {
-        (r["vec_a"], r["vec_b"])
-        for r in cosine_dup_pairs(emb, kernel="sql").collect()
-    }
-    assert pd_pairs == sql_pairs
-
-
 def test_ann_lsh_topk_returns_bucket_neighbors(spark, sf_dir):
     from py_etl_pipeline_woocommerce_spark.catalog import load_table
 
@@ -313,6 +299,8 @@ def test_semdedup_apply_keeps_one_per_semantic_cluster(spark):
     kept = {v for v, r in out.items() if r["is_kept"]}
     assert kept == {1, 10, 20}
     assert out[2]["cluster_size"] == 3 and out[11]["cluster_size"] == 2
+    with pytest.raises(ValueError, match="mode"):
+        semdedup_apply(emb, threshold=0.9, mode="Exact")
 
 
 def test_semdedup_centroid_mode_parity_and_plan(spark, sf_dir):
@@ -527,8 +515,8 @@ def test_docs_as_lines_bridge_rewraps_tokens(spark):
 
 def test_dedup_clusters_raises_on_nonconvergence(spark):
     """A component whose diameter exceeds max_iter must REFUSE, not
-    return labels that silently split one cluster into several. With
-    max_iter=0 no round runs at all, which must refuse too."""
+    return labels that silently split one cluster into several.
+    max_iter=0 would run no round at all and is refused up front."""
     import pytest as _pytest
 
     from py_etl_pipeline_woocommerce_spark.operators.dedup import dedup_clusters
@@ -540,9 +528,10 @@ def test_dedup_clusters_raises_on_nonconvergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(24)], "doc_a long, doc_b long"
     )
-    for max_iter in (0, 3):
-        with _pytest.raises(RuntimeError, match="did not converge"):
-            dedup_clusters(docs, pairs=chain, max_iter=max_iter)
+    with _pytest.raises(ValueError, match="max_iter"):
+        dedup_clusters(docs, pairs=chain, max_iter=0)
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(docs, pairs=chain, max_iter=3)
     # enough rounds: one component rooted at 0
     ok = dedup_clusters(docs, pairs=chain, max_iter=30).collect()
     assert {r.cluster_id for r in ok} == {0}

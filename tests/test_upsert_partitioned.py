@@ -160,7 +160,8 @@ def test_upsert_deletes_stale_row_when_key_changes_month(spark, tmp_path):
             df = spark.createDataFrame(
                 rows, "order_id long, order_date string, status string"
             ).withColumn("order_month", F.substring("order_date", 1, 7))
-            _upsert_table(spark, df, path, ["order_id"])
+            months = {date[:7] for _, date, _ in rows}
+            _upsert_table(spark, df, path, ["order_id"], months=months)
 
         drop(
             [
