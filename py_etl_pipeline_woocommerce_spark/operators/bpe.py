@@ -28,7 +28,7 @@ deterministic token tie-break); the merge table itself is tiny
 
 Applying a trained merge table is fully distributed AND fully
 JVM-side: each merge (left, right) is a literal at plan time, so
-``segment_expr`` replays the merges in rank order as a chain of
+``segment_tokens`` replays the merges in rank order as a chain of
 ``F.aggregate`` left-folds over the symbol array — the fold "replace
 the accumulator's last symbol when (last, current) equals the merge"
 is exactly left-to-right non-overlapping application, and the whole
@@ -241,30 +241,12 @@ def _fold_step(left: str, right: str):
 
 def _fold_chain(syms: Column, merges: list[tuple[str, str]]) -> Column:
     """Apply ``merges`` in rank order to a symbol-array column — the
-    shared core of ``segment_expr`` and ``segment_tokens``."""
+    core of ``segment_tokens``'s staged chain."""
     for left, right in merges:
         syms = F.aggregate(
             syms, F.array().cast("array<string>"), _fold_step(left, right)
         )
     return syms
-
-
-def segment_expr(
-    token: Column | str, merges: list[tuple[str, str]]
-) -> Column:
-    """Symbol sequence of ``token`` after replaying ``merges`` in
-    rank order — pure JVM higher-order functions.
-
-    Each merge is one ``F.aggregate`` left-fold with LITERAL
-    (left, right): append the current symbol, except when the
-    accumulator's last symbol is ``left`` and the current is
-    ``right`` — then replace the last with the concatenation. A left
-    fold IS left-to-right non-overlapping application (the merged
-    symbol ``left+right`` can never equal ``left`` again unless
-    ``right`` is empty, which split() never produces).
-    """
-    col = F.col(token) if isinstance(token, str) else token
-    return _fold_chain(_chars(col), merges)
 
 
 def segment_tokens(

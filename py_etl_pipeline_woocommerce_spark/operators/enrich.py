@@ -54,26 +54,40 @@ def re_enrich_missing_categories(
     """
     fresh = part.select(
         F.col("p_partkey").alias("product_id"),
-        F.col("p_type").alias("_fresh_category"),
+        F.col("p_type").alias("_fresh"),
     )
-    if force_all:
-        take_fresh = F.col("product_id").isNotNull()
-    else:
-        # the isNotNull guard keeps the docstring's promise: a row
-        # with NULL product_id and a BLANK snapshot must stay "" —
-        # the reference's UPDATE join on product_id never matches
-        # NULL, so overwriting it to NULL here would drift
-        take_fresh = F.col("product_id").isNotNull() & (
-            F.col("category_snapshot").isNull()
-            | (F.trim(F.col("category_snapshot")) == "")
-        )
+    return refresh_categories(items, fresh, force_all)
+
+
+def missing_snapshot() -> F.Column:
+    """A row whose ``category_snapshot`` is NULL or blank: the rows a
+    missing-only refresh selects."""
+    return F.col("category_snapshot").isNull() | (
+        F.trim(F.col("category_snapshot")) == ""
+    )
+
+
+def refresh_categories(
+    items: DataFrame, fresh: DataFrame, force_all: bool
+) -> DataFrame:
+    """The UPDATE rule of a category refresh: left-join ``fresh``
+    ``(product_id, _fresh)`` onto ``items`` and take ``_fresh`` as the
+    ``category_snapshot`` of every row the mode selects — a row with a
+    NULL/blank snapshot, or with ``force_all`` every row — keeping the
+    old snapshot elsewhere. A row with a NULL ``product_id`` is never
+    selected: the reference's UPDATE join on product_id never matches
+    NULL, so overwriting its snapshot here would drift. The caller
+    picks the join hint by passing ``fresh`` hinted or not."""
+    take_fresh = F.col("product_id").isNotNull()
+    if not force_all:
+        take_fresh &= missing_snapshot()
     return (
         items.join(fresh, "product_id", "left")
         .withColumn(
             "category_snapshot",
-            F.when(take_fresh, F.col("_fresh_category")).otherwise(
+            F.when(take_fresh, F.col("_fresh")).otherwise(
                 F.col("category_snapshot")
             ),
         )
-        .drop("_fresh_category")
+        .drop("_fresh")
     )

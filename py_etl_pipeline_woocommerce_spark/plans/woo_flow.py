@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..functions import frames
 from ..functions.frames import checkpoint
 from ..functions.logging import get_logger
+from ..operators.enrich import missing_snapshot, refresh_categories
 from ..operators.upsert import upsert_df, upsert_partitioned_parquet
 from ..sources import rest
 from ..sources.state import WatermarkStore
@@ -455,12 +456,9 @@ def re_enrich_run(
         log.info("re-enrich: no item fact at %s", path)
         return {"re_enriched_months": 0}
     items = spark.read.parquet(path)
-    missing = F.col("category_snapshot").isNull() | (
-        F.trim(F.col("category_snapshot")) == ""
-    )
     id_scope = items.filter(F.col("product_id").isNotNull())
     if not force_all:
-        id_scope = id_scope.filter(missing)
+        id_scope = id_scope.filter(missing_snapshot())
     months = [
         r[0] for r in id_scope.select(PARTITION_COL).distinct().collect()
     ]
@@ -470,19 +468,11 @@ def re_enrich_run(
     fresh = rest.fetch_products_by_ids(
         spark, transport, id_scope.select("product_id")
     ).select("product_id", F.col("category_snapshot").alias("_fresh"))
-    take_fresh = (
-        F.col("product_id").isNotNull() if force_all else missing
-    )
     _rewrite_months(
         items, path, months,
-        lambda scope: scope.join(F.broadcast(fresh), "product_id", "left")
-        .withColumn(
-            "category_snapshot",
-            F.when(take_fresh, F.col("_fresh")).otherwise(
-                F.col("category_snapshot")
-            ),
-        )
-        .select(*items.columns),
+        lambda scope: refresh_categories(
+            scope, F.broadcast(fresh), force_all
+        ).select(*items.columns),
     )
     log.info(
         "re-enrich: rewrote %d month partition(s), force_all=%s",

@@ -1,15 +1,16 @@
 """Requests-backed HTTP transport for the paged-REST extract layer.
 
-Production twin of the injectable ``Transport`` contract in
-``rest.py:37`` — the piece the reference builds in
-``wc_client.py:9-49`` (env-configured credentials, query-string auth,
-HTTP error → exception, serial ``paged()`` loop). Here the paging loop
-lives in ``rest.fetch_paged`` (distributed); this class only does one
-robust HTTP GET per call, plus what a production extract needs that
-the reference omits: bounded exponential backoff with ``Retry-After``
-honoring on 429/5xx, and total-page discovery from the
-``X-WP-TotalPages`` header, which sizes ``fetch_paged``'s one-stage
-fan-out over every page (page 1's probe rides in the task closure).
+Production twin of the injectable ``rest.Transport`` contract — the
+piece the reference builds in ``wc_client.py:9-49`` (env-configured
+credentials, query-string auth, HTTP error → exception, serial
+``paged()`` loop). Here the paging loop is ``rest._walk``, the one
+page walk that order strides, refunds and product chunks share; this
+class only does one robust HTTP GET per call, plus what a production
+extract needs that the reference omits: bounded exponential backoff
+with ``Retry-After`` honoring on 429/5xx, and total-page discovery
+from the ``X-WP-TotalPages`` header, which ends each walk and sizes
+``rest.fetch_orders_since``'s one-stage fan-out over every page
+(page 1's probe rides in the task closure).
 
 Pickling: instances ship to executors inside ``mapInPandas`` closures,
 so the ``requests.Session`` (unpicklable, holds sockets) is dropped

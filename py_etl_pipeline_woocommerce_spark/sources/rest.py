@@ -25,6 +25,11 @@ Re-expresses the reference extract stack Spark-first:
   the row — no shuffle, join or window between an order and its
   refunds.
 
+Every page request — the driver's probe, each orders stride, each
+order's refunds and each products include= chunk — goes through one
+walk, ``_walk``, so all of them stop and refuse by one rule (the one
+paged contract of ``wc_client.paged``).
+
 An order row is ``(raw, refunds)`` (``ORDER_ROW_SCHEMA``) from the
 fetch through the bronze table (``woo_flow.stage_raw_orders``) to the
 facts, so a replay from bronze parses exactly what the run parsed.
@@ -52,14 +57,21 @@ from .http_transport import WooHttpError
 
 #: transport(path, params) -> (response_json_text, total_pages).
 #: total_pages mirrors WooCommerce's X-WP-TotalPages header; a
-#: transport that can't know it may return -1 for "unknown" (the
-#: fetch then probes pages until an empty one, along each stride).
+#: transport that can't know it may return -1 for "unknown" (a walk
+#: then stops at its first empty or short page).
 Transport = Callable[[str, dict], tuple[str, int]]
 
 #: transport calls in flight per core: a paged fetch keeps
 #: ``min(pages, 2 × cores)`` in flight, and a products task (at most
 #: one runs per core) keeps 2
 _CALLS_PER_CORE = 2
+
+#: records a page request asks for (Woo's ``per_page`` maximum); an
+#: include= chunk of product ids is one page of them
+_PER_PAGE = 100
+
+#: page ceiling of a walk whose transport reports no total
+_MAX_UNKNOWN_PAGES = 10_000
 
 _log = logging.getLogger(__name__)
 
@@ -177,21 +189,58 @@ def _load(body: str) -> list:
     return data if isinstance(data, list) else [data]
 
 
+def _walk(
+    transport: Transport, path: str, params: dict, pages: range, total: int = -1
+) -> Iterator[tuple[list, int]]:
+    """``(records, total_pages)`` of each of ``pages`` of ``path`` in
+    order — the one page walk every Woo REST call goes through
+    (``wc_client.paged``'s loop). Its rule reads ONE total for the
+    whole walk: ``total`` when the caller knows it (an orders stride
+    gets the driver's), else the first X-WP-TotalPages a response
+    reports. A later response's own count — a lagging replica's
+    smaller one, or -1 for a missing header — does not change it.
+
+    - a known total ends the walk at that page;
+    - an unknown total (-1) ends it at the first empty or short page;
+    - under a known total above 1 an empty page is refused: the
+      server SAID it holds rows, so an empty body is an upstream
+      inconsistency (replica lag, WAF), and skipping it would silently
+      drop its rows and advance the watermark past the gap.
+
+    ``pages.stop - 1`` is the walk's ceiling: a full page there under
+    an unknown total is logged, since pages past it are not fetched.
+    A generator, so the driver's probe can take page 1 alone."""
+    for page in pages:
+        query = {**params, "per_page": _PER_PAGE, "page": page}
+        body, reported = transport(path, query)
+        total = reported if total < 0 else total
+        recs = _load(body)
+        if not recs and total > 1:
+            raise RuntimeError(
+                f"page {page} of {path} came back empty but "
+                f"X-WP-TotalPages reported {total} pages — refusing to "
+                "silently drop the remaining pages"
+            )
+        yield recs, total
+        if page >= total if total >= 0 else len(recs) < _PER_PAGE:
+            return
+        if total < 0 and page == pages.stop - 1:
+            _log.warning(
+                "unknown-total walk of %s hit its %d-page ceiling with a "
+                "full page — data past page %d is NOT extracted",
+                path,
+                page,
+                page,
+            )
+
+
 def _drain(transport: Transport, path: str, params: dict) -> list:
-    """Every record of ``path``, paged serially until the end: page
-    ``total_pages`` when the transport knows it, else the first short
-    page (``fetch_paged``'s rule). Used where one task owns a small
-    paged walk, so stopping at page 1 would silently truncate it."""
-    per_page = 100
-    page, recs = 1, []
-    while True:
-        body, total_pages = transport(path, {**params, "per_page": per_page, "page": page})
-        batch = _load(body)
-        recs.extend(batch)
-        done = page >= total_pages if total_pages >= 0 else len(batch) < per_page
-        if done:
-            return recs
-        page += 1
+    """Every record of ``path``: the one-stride ``_walk`` over pages
+    ``1.._MAX_UNKNOWN_PAGES``, for a walk one task owns (refunds, an
+    include= chunk), where stopping at page 1 would silently truncate
+    it."""
+    pages = range(1, _MAX_UNKNOWN_PAGES + 1)
+    return [r for recs, _ in _walk(transport, path, params, pages) for r in recs]
 
 
 def _order_refunds(transport: Transport, order: dict) -> str:
@@ -217,95 +266,66 @@ def _order_refunds(transport: Transport, order: dict) -> str:
     return json.dumps(recs)
 
 
-def fetch_paged(
+def fetch_orders_since(
     spark: SparkSession,
     transport: Transport,
-    path: str,
-    params: dict,
-    per_page: int = 100,
-    max_unknown_pages: int = 10_000,
+    since_iso: str,
+    before_iso: str | None = None,
 ) -> DataFrame:
-    """All pages of a paged orders endpoint as order rows
-    (``ORDER_ROW_SCHEMA``): each record's JSON and its refunds.
+    """Orders created after ``since_iso`` (orders.py:4-18) as order
+    rows (``ORDER_ROW_SCHEMA``): each order's JSON and the JSON array
+    of its refund records (refunds.py:24-28). ``before_iso`` adds
+    Woo's upper ``before`` bound — what makes a windowed backfill
+    actually extract ONE window instead of everything after the
+    cursor.
 
     Page 1 runs on the driver (one RTT) and yields the page count.
     The fetch is then ONE stage: a ``mapInPandas`` over ``spark.range``
     that keeps ``C = min(pages, 2 × cores)`` calls in flight. The pages
-    form ``C`` strides (stride ``j`` takes pages ``j+1, j+1+C, …``),
-    and tasks grow with the page count, not with the cores: a task
-    takes at least ``C`` pages before another is added, so
-    ``tasks = min(C, pages // C)``, and each task walks its
+    form ``C`` strides (stride ``j`` takes pages ``j+1, j+1+C, …``,
+    each a ``_walk``), and tasks grow with the page count, not with
+    the cores: a task takes at least ``C`` pages before another is
+    added, so ``tasks = min(C, pages // C)``, and each task walks its
     strides on ``C // tasks`` threads. A drop-sized fetch (fewer than
     ``2C`` pages) is one task; ``C²`` pages or more keep ``2 × cores``
     single-threaded tasks. Page 1's records ride in the closure, so
     stride 0 starts from them instead of fetching the page again.
-    When the transport reports an unknown page count (-1), each stride
-    walks until its first empty page — the serial loop of
+    Every stride walks under the probe's total, so a stride page that
+    comes back empty is refused even when its own response counts
+    fewer pages. When the transport reports an unknown page count
+    (-1), the page count is ``_MAX_UNKNOWN_PAGES`` and each stride
+    stops at its first empty or short page — the serial loop of
     ``wc_client.paged`` turned into ``C`` concurrent ones.
 
-    Each record's refunds (``_order_refunds``) are drained by the task
-    that fetched the record, on the same ``C // tasks`` threads, so at
+    Each order's refunds (``_order_refunds``) are drained by the task
+    that fetched the order, on the same ``C // tasks`` threads, so at
     most ``C`` calls of either kind are in flight.
     """
-    first_body, total_pages = transport(path, {**params, "page": 1, "per_page": per_page})
-    first = _load(first_body)
-    known_total = total_pages >= 0
-    if not known_total:
-        # Unknown total (no X-WP-TotalPages): a short first page means
-        # done, else probe optimistically (wc_client.py:41-48 loop).
-        total_pages = 1 if len(first) < per_page else max_unknown_pages
-    if known_total and total_pages > 1 and not first:
-        # the executor path refuses this exact inconsistency (below);
-        # swallowing it on the DRIVER would silently drop pages 2..N
-        # and let the caller advance its watermark past the gap
-        raise RuntimeError(
-            f"fetch_paged: page 1 of {path} came back empty but "
-            f"X-WP-TotalPages reported {total_pages} pages — refusing "
-            "to silently drop the remaining pages"
-        )
-    last_page = max(total_pages, 1) if first else 1
+    params: dict = {"after": since_iso, "orderby": "date", "order": "asc"}
+    if before_iso:
+        params["before"] = before_iso
+    # read on the driver: it sizes the fan-out
+    ceiling = _MAX_UNKNOWN_PAGES
+    # an empty page 1 under a known total above 1 raises here, before
+    # any task runs: the caller would advance its watermark past it
+    first, total = next(
+        _walk(transport, "orders", params, range(1, ceiling + 1))
+    )
+    # unknown total: a short first page means done, else probe
+    # optimistically up to the ceiling (wc_client.py:41-48 loop)
+    known = total if total >= 0 else 1 if len(first) < _PER_PAGE else ceiling
+    last_page = max(known, 1) if first else 1
     calls = min(last_page, spark.sparkContext.defaultParallelism * _CALLS_PER_CORE)
     n_tasks = min(calls, last_page // calls)
     threads = calls // n_tasks
+    refunds = partial(_order_refunds, transport)
 
     def stride(j: int) -> list:
-        """Stride ``j``'s records, page by page."""
-        out = []
-        for page in range(j + 1, last_page + 1, calls):
-            if page == 1:
-                out.extend(first)  # the driver's probe, not refetched
-                continue
-            body, _ = transport(
-                path, {**params, "page": page, "per_page": per_page}
-            )
-            recs = _load(body)
-            if not recs:
-                if known_total:
-                    # the server SAID this page exists; an empty body
-                    # is an upstream inconsistency (replica lag, WAF)
-                    # — skipping it would silently drop its rows and
-                    # advance the watermark past the gap. Fail the
-                    # task loudly; retries re-fetch the window.
-                    raise RuntimeError(
-                        f"fetch_paged: page {page} of {path} came "
-                        f"back empty but X-WP-TotalPages reported "
-                        f"{total_pages} pages — refusing to "
-                        "silently drop the remaining pages"
-                    )
-                break  # past the end (unknown-total probing)
-            if not known_total and page == last_page:
-                # probe range exhausted with data still flowing:
-                # pages beyond max_unknown_pages may exist
-                _log.warning(
-                    "fetch_paged: unknown-total probe of %s hit the "
-                    "max_unknown_pages=%d ceiling with a non-empty "
-                    "page — data past page %d is NOT extracted",
-                    path,
-                    last_page,
-                    last_page,
-                )
-            out.extend(recs)
-        return out
+        """Stride ``j``'s records; stride 0 starts from the probe's."""
+        head, start = (first, 1 + calls) if j == 0 else ([], j + 1)
+        pages = range(start, last_page + 1, calls)
+        walk = _walk(transport, "orders", params, pages, total)
+        return head + [r for recs, _ in walk for r in recs]
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -314,37 +334,13 @@ def fetch_paged(
             yield pd.DataFrame(
                 {
                     "raw": [json.dumps(r) for r in recs],
-                    "refunds": _in_flight(
-                        partial(_order_refunds, transport), recs, threads
-                    ),
+                    "refunds": _in_flight(refunds, recs, threads),
                 }
             )
 
     return spark.range(0, n_tasks, numPartitions=n_tasks).mapInPandas(
         fetch, schema=ORDER_ROW_SCHEMA
     )
-
-
-def fetch_orders_since(
-    spark: SparkSession,
-    transport: Transport,
-    since_iso: str,
-    status: str | None = None,
-    before_iso: str | None = None,
-) -> DataFrame:
-    """Raw orders created after ``since_iso`` (orders.py:4-18), each
-    with its refunds: ``(raw, refunds)``, where ``refunds`` is the
-    JSON array of the order's refund records, drained by the same
-    ``fetch_paged`` task that fetched the order (refunds.py:24-28).
-    ``before_iso`` adds Woo's upper ``before`` bound — what makes a
-    windowed backfill actually extract ONE window instead of
-    everything after the cursor."""
-    params: dict = {"after": since_iso, "orderby": "date", "order": "asc"}
-    if status:
-        params["status"] = status
-    if before_iso:
-        params["before"] = before_iso
-    return fetch_paged(spark, transport, "orders", params)
 
 
 def parse_orders(raw: DataFrame) -> DataFrame:
@@ -551,12 +547,13 @@ def fetch_products_by_ids(
             "status": "any",
             "context": "edit",
         }
-        return [json.dumps(r) for r in _drain(transport, "products", params)]
+        recs = _drain(transport, "products", params)
+        return [json.dumps(r) for r in recs]
 
     def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = sorted({int(i) for i in pdf["product_id"].dropna()})
-            chunks = [ids[i : i + 100] for i in range(0, len(ids), 100)]
+            chunks = [ids[i : i + _PER_PAGE] for i in range(0, len(ids), _PER_PAGE)]
             raws = [
                 r for recs in _in_flight(include, chunks, _CALLS_PER_CORE) for r in recs
             ]

@@ -2,7 +2,7 @@
 ``ThreadingHTTPServer`` plays a minimal WooCommerce REST facade
 (query-string auth check, paged /orders with ``X-WP-TotalPages``,
 a throttling endpoint with ``Retry-After``, an erroring path), and
-``WooHttpTransport`` + ``fetch_paged`` drive it over real sockets —
+``WooHttpTransport`` + ``fetch_orders_since`` drive it over real sockets —
 the integration gap the injected-fake unit tests can't cover
 (connection pooling, URL encoding, header casing, chunked reads).
 
@@ -45,7 +45,8 @@ class _WooFacade(BaseHTTPRequestHandler):
             self._reply(401, {"message": "unauthorized"})
             return
         if u.path.endswith("/orders"):
-            per_page = int(q.get("per_page", 10))
+            # a host that caps per_page (WAF/plugin) at PER_PAGE
+            per_page = min(int(q.get("per_page", PER_PAGE)), PER_PAGE)
             page = int(q.get("page", 1))
             total_pages = -(-N_ORDERS // per_page)
             lo = (page - 1) * per_page
@@ -158,11 +159,9 @@ def test_fetch_paged_end_to_end_over_real_sockets(spark, facade):
     """The full distributed extract against a live server: page 1 on
     the driver, pages 2..N through mapInPandas executors, each
     opening its own real connection (the pickling contract)."""
-    from py_etl_pipeline_woocommerce_spark.sources.rest import fetch_paged
+    from py_etl_pipeline_woocommerce_spark.sources.rest import fetch_orders_since
 
-    df = fetch_paged(
-        spark, _transport(facade), "orders", {}, per_page=PER_PAGE
-    )
+    df = fetch_orders_since(spark, _transport(facade), "2023-01-01T00:00:00")
     rows = df.collect()
     assert len(rows) == N_ORDERS
     ids = sorted(json.loads(r["raw"])["id"] for r in rows)

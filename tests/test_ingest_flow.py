@@ -6,8 +6,10 @@ the reference's incremental_flow semantics end-to-end.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import re
 import uuid
 
 import pytest
@@ -182,7 +184,7 @@ def test_fetch_paged_sizes_tasks_by_pages(spark):
     cores2 = 2 * spark.sparkContext.defaultParallelism
 
     def tasks(n_pages):
-        df = rest.fetch_paged(spark, _numbered(n_pages), "orders", {}, per_page=1)
+        df = rest.fetch_orders_since(spark, _numbered(n_pages), "2023-01-01T00:00:00")
         return df.rdd.getNumPartitions()
 
     assert tasks(1) == 1
@@ -261,52 +263,70 @@ def test_refund_error_in_pool_thread_fails_the_fetch(spark):
         raw.collect()
 
 
-def test_fetch_paged_unknown_total_walks_strides(spark, tmp_path):
+def test_fetch_paged_unknown_total_walks_strides(spark, tmp_path, monkeypatch):
     """A transport that cannot report X-WP-TotalPages (-1): a short
-    first page is the whole result, and otherwise each task walks its
-    stride of pages until its first empty one."""
+    first page is the whole result, and otherwise each stride walks
+    its pages until its first empty or short one. Every order's
+    refunds come from its own refunds endpoint."""
 
     def unknown_total(n_records):
         def transport(path, params):
+            if path != "orders":
+                assert path.startswith("orders/") and path.endswith("/refunds")
+                oid = int(path.split("/")[1])
+                return json.dumps([{"amount": f"{oid}.00"}]), -1
             per, page = int(params["per_page"]), int(params["page"])
             ids = range((page - 1) * per + 1, min(page * per, n_records) + 1)
             return json.dumps([{"id": i} for i in ids]), -1
 
         return transport
 
-    # a short first page: one partition, and only the probe is fetched
-    log_path = str(tmp_path / "short.log")
-    t = _logged(unknown_total(1), log_path)
-    df = rest.fetch_paged(spark, t, "orders", {}, per_page=2)
-    assert df.rdd.getNumPartitions() == 1
-    assert [json.loads(r["raw"])["id"] for r in df.collect()] == [1]
-    assert _pages_fetched(log_path) == [1]
+    def fetch(n_records, name):
+        log_path = str(tmp_path / name)
+        t = _logged(unknown_total(n_records), log_path)
+        df = rest.fetch_orders_since(spark, t, "2023-01-01T00:00:00")
+        rows = df.collect()
+        for r in rows:
+            oid = json.loads(r["raw"])["id"]
+            assert json.loads(r["refunds"]) == [{"amount": f"{oid}.00"}]
+        ids = sorted(json.loads(r["raw"])["id"] for r in rows)
+        return df.rdd.getNumPartitions(), ids, _pages_fetched(log_path)
 
-    # five full pages, then an empty one: every row exactly once,
-    # page 1 fetched once, one empty probe per stride at most
-    log_path = str(tmp_path / "five.log")
-    t = _logged(unknown_total(10), log_path)
-    df = rest.fetch_paged(spark, t, "orders", {}, per_page=2)
-    n = df.rdd.getNumPartitions()
-    rows = df.collect()
-    assert sorted(json.loads(r["raw"])["id"] for r in rows) == list(range(1, 11))
-    fetched = _pages_fetched(log_path)
+    calls = 2 * spark.sparkContext.defaultParallelism
+
+    # a short first page: one partition, and only the probe is fetched
+    assert fetch(1, "short.log") == (1, [1], [1])
+
+    # five full pages of 100, then an empty one: every row exactly
+    # once, page 1 fetched once, one empty page per stride at most
+    _, ids, fetched = fetch(500, "five.log")
+    assert ids == list(range(1, 501))
     assert set(fetched) >= {1, 2, 3, 4, 5}
     assert fetched.count(1) == 1
-    assert len(fetched) <= 5 + n
+    assert len(fetched) <= 5 + calls
+
+    # a short page 5: its stride stops there, without the empty page
+    # after it
+    _, ids, fetched = fetch(450, "short5.log")
+    assert ids == list(range(1, 451))
+    assert set(fetched) >= {1, 2, 3, 4, 5}
+    assert 5 + calls not in fetched
 
     # a probe ceiling under C^2: the strides share a task's pool, and
     # each still stops at its first empty page
-    log_path = str(tmp_path / "pooled.log")
-    t = _logged(unknown_total(10), log_path)
-    df = rest.fetch_paged(spark, t, "orders", {}, per_page=2, max_unknown_pages=20)
-    calls = min(20, 2 * spark.sparkContext.defaultParallelism)
-    assert df.rdd.getNumPartitions() == 20 // calls
-    rows = df.collect()
-    assert sorted(json.loads(r["raw"])["id"] for r in rows) == list(range(1, 11))
-    fetched = _pages_fetched(log_path)
+    monkeypatch.setattr(rest, "_MAX_UNKNOWN_PAGES", 20)
+    calls = min(20, calls)
+    n, ids, fetched = fetch(500, "pooled.log")
+    assert n == 20 // calls
+    assert ids == list(range(1, 501))
     assert fetched.count(1) == 1
     assert len(fetched) <= 5 + calls
+
+    # data past the ceiling is not fetched
+    monkeypatch.setattr(rest, "_MAX_UNKNOWN_PAGES", 3)
+    _, ids, fetched = fetch(500, "ceiling.log")
+    assert ids == list(range(1, 301))
+    assert fetched == [1, 2, 3]
 
 
 def test_orders_and_items_frames(spark, transport):
@@ -757,15 +777,35 @@ def test_fetch_paged_raises_on_empty_page_with_known_total(spark):
     upstream inconsistency — the extract must fail loudly instead of
     silently dropping every later page in the partition."""
 
-    def transport(path, params):
+    def gap(page2_total):
+        def transport(path, params):
+            if path != "orders":
+                return "[]", 1  # no refunds
+            page = int(params.get("page", 1))
+            if page == 2:
+                # transiently empty mid-range page, counted by its own
+                # response as 3 pages, or as a lagging replica's 0 or
+                # 1, or as unknown (a missing header)
+                return "[]", page2_total
+            return json.dumps([{"id": page}]), 3
+
+        return transport
+
+    for page2_total in (3, 1, 0, -1):
+        with pytest.raises(Exception, match="refusing to silently drop"):
+            rest.fetch_orders_since(
+                spark, gap(page2_total), "2023-01-01T00:00:00"
+            ).collect()
+
+    # a refunds walk keeps the same rule: page 2 of 2 came back empty
+    def refunds_gap(path, params):
+        if path == "orders":
+            return json.dumps([{"id": 1}]), 1
         page = int(params.get("page", 1))
-        total = 3
-        if page == 2:
-            return "[]", total  # transiently empty mid-range page
-        return json.dumps([{"id": page}]), total
+        return (json.dumps([{"amount": "1.00"}]) if page == 1 else "[]"), 2
 
     with pytest.raises(Exception, match="refusing to silently drop"):
-        rest.fetch_paged(spark, transport, "orders", {}, per_page=1).collect()
+        rest.fetch_orders_since(spark, refunds_gap, "2023-01-01T00:00:00").collect()
 
 
 def test_refund_fetch_swallows_only_404(spark):
@@ -957,7 +997,7 @@ def test_fetch_paged_refuses_empty_first_page_inconsistency(spark):
         return "[]", 5
 
     with pytest.raises(RuntimeError, match="page 1"):
-        rest.fetch_paged(spark, t, "orders", {})
+        rest.fetch_orders_since(spark, t, "2023-01-01T00:00:00")
 
 
 def test_fetch_refunds_pages_exhaustively(spark):
@@ -980,10 +1020,10 @@ def test_fetch_refunds_pages_exhaustively(spark):
     assert order["refund_total"] == pytest.approx(150.0)
 
 
-def test_drain_stops_at_known_total_else_at_short_page():
-    """The one serial page walk (refunds, products include=): a known
-    total ends the walk at that page even when pages look full; an
-    unknown total (-1) walks until the first short page."""
+def test_drain_stops_at_known_total_else_at_short_page(caplog, monkeypatch):
+    """The one page walk: a known total ends the walk at that page
+    even when pages look full; an unknown total (-1) walks until the
+    first short page, and a full page at the ceiling is logged."""
     recs = list(range(250))
 
     def pages(total):
@@ -1002,6 +1042,59 @@ def test_drain_stops_at_known_total_else_at_short_page():
     t, calls = pages(-1)
     assert rest._drain(t, "x", {}) == recs
     assert calls == [1, 2, 3]
+    assert "ceiling" not in caplog.text
+
+    # the walk keeps the first total it saw: a later page's smaller
+    # count neither ends the walk early nor excuses an empty page
+    def shrinking(path, params):
+        page = params["page"]
+        return json.dumps(recs[(page - 1) * 100 : page * 100]), 3 if page == 1 else 1
+
+    assert rest._drain(shrinking, "x", {}) == recs
+
+    def empty_unknown(path, params):
+        return ("[]", -1) if params["page"] == 2 else (json.dumps(recs[:100]), 3)
+
+    with pytest.raises(RuntimeError, match="page 2 of x .* reported 3 pages"):
+        rest._drain(empty_unknown, "x", {})
+
+    monkeypatch.setattr(rest, "_MAX_UNKNOWN_PAGES", 2)
+    t, calls = pages(-1)
+    assert rest._drain(t, "x", {}) == recs[:200]
+    assert calls == [1, 2]
+    assert "2-page ceiling" in caplog.text
+
+
+#: a ``per_page`` query key built in code: a quoted key or a keyword
+_PER_PAGE_KEY = re.compile(r"[\"']per_page[\"']|\bper_page=")
+
+
+def test_only_the_walk_builds_a_page_request():
+    """Every page request goes through ``rest._walk``: no other package
+    code builds a ``per_page`` query key (a second page loop would
+    bring its own stop and refusal rule)."""
+    src = os.path.abspath(rest.__file__)
+    pkg = os.path.dirname(os.path.dirname(src))
+    with open(src, encoding="utf-8") as fh:
+        (walk,) = [
+            n
+            for n in ast.parse(fh.read()).body
+            if isinstance(n, ast.FunctionDef) and n.name == "_walk"
+        ]
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    in_walk = path == src and (
+                        walk.lineno <= i <= walk.end_lineno
+                    )
+                    if _PER_PAGE_KEY.search(line) and not in_walk:
+                        hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
+    assert not hits, "build page requests in rest._walk:\n" + "\n".join(hits)
 
 
 def test_watermark_overlap_rule_selected_per_run(spark, transport, tmp_path):
